@@ -3,7 +3,9 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+value-hash). ``python tools/check_oracle.py`` runs the same check locally,
+and ``python3 perfbench/run.py --workload all`` times a slice of the
+registry end to end.
 
 All real content lives in ``sparkfusion.suite`` — each suite module registers
 (query, oracle) pairs for the operators it implements (SURVEY.md §2).

@@ -1,230 +1,15 @@
-"""Bench harness — runs the headline suite queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}.
+"""Host-load probes for ``perfbench/run.py``, read from ``/proc``.
 
-Per BASELINE.md: the three reference criterion micro-benches map to
-bench_cols_to_json / bench_cols_to_struct / bench_add_column and the 1BRC
-macro example maps to bench_1brc (a2_1brc_events). Each query is forced to
-full execution with a noop-style action (count over the materialized result)
-— no driver-side pandas conversion in the timing.
+``perfbench/run.py`` loads this file by path and uses four helpers: the
+1-minute load average, machine-wide CPU jiffies, the CPU jiffies of this
+process tree, and the rule that flags a run as contended when foreign
+processes took more than 5% of the machine. Off Linux the probes return
+sentinel values (-1.0 or 0) and the rule falls back to the load average.
 """
 
 from __future__ import annotations
 
-import json
 import os
-
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-#: headline queries (suite name -> bench name); extended as operators land
-HEADLINE = {
-    "q1_pricing_summary": "q1_pricing_summary",
-    "q3_shipping_priority": "q3_shipping_priority",
-    "q5_local_supplier_volume": "q5_local_supplier",
-    "q6_revenue_forecast": "q6_revenue_forecast",
-    "q10_returned_items": "q10_returned_items",
-    "q14_promo_effect": "q14_promo_effect",
-    "q17_small_qty_revenue": "q17_small_qty_revenue",
-    "q18_large_volume_customer": "q18_large_volume_customer",
-    "q9_product_profit": "q9_product_profit",
-    "q13_order_distribution": "q13_order_distribution",
-    "j2_inner_join_sql": "j2_join_agg",
-    "j3_multi_join_fold": "j3_multi_join_fold",
-    "w1_window_agg_sql": "w1_window_agg",
-    "a2_1brc_events": "bench_1brc",
-    "o6_topk": "o6_topk",
-    "u1_union_all": "u1_union_all",
-    "p14_cols_to_json": "bench_cols_to_json",
-    "p15_p16_struct_roundtrip": "bench_cols_to_struct",
-    "p13_add_pk": "bench_add_column",
-    "dedup_exact": "dedup_exact",
-    "dedup_minhash_pairs": "dedup_minhash",
-    "dedup_minhash_capped": "dedup_minhash_capped",
-    "dedup_minhash_clusters": "dedup_minhash_clusters",
-    "dedup_simhash_pairs": "dedup_simhash",
-    "decontam_ngram_overlap": "decontam_ngram",
-    "text_repetition": "text_repetition",
-    "pipeline_corpus_clean": "pipeline_corpus_clean",
-    "sim_cosine_topk": "sim_cosine_topk",
-    "sim_cosine_topk_np": "sim_cosine_topk_np",
-    "text_quality_score": "text_quality",
-    "batch_sessionize": "batch_sessionize",
-    "stream_tumbling_window": "stream_tumbling",
-    "j9_asof_join": "j9_asof_join",
-    "j10_range_join": "j10_range_join",
-    "q11_important_parts": "q11_important_parts",
-    "m1_merge_upsert": "m1_merge_upsert",
-    "fn1_funnel": "fn1_funnel",
-    "chunk_sliding_docs": "chunk_sliding_docs",
-    "ts1_resample_gapfill": "ts1_resample_gapfill",
-    "tfidf_top_terms": "tfidf_top_terms",
-    "er1_fuzzy_name_join": "er1_fuzzy_name_join",
-    "mv1_incremental_refresh": "mv1_incremental_refresh",
-    "dq2_constraints_lineitem": "dq2_constraints",
-    "g1_pagerank": "g1_pagerank",
-    "j11_interval_overlap": "j11_interval_overlap",
-    "cdc2_snapshot_diff": "cdc2_snapshot_diff",
-    "bf1_bloom_semi_join": "bf1_bloom_semi_join",
-    "bm25_search": "bm25_search",
-    "sim_pq_topk": "sim_pq_topk",
-    "w7_running_distinct": "w7_running_distinct",
-    "neg_pair_sample": "neg_pair_sample",
-    "bpe1_pair_counts": "bpe1_pair_counts",
-    "fe2_user_trend": "fe2_user_trend",
-    "mm_ppm_decode": "mm_ppm_decode",
-    "rc1_recursive_subtree": "rc1_recursive_subtree",
-    "abc1_pareto_parts": "abc1_pareto_parts",
-    "x6_grouped_map_normalize": "x6_grouped_map_normalize",
-    "mm_png_decode": "mm_png_decode",
-    "x5_udtf_lateral_words": "x5_udtf_lateral_words",
-    "x8_arrow_user_gaps": "x8_arrow_user_gaps",
-    "b1_bucketed_join": "b1_bucketed_join",
-    "lm1_unigram_freq_score": "lm1_unigram_freq_score",
-    "mix1_corpus_rebalance": "mix1_corpus_rebalance",
-    "nov1_shingle_novelty": "nov1_shingle_novelty",
-    "pipeline2_training_shards": "pipeline2_training_shards",
-    "g2_triangle_count": "g2_triangle_count",
-    "fi1_item_affinity": "fi1_item_affinity",
-    "qf1_quality_threshold_sweep": "qf1_quality_threshold_sweep",
-    "mm_jpeg_decode": "mm_jpeg_decode",
-    "mm_wav_decode": "mm_wav_decode",
-    "mm_mjpeg_frames": "mm_mjpeg_frames",
-    "sk1_kmv_distinct": "sk1_kmv_distinct",
-    "s24_s3_native_roundtrip": "s24_s3_native_roundtrip",
-    "bpe2_train_merges": "bpe2_train_merges",
-    "a29_unpivot": "a29_unpivot",
-    "fn4_attribution": "fn4_attribution",
-    "mm_image_resize": "mm_image_resize",
-    "dq7_table_fingerprint": "dq7_table_fingerprint",
-    "stream_stateful_counts_tws": "stream_stateful_counts_tws",
-    "emb_gram_matrix": "emb_gram_matrix",
-    "ab1_welch_ttest": "ab1_welch_ttest",
-    "stream_recent_events_tws": "stream_recent_events_tws",
-    "fn5_time_to_convert": "fn5_time_to_convert",
-    "dq8_benford": "dq8_benford",
-    "st1_chi2_independence": "st1_chi2_independence",
-    "cms1_heavy_hitters": "cms1_heavy_hitters",
-    "g4_weighted_sssp": "g4_weighted_sssp",
-    "km1_kmeans_quantized": "km1_kmeans_quantized",
-    "stream_session_timeout_tws": "stream_session_timeout_tws",
-    "sk2_kmv_set_ops": "sk2_kmv_set_ops",
-    "fn6_markov_stationary": "fn6_markov_stationary",
-    "rake1_keywords": "rake1_keywords",
-    "text_char_entropy": "text_char_entropy",
-    "semdedup1_cluster_prune": "semdedup1_cluster_prune",
-    "dsir1_importance_select": "dsir1_importance_select",
-    "bpe3_encode_counts": "bpe3_encode_counts",
-    "tok2_vocab_sweep": "tok2_vocab_sweep",
-    "pack2_length_buckets": "pack2_length_buckets",
-    "boot1_bootstrap_ci": "boot1_bootstrap_ci",
-    "mix2_temperature_sample": "mix2_temperature_sample",
-    "stream_cdc_keep_latest": "stream_cdc_keep_latest",
-    "ts7_acf": "ts7_acf",
-    "a30_percentile_disc": "a30_percentile_disc",
-    "dq10_join_skew": "dq10_join_skew",
-    "st3_mann_whitney": "st3_mann_whitney",
-    "st4_ks_test": "st4_ks_test",
-    "a31_bitmap_distinct_rollup": "a31_bitmap_distinct_rollup",
-    "fs1_point_in_time_features": "fs1_point_in_time_features",
-    "x9_udtf_analyze_schema": "x9_udtf_analyze_schema",
-    "mm_header_probe": "mm_header_probe",
-    "dedup_source_matrix": "dedup_source_matrix",
-    "pipeline3_media_triage": "pipeline3_media_triage",
-    "er2_tfidf_cosine_linkage": "er2_tfidf_cosine_linkage",
-    "s27_s3_stream_sink_roundtrip": "s27_s3_stream_sink_roundtrip",
-    "m3_time_travel_read": "m3_time_travel_read",
-    "sim_ivfpq_topk": "sim_ivfpq_topk",
-    "pmi1_collocations": "pmi1_collocations",
-    "z2_hilbert_key": "z2_hilbert_key",
-    "st5_anova": "st5_anova",
-    "ret1_rrf_fusion": "ret1_rrf_fusion",
-    "ts8_seasonal_decompose": "ts8_seasonal_decompose",
-    "g5_kcore": "g5_kcore",
-    "sky1_skyline": "sky1_skyline",
-    "fe3_target_encode_loo": "fe3_target_encode_loo",
-    "stream_ivfpq_ingest": "stream_ivfpq_ingest",
-    "mm_scene_cut": "mm_scene_cut",
-    "ts9_rolling_median": "ts9_rolling_median",
-    "st6_mutual_information": "st6_mutual_information",
-    "m4_compact_small_files": "m4_compact_small_files",
-    "s29_corrupt_record_quarantine": "s29_corrupt_record_quarantine",
-    "g6_personalized_pagerank": "g6_personalized_pagerank",
-    "sim_ivfpq_store_probe": "sim_ivfpq_store_probe",
-    "sim_ivfpq_batch_probe": "sim_ivfpq_batch_probe",
-    "x10_observed_metrics": "x10_observed_metrics",
-    "x11_mapinarrow_stats": "x11_mapinarrow_stats",
-    "a32_global_rank": "a32_global_rank",
-    "j10_range_join_agg": "j10_range_join_agg",
-    "j11_overlap_agg": "j11_overlap_agg",
-    "semdedup2_auto_k": "semdedup2_auto_k",
-    "dedup_cosine_auto_bits": "dedup_cosine_auto_bits",
-    "dedup_cosine_banded": "dedup_cosine_banded",
-    "neg_pair_auto_buckets": "neg_pair_auto_buckets",
-}
-
-REPEATS = 3
-
-#: Structured Streaming queries: their wall time is dominated by per-query
-#: FIXED cost (stream startup, one RocksDB/HDFS state-store instance per
-#: shuffle partition per stateful operator, memory-sink setup) that does not
-#: scale with data — 7 of the bench's top-10 costs, drowning real movement
-#: (a 20% state-logic regression reads as ~3%). Each gets a TRIGGER-ZERO
-#: startup measurement: the same query against 0-row parquet twins of the
-#: star tables (same schemas, incl. events.ts's physical type), so exactly
-#: one empty micro-batch pays the fixed cost and no data work happens. The
-#: artifact reports wall AND net-of-startup; BASELINE.md records the
-#: judging rule (regressions are judged on NET for these queries).
-STREAM_QUERIES = {
-    "stream_tumbling",
-    "stream_stateful_counts_tws",
-    "stream_recent_events_tws",
-    "stream_session_timeout_tws",
-    "stream_cdc_keep_latest",
-    "stream_ivfpq_ingest",
-    "s27_s3_stream_sink_roundtrip",
-}
-
-
-def _empty_sf_dir(sf_dir: str, rows: int = 16) -> str:
-    """Temp dir of ``rows``-row HEAD slices of ``sf_dir``'s tables with the
-    SAME arrow schemas (physical types preserved — the events.ts vintage
-    rule), for trigger-zero streaming startup runs. Not literally 0 rows:
-    two streams need seed rows to build at all (the IVF-PQ ingest trains
-    its codebook from ids [0,16); the S3 stream round-trip reads back its
-    own sink and needs ≥1 object) — 16 rows is still pure fixed cost
-    against sf0.1's 200k events."""
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    from sparkfusion.session import STAR_TABLES
-
-    d = tempfile.mkdtemp(prefix="sparkfusion_empty_sf_")
-    for t in STAR_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(path):
-            part = next(
-                f for f in sorted(os.listdir(path)) if f.endswith(".parquet")
-            )
-            path = os.path.join(path, part)
-        pf = pq.ParquetFile(path)
-        head = next(pf.iter_batches(batch_size=rows))
-        import pyarrow as pa
-
-        pq.write_table(pa.Table.from_batches([head]), os.path.join(d, f"{t}.parquet"))
-    return d
-
-
-#: queries exercising the in-process moto S3 endpoint — its object store
-#: grows monotonically across reps (uuid-prefixed writes into one bucket),
-#: so LIST-backed reads drift upward within a run (s27 r8→r9 post-mortem).
-#: Reset the store OUTSIDE the timed window so every rep sees identical state.
-S3_STATE_QUERIES = {"s24_s3_native_roundtrip", "s27_s3_stream_sink_roundtrip"}
 
 
 def _loadavg() -> float:
@@ -292,35 +77,6 @@ def _own_cpu() -> int:
     return own
 
 
-def _extra_benches():
-    """Bench-only variants (not suite queries — no oracle by construction).
-
-    dedup_minhash_xx: the xxhash64 production hash path for minhash — same
-    plan shape as dedup_minhash (md5, oracle path); the delta between the two
-    is the md5-vs-xxhash cost. Statistical equivalence is asserted in
-    tests/test_llm.py.
-    """
-    from sparkfusion.llm.dedup import minhash_dedup_pairs
-    from sparkfusion.session import table
-
-    def dedup_minhash_xx(spark, sf_dir):
-        docs = table(spark, sf_dir, "documents")
-        return minhash_dedup_pairs(docs, "doc_id", "text", hash_fn="xxhash64")
-
-    return {"dedup_minhash_xx": dedup_minhash_xx}
-
-
-def _run_once(fn, spark, sf_dir: str, pre=None) -> float:
-    if pre is not None:
-        pre()  # fixture isolation, excluded from the timed window
-    t0 = time.time()
-    df = fn(spark, sf_dir)
-    # force full execution of every operator in the plan without collecting
-    # result rows to the python driver
-    df.write.format("noop").mode("overwrite").save()
-    return time.time() - t0
-
-
 def _is_contended(foreign_frac: float, load_start: float) -> bool:
     """Flag the artifact on FOREIGN cpu alone: loadavg cannot distinguish our
     own 32-thread JVM (or one that just exited — 1-min decay) from a real
@@ -328,171 +84,3 @@ def _is_contended(foreign_frac: float, load_start: float) -> bool:
     foreign_cpu_frac 0.0. loadavg is only the fallback when /proc/stat
     sampling failed (foreign_frac < 0)."""
     return foreign_frac > 0.05 or (foreign_frac < 0 and load_start > 2.0)
-
-
-def main() -> None:
-    from sparkfusion.session import get_session
-    from sparkfusion.suite import queries
-
-    load_start = _loadavg()
-    if load_start > 2.0:
-        print(
-            f"bench WARNING: loadavg {load_start} > 2 at start — another process "
-            "is using this box; timings will NOT be comparable to BASELINE.md. "
-            "Re-run solo for a valid artifact.",
-            file=sys.stderr,
-        )
-
-    spark = get_session("sparkfusion-bench")
-    qs = queries()
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-
-    to_run = {name: qs[s] for s, name in HEADLINE.items() if s in qs}
-    to_run.update(_extra_benches())
-
-    cpu_total0, cpu_busy0 = _cpu_sample()
-    own0 = _own_cpu()
-    load_max = load_start
-
-    results: dict[str, float] = {}
-    stream_startup: dict[str, float] = {}
-    empty_dir = None
-    # Per-query foreign-CPU accounting (r8 verdict: a 4% run-level average
-    # hid bursts that inflated individual queries 2-4x while the run-level
-    # contended flag stayed false). Sampled around each query's timed
-    # min-of-3 window (warm-up excluded); a query whose window saw >5%
-    # foreign CPU carries its own flag in the artifact.
-    q_foreign: dict[str, float] = {}
-    for bench_name, fn in to_run.items():
-        pre = None
-        if bench_name in S3_STATE_QUERIES:
-            from sparkfusion.sources.s3local import reset_local_s3
-
-            pre = reset_local_s3
-        try:
-            _run_once(fn, spark, SF_DIR, pre=pre)  # warm-up (scan caching, codegen)
-            qt0, qb0 = _cpu_sample()
-            qown0 = _own_cpu()
-            times = [_run_once(fn, spark, SF_DIR, pre=pre) for _ in range(REPEATS)]
-            qt1, qb1 = _cpu_sample()
-            qown1 = _own_cpu()
-            qspan = qt1 - qt0
-            # own-CPU delta can go NEGATIVE when a descendant (Spark python
-            # worker) exits between samples — its jiffies leave the walked
-            # tree. Unclamped that inflates "foreign" past the whole busy
-            # window (r11 artifact: tok2 read 8.07 as a *fraction*). Clamp
-            # to the busy delta: still conservative (can only false-flag).
-            qforeign = min(max(0, qb1 - qb0), max(0, (qb1 - qb0) - (qown1 - qown0)))
-            q_foreign[bench_name] = (
-                round(qforeign / qspan, 4) if qspan > 0 else -1.0
-            )
-            # min, not median: robust against external CPU contention on a
-            # shared box; reports the reproducible best case
-            results[bench_name] = round(min(times), 4)
-            if bench_name in STREAM_QUERIES:
-                # trigger-zero startup: same query, 0-row inputs — fixed
-                # cost only. Measured min-of-REPEATS right after the timed
-                # window so both see the same box state.
-                try:
-                    if empty_dir is None:
-                        empty_dir = _empty_sf_dir(SF_DIR)
-                    _run_once(fn, spark, empty_dir, pre=pre)
-                    stimes = [
-                        _run_once(fn, spark, empty_dir, pre=pre)
-                        for _ in range(REPEATS)
-                    ]
-                    stream_startup[bench_name] = round(min(stimes), 4)
-                except Exception as ex:
-                    print(
-                        f"bench startup-probe error {bench_name}: {ex}",
-                        file=sys.stderr,
-                    )
-                    stream_startup[bench_name] = -1.0
-        except Exception as ex:  # a broken query must not sink the whole bench
-            print(f"bench error {bench_name}: {ex}", file=sys.stderr)
-            results[bench_name] = -1.0
-        load_max = max(load_max, _loadavg())
-    total = round(sum(t for t in results.values() if t > 0), 4)
-    load_end = _loadavg()
-    if empty_dir is not None:
-        import shutil
-
-        shutil.rmtree(empty_dir, ignore_errors=True)
-
-    cpu_total1, cpu_busy1 = _cpu_sample()
-    own1 = _own_cpu()
-    # share of the WHOLE BOX's cpu-time foreign processes consumed during the
-    # run; 0.05 ≈ 1.6 cores continuously on 32 — enough to perturb timings
-    cpu_span = cpu_total1 - cpu_total0
-    foreign = max(0, (cpu_busy1 - cpu_busy0) - (own1 - own0))
-    foreign_frac = round(foreign / cpu_span, 4) if cpu_span > 0 else -1.0
-    contended = _is_contended(foreign_frac, load_start)
-    if contended:
-        print(
-            f"bench WARNING: run contended (loadavg start={load_start} "
-            f"max={load_max} end={load_end}, foreign_cpu_frac={foreign_frac}); "
-            "artifact flagged.",
-            file=sys.stderr,
-        )
-    contended_queries = sorted(
-        name for name, f in q_foreign.items() if f > 0.05
-    )
-    # net-of-startup for streaming queries: wall minus the trigger-zero
-    # fixed cost — the column that actually moves with state-logic changes
-    net_of_startup = {
-        name: round(max(0.0, results[name] - s), 4)
-        for name, s in stream_startup.items()
-        if s >= 0 and results.get(name, -1) > 0
-    }
-    artifact = {
-        "metric": "suite_total_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": results,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "loadavg_start": load_start,
-        "loadavg_max": load_max,
-        "loadavg_end": load_end,
-        "foreign_cpu_frac": foreign_frac,
-        "contended": contended,
-        # per-query foreign-CPU share during that query's timed window —
-        # read THESE, not the run-level boolean, before calling any single
-        # query a regression (BASELINE.md "reading a bench artifact")
-        "query_foreign_cpu": q_foreign,
-        "contended_queries": contended_queries,
-        # streaming fixed-cost accounting (see STREAM_QUERIES doc):
-        # wall stays in "queries"; judge state-logic movement on the net
-        "stream_startup_sec": stream_startup,
-        "queries_net_of_startup": net_of_startup,
-    }
-    # Full artifact on disk: the driver's BENCH_r{N}.json keeps only the last
-    # 2000 chars of stdout (r6's head — metric/value/q1/q3/q5 — was cut off),
-    # so the complete record lives in a file committed with the round.
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_local.json"), "w") as f:
-        json.dump(artifact, f, indent=1)
-    # Printed line: compact separators + 3-decimal times keep ~70 queries
-    # under the 2000-char tail window, and queries-FIRST key order means any
-    # future overflow truncates early query entries, never the suite total.
-    print(
-        json.dumps(
-            {
-                "queries": {k: round(v, 3) for k, v in results.items()},
-                "metric": "suite_total_sec",
-                "value": total,
-                "unit": "sec",
-                "sf": artifact["sf"],
-                "foreign_cpu_frac": foreign_frac,
-                "contended": contended,
-                "contended_queries": contended_queries,
-                "stream_startup_sec": {
-                    k: round(v, 3) for k, v in stream_startup.items()
-                },
-            },
-            separators=(",", ":"),
-        )
-    )
-
-
-if __name__ == "__main__":
-    main()

@@ -180,9 +180,9 @@ def negative_pairs(
     # busiest partition) — the r14 salt experiment that splits it
     # replicated the candidate build side and measured net SLOWER
     # (sf0.1 0.80→1.36s), so plain widening stays.
-    from ..operators.partitioning import _target_parts
+    from ..operators.partitioning import target_parts
 
-    n_parts = max(_target_parts(anchors, 1)[1], _target_parts(cands, 1)[1])
+    n_parts = max(target_parts(anchors, 1)[1], target_parts(cands, 1)[1])
     anchors = anchors.repartition(n_parts, F.col("b"))
     cands = cands.repartition(n_parts, F.col("b"))
     w = Window.partitionBy("anchor_id").orderBy("pair_h", "neg_id")

@@ -37,6 +37,7 @@ at 10× the rows the same call fans out the full core width.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,6 +48,15 @@ from pyspark.sql import functions as F
 _FOOTER_SAMPLE = 16
 
 
+def _local_path(uri: str) -> str | None:
+    """Filesystem path of a ``file:`` URI (``file:/p`` or ``file:///p``,
+    percent-escapes decoded) or of a bare path; None for other schemes."""
+    parsed = urlparse(uri)
+    if parsed.scheme == "file":
+        return unquote(parsed.path)
+    return None if parsed.scheme else uri
+
+
 def _input_meta(df: DataFrame) -> tuple[int, int | None]:
     """(estimated scan splits, estimated rows | None) from the frame's input
     files — pure metadata, runs no Spark job. Splits follow the scan's own
@@ -54,8 +64,7 @@ def _input_meta(df: DataFrame) -> tuple[int, int | None]:
     come from parquet footers (sampled + extrapolated past
     ``_FOOTER_SAMPLE`` files). A frame with no input files (in-memory or
     checkpoint-rooted) reports (1, None): treated as narrow-input."""
-    files = [f[7:] if f.startswith("file://") else f for f in df.inputFiles()]
-    files = [f for f in files if os.path.exists(f)]
+    files = [f for f in map(_local_path, df.inputFiles()) if f and os.path.exists(f)]
     if not files:
         return 1, None
     conf = df.sparkSession.conf
@@ -91,7 +100,7 @@ def _input_meta(df: DataFrame) -> tuple[int, int | None]:
     return int(est_splits), rows
 
 
-def _target_parts(df: DataFrame, min_rows_per_part: int) -> tuple[int, int]:
+def target_parts(df: DataFrame, min_rows_per_part: int) -> tuple[int, int]:
     """(input width estimate, capped target) — shared by both helpers."""
     cores = df.sparkSession.sparkContext.defaultParallelism
     est_splits, rows = _input_meta(df)
@@ -109,7 +118,7 @@ def spread_for_compute(
     never values (callers are per-row maps or partitioning-invariant integer
     folds). ``min_rows_per_part`` caps the fan-out by the input's estimated
     rows (see module doc)."""
-    est_splits, target = _target_parts(df, min_rows_per_part)
+    est_splits, target = target_parts(df, min_rows_per_part)
     if est_splits >= target:
         return df
     if key_cols:
@@ -135,5 +144,5 @@ def repartition_for_compute(
     scan is already ≥ cores partitions and the count simply preserves that
     width, never a local constant. ``min_rows_per_part`` caps the count by
     estimated input rows (see module doc)."""
-    _, target = _target_parts(df, min_rows_per_part)
+    _, target = target_parts(df, min_rows_per_part)
     return df.repartition(target, *[F.col(c) for c in key_cols])

@@ -65,7 +65,9 @@ def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def run_stream_to_table(result: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drive a (finite) streaming DataFrame to completion through a memory
-    sink; returns the materialized result as a batch DataFrame.
+    sink; returns the materialized result as a batch DataFrame. The sink's
+    temp view is dropped before returning, so repeated calls leave the
+    session's catalog as they found it.
 
     State-partition bound: a streaming query captures
     ``spark.sql.shuffle.partitions`` at ``.start()`` as its FIXED state
@@ -105,7 +107,11 @@ def run_stream_to_table(result: DataFrame, output_mode: str = "complete") -> Dat
             spark.conf.unset(part_key)
         else:
             spark.conf.set(part_key, prev_parts)
-    return spark.table(name)
+    # the frame binds the sink's rows when it is analyzed, so the view can
+    # go: left in place, each call would pin one more result on the driver
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def tumbling_window_agg(events: DataFrame, width: str = "1 hour",

@@ -93,6 +93,7 @@ def table_rows(sf_dir: str, name: str) -> int:
 
 
 def queries() -> dict[str, QueryFn]:
+    """Name → query callable, in registration order."""
     _load_all()
     return {name: spec.fn for name, spec in REGISTRY.items()}
 
@@ -152,67 +153,6 @@ def _is_io_error(e: Exception) -> bool:
 _LOADED = False
 
 
-def _verification_age(root: str | None = None) -> dict[str, int]:
-    """Query name → newest round whose committed ``CORRECTNESS_r*.json`` shows
-    it verified (hash-green, or a rows-only check that actually ran). Names
-    absent from every artifact → never driver-verified.
-
-    The driver's correctness gate checks at most the FIRST 50 entries of
-    ``queries()`` per round, so ordering the registry stalest-first makes the
-    whole suite re-verify on a rolling window instead of freezing on whatever
-    tuple was hardcoded last round.
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    if root is None:
-        root = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-    greens: dict[str, int] = {}
-    errs: dict[str, int] = {}
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            verified = row.get("hash_match") is True or (
-                row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-            )
-            # a recorded MISMATCH (any comparison False) voids verification
-            # exactly like an error does — both mean "broken until re-checked"
-            mismatched = any(
-                row.get(k) is False
-                for k in ("rows_match", "schema_match", "hash_match")
-            )
-            if verified:
-                greens[name] = max(greens.get(name, 0), rnd)
-            elif row.get("err") or mismatched:
-                errs[name] = max(errs.get(name, 0), rnd)
-    # an error newer than the last green voids the verification; voided
-    # queries sort at age -1 — BEFORE even never-checked registrations —
-    # because a recorded regression on a previously-green operator is the
-    # highest-priority re-check (r4: j9/j10/stream_* must re-verify first)
-    ages = {
-        name: -1 if errs.get(name, -1) >= rnd else rnd for name, rnd in greens.items()
-    }
-    for name in errs:
-        ages.setdefault(name, -1)
-    return ages
-
-
 def _load_all() -> None:
     """Import all suite modules (each registers its queries on import)."""
     global _LOADED
@@ -237,17 +177,5 @@ def _load_all() -> None:
         udaf_suite,
         udfs,
     )
-
-    # Stalest-first rotation: voided queries lead (age -1 — a recorded
-    # error/mismatch newer than the last green is the highest-priority
-    # re-check), then never-verified registrations (age 0), then oldest
-    # green-round first; registration order breaks ties deterministically.
-    ages = _verification_age()
-    reg_index = {name: i for i, name in enumerate(REGISTRY)}
-    ordered_names = sorted(REGISTRY, key=lambda k: (ages.get(k, 0), reg_index[k]))
-    ordered = {k: REGISTRY[k] for k in ordered_names}
-    assert len(ordered) == len(REGISTRY)
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
 
     _LOADED = True

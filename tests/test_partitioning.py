@@ -88,6 +88,15 @@ def test_input_meta_reads_parquet_rows(spark, small_parquet):
     assert rows == 200
 
 
+def test_input_meta_decodes_file_uris(spark, tmp_path):
+    # Spark reports input files as percent-escaped URIs; a space or % in
+    # the directory name must not hide the footers (read as 1 split, no rows)
+    path = str(tmp_path / "a b%c")
+    spark.range(0, 1000).coalesce(1).write.parquet(path)
+    for ref in (path, "file:" + path, "file://" + path):
+        assert _input_meta(spark.read.parquet(ref))[1] == 1000, ref
+
+
 def test_checkpoint_rooted_frame_treated_as_narrow(spark, small_parquet):
     # no input files resolvable -> (1, None): widened, never .rdd-probed
     df = spark.read.parquet(small_parquet).localCheckpoint()

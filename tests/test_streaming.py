@@ -421,3 +421,19 @@ def test_stream_left_outer_null_extension_and_open_tail(spark):
     # view 4's closes at 230min > wm -> absent; views/purchases of user 9 at
     # the max match each other (p_ts = v_ts is inside [v_ts, v_ts+30min])
     assert got == {(1, 1, 2), (3, 2, None), (6, 9, 5)}
+
+
+def test_stream_query_leaves_no_temp_view(spark, sf_dir):
+    """Each call used to leave its memory-sink view behind, pinning its rows
+    on the driver: the session's view count grew by one per call."""
+    from sparkfusion.suite import queries
+
+    def temp_views() -> int:
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    q = queries()["stream_tumbling_window"]
+    before = temp_views()
+    first = sorted(q(spark, sf_dir).collect())
+    second = sorted(q(spark, sf_dir).collect())
+    assert temp_views() == before
+    assert first and first == second

@@ -236,9 +236,9 @@ def main() -> int:
     if json_out:
         import json
 
-        # Dual-stamp (README "Artifact numbering"): the local artifact
-        # counter historically runs two ahead of the driver round; embedding
-        # both makes the filename quirk harmless. Overridable per run via env.
+        # Dual-stamp: the local artifact counter historically ran two ahead
+        # of the driver round; embedding both makes the filename quirk
+        # harmless. Overridable per run via env.
         driver_round = int(os.environ.get("SPARK_GRAFT_DRIVER_ROUND", "10"))
         with open(json_out, "w") as f:
             json.dump(
