@@ -32,23 +32,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-#: metadata struct carried alongside every binary payload
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("format", StringType(), False),
-        StructField("n_bytes", LongType(), False),
-        StructField("source_id", LongType(), False),
-    ]
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("content", BinaryType(), True),
-        StructField("meta", MEDIA_META_SCHEMA, True),
-    ]
-)
-
 #: decode output: per-item image-like features
 DECODE_SCHEMA = StructType(
     [

@@ -21,6 +21,8 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scoped_conf
+
 __all__ = ["inline_rows"]
 
 
@@ -106,6 +108,10 @@ def inline_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
         f"CAST({name} AS {typ}) AS {name}" for name, typ in fields
     )
     alias = "t(" + ", ".join(name for name, _ in fields) + ")"
-    return spark.sql(
-        f"SELECT {cols} FROM VALUES {', '.join(rendered)} AS {alias}"
-    )
+    # _str_lit writes backslash escapes, which the legacy
+    # escapedStringLiterals mode would keep verbatim; spark.sql parses
+    # eagerly, so the literals are fixed before the conf is restored
+    with scoped_conf(spark, "spark.sql.parser.escapedStringLiterals", "false"):
+        return spark.sql(
+            f"SELECT {cols} FROM VALUES {', '.join(rendered)} AS {alias}"
+        )

@@ -36,9 +36,9 @@ proto at module load) and the executor workers; those inherit env from the
 captured UDF ``envVars``.  Use :func:`worker_env_overrides` to obtain the
 ``PYTHONPATH`` / version-check entries that must be merged into
 ``sc.environment`` BEFORE the TWS function is created (pyspark snapshots
-``sc.environment`` into the UDF at creation time).  See
-``streaming/windows.py stateful_user_counts_tws`` for the save/restore
-pattern that keeps the mutation scoped.
+``sc.environment`` into the UDF at creation time).
+``streaming/windows.py _transform_with_state`` is the one place that does
+this, and it restores the previous entries so the mutation stays scoped.
 """
 
 from __future__ import annotations

@@ -17,9 +17,11 @@ Design notes (100 TB posture):
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -79,6 +81,32 @@ def _ensure_read_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
 
 
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set the session conf ``key`` to ``value`` for the ``with`` body, then
+    put back what was there before: the old value, or no value at all if the
+    key was unset. The restore runs when the body raises too.
+
+    The one owner of temporary session-conf changes in the library: a query
+    that needs a conf for its own run goes through here, so it leaves the
+    session as it found it.
+
+    Concurrency caveat: the conf is SESSION-global for the body's lifetime,
+    so any query issued concurrently on the same session sees the scoped
+    value. The suite and the driver run queries strictly sequentially (one
+    query per call), which this relies on; a concurrent deployment should
+    run the scoped work on its own ``spark.newSession()`` clone instead."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def load_star(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = STAR_TABLES) -> None:
     """Register each star-schema parquet as a lazy temp view.
 
@@ -101,28 +129,39 @@ def table(spark: SparkSession, sf_dir: str, name: str):
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def ts_column(dtype: str) -> Column:
+    """``events.ts`` as a µs TIMESTAMP column, given the dtype it arrived as.
+
+    The driver has shipped ``events.parquet`` with ``ts`` as both parquet
+    TIMESTAMP(NANOS) (reads as epoch-ns BIGINT under ``nanosAsLong``) and
+    plain ``timestamp[us]`` (reads as TIMESTAMP_NTZ / TIMESTAMP), so callers
+    pass ``dict(df.dtypes)["ts"]`` and this picks the conversion. Policy
+    (SURVEY.md §7 risk 2): ns→µs is integer truncation; NTZ→TIMESTAMP is
+    value-preserving because the session tz is UTC."""
+    from pyspark.sql import functions as F
+
+    if dtype in ("bigint", "long"):
+        # integer div — float division can round ns/1000 across the µs boundary
+        return F.timestamp_micros(F.expr("ts div 1000"))
+    return F.col("ts").cast("timestamp")
+
+
 def events_with_ts(spark: SparkSession, sf_dir: str):
     """``events`` with ``ts`` normalized to a usable ``timestamp`` column (µs
-    precision, UTC session) plus an integer epoch-nanos ``ts_ns``.
+    precision, UTC session, via :func:`ts_column`) plus an integer
+    epoch-nanos ``ts_ns``.
 
-    Dtype-adaptive: the driver has shipped ``events.parquet`` with ``ts`` as
-    both parquet TIMESTAMP(NANOS) (reads as epoch-ns BIGINT under
-    ``nanosAsLong``) and plain ``timestamp[us]`` (reads as TIMESTAMP_NTZ /
-    TIMESTAMP). We branch on the arrived dtype so the helper works under any
-    session + any testdata vintage. Policy (SURVEY.md §7 risk 2): ns→µs is
-    integer truncation; exact nanos preserved in ``ts_ns``.
+    Dtype-adaptive, so the helper works under any session + any testdata
+    vintage: exact nanos are preserved in ``ts_ns`` when the footer carries
+    them, and derived from the µs timestamp otherwise.
     """
     from pyspark.sql import functions as F
 
     ev = table(spark, sf_dir, "events")
     dtype = dict(ev.dtypes)["ts"]
+    ts = ts_column(dtype)
     if dtype in ("bigint", "long"):
-        # epoch-ns long: integer div — float division can round ns/1000
-        # across the µs boundary
-        return ev.withColumn("ts_ns", F.col("ts")).withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    # already a timestamp (µs): normalize NTZ→TIMESTAMP (value-preserving,
-    # session tz is UTC) and derive ts_ns for integer-arithmetic consumers
-    ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    return ev.withColumn("ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000))
+        ts_ns = F.col("ts")  # exact nanos, before ts_column truncates them
+    else:
+        ts_ns = F.unix_micros(ts) * F.lit(1000)
+    return ev.withColumn("ts_ns", ts_ns).withColumn("ts", ts)

@@ -60,25 +60,6 @@ def local_s3_client():
     return s3_client({"endpoint_url": endpoint, **CREDS}), endpoint
 
 
-def reset_local_s3() -> None:
-    """Wipe ALL state on the in-process S3 server (moto's ``/moto-api/reset``
-    endpoint). No-op if the server was never started.
-
-    Bench isolation (r10 verdict #1): every s24/s27 run writes a fresh
-    uuid-prefixed object set into the same bucket, so within a bench run the
-    store grows monotonically and LIST-backed reads drift upward rep over
-    rep (s27 2.48→3.40s r8→r9 with zero code change). Resetting between
-    timed reps makes every rep start from identical state. Callers that
-    need the bucket afterwards re-create it via :func:`ensure_bucket` —
-    which every S3-path suite query already does."""
-    if _ENDPOINT is None:
-        return
-    import urllib.request
-
-    req = urllib.request.Request(f"{_ENDPOINT}/moto-api/reset", method="POST")
-    urllib.request.urlopen(req, timeout=10).read()
-
-
 def ensure_bucket(name: str):
     """Create-if-absent a bucket on the local endpoint; returns (client, endpoint)."""
     client, endpoint = local_s3_client()

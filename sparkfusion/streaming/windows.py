@@ -3,7 +3,8 @@
 ``events.ts`` has shipped as both parquet TIMESTAMP(NANOS) (reads as
 epoch-nanos long under ``nanosAsLong``) and plain ``timestamp[us]``;
 ``read_events_stream`` normalizes either to a µs TIMESTAMP before
-watermarking (SURVEY.md §7 risk 2).
+watermarking, through :func:`sparkfusion.session.ts_column` (SURVEY.md §7
+risk 2).
 """
 
 from __future__ import annotations
@@ -18,48 +19,36 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState
 
-def _ts_convert(dtype: str):
-    """ts → µs TIMESTAMP, whichever footer vintage arrived (see module doc)."""
-    if dtype in ("bigint", "long"):
-        # integer div — float division can round ns/1000 across the µs boundary
-        return F.timestamp_micros(F.expr("ts div 1000"))
-    return F.col("ts").cast("timestamp")
+from ..session import scoped_conf, table, ts_column
+
+#: the session conf that picks the state store, and the provider the
+#: transformWithState operators need (the ONLY one that API supports)
+STATE_STORE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (driver for local tests;
-    swap for Kafka in production — the downstream plans are identical)."""
-    from ..session import _ensure_read_confs, table
+    """File-source stream over the events parquet with ``ts`` as a µs
+    TIMESTAMP (driver for local tests; swap for Kafka in production — the
+    downstream plans are identical)."""
+    stream = read_table_stream(spark, sf_dir, "events")
+    return stream.withColumn("ts", ts_column(dict(stream.dtypes)["ts"]))
 
-    _ensure_read_confs(spark)
-    static = table(spark, sf_dir, "events")
-    path = os.path.join(sf_dir, "events.parquet")
+
+def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream over any star-schema parquet table, schema pinned
+    from the batch read so the stream cannot drift from the table
+    contract."""
+    static = table(spark, sf_dir, name)
+    path = os.path.join(sf_dir, f"{name}.parquet")
     reader = spark.readStream.schema(static.schema)
     if os.path.isdir(path):
         # directory-of-part-files layout (e.g. scaled .localdata): stream the
         # directory itself; a pathGlobFilter on sf_dir would silently match
         # zero part-files here
-        stream = reader.parquet(path)
-    else:
-        # single-file layout (driver testdata): the file-stream source wants a
-        # directory basePath, so stream sf_dir filtered to this one file
-        stream = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-    return stream.withColumn("ts", _ts_convert(dict(static.dtypes)["ts"]))
-
-
-def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """File-source stream over any star-schema parquet table (the generic
-    sibling of :func:`read_events_stream`, minus the ts-dtype branch): same
-    file-vs-directory layout handling, schema pinned from the batch read so
-    the stream cannot drift from the table contract."""
-    from ..session import _ensure_read_confs, table
-
-    _ensure_read_confs(spark)
-    static = table(spark, sf_dir, name)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    reader = spark.readStream.schema(static.schema)
-    if os.path.isdir(path):
         return reader.parquet(path)
+    # single-file layout (driver testdata): the file-stream source wants a
+    # directory basePath, so stream sf_dir filtered to this one file
     return reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
 
 
@@ -75,23 +64,15 @@ def run_stream_to_table(result: DataFrame, output_mode: str = "complete") -> Dat
     family) per partition per stateful operator. The driver's plain session
     leaves it at 200, so a tiny finite replay paid 200 RocksDB inits of
     pure fixed cost while only |cores| could ever run at once. Bounded to
-    the session's core count here (fixed cost scales with partitions,
-    parallelism caps at cores) and restored after; a production deployment
-    sizes this to key cardinality instead (it cannot be changed after the
-    first checkpoint).
-
-    Concurrency caveat: the bound mutates the SESSION-global conf for the
-    stream's lifetime, so any batch query issued concurrently on the same
-    session inherits the reduced shuffle-partition count. The suite and the
-    driver run queries strictly sequentially (one query per call), which
-    this relies on; a concurrent deployment should run the stream on its
-    own ``spark.newSession()`` clone instead."""
+    the session's core count for the stream's lifetime through
+    :func:`~sparkfusion.session.scoped_conf` (whose docstring carries the
+    concurrency caveat); a production deployment sizes this to key
+    cardinality instead (it cannot be changed after the first
+    checkpoint)."""
     spark = result.sparkSession
-    part_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(part_key, None)
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    try:
-        spark.conf.set(part_key, str(spark.sparkContext.defaultParallelism))
+    parts = str(spark.sparkContext.defaultParallelism)
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", parts):
         q = (
             result.writeStream.outputMode(output_mode)
             .format("memory")
@@ -102,11 +83,6 @@ def run_stream_to_table(result: DataFrame, output_mode: str = "complete") -> Dat
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        if prev_parts is None:
-            spark.conf.unset(part_key)
-        else:
-            spark.conf.set(part_key, prev_parts)
     # the frame binds the sink's rows when it is analyzed, so the view can
     # go: left in place, each call would pin one more result on the driver
     out = spark.table(name)
@@ -327,14 +303,13 @@ def window_argmax(events: DataFrame, width: str = "1 hour",
     )
 
 
-def stateful_user_counts_tws(events: DataFrame) -> DataFrame:
-    """Running per-user event counts via ``transformWithStateInPandas`` —
+def _transform_with_state(
+    events: DataFrame, processor, out_schema, output_mode: str, time_mode: str
+) -> DataFrame:
+    """``events.groupBy("user_id").transformWithStateInPandas(processor)`` —
     Spark 4's arbitrary-stateful API (the successor to
-    ``applyInPandasWithState`` used by :func:`stateful_user_counts`):
-    explicit typed state handles (ValueState here; List/Map/timers
-    available), RocksDB-backed, schema-evolvable. Emits each user's running
-    total once per micro-batch the user appears in (update mode) — a finite
-    single-batch replay therefore equals the batch GROUP BY.
+    ``applyInPandasWithState`` used by :func:`stateful_user_counts`) — plus
+    the protobuf plumbing all four typed-state operators need.
 
     The API's state protocol (``pyspark.sql.streaming.proto
     .StateMessage_pb2``) requires a working ``google.protobuf``; no pip
@@ -352,10 +327,17 @@ def stateful_user_counts_tws(events: DataFrame) -> DataFrame:
     :class:`~sparkfusion.errors.EnvironmentGateError` up front; the
     applyInPandasWithState form (`stream_stateful_counts`) runs without
     protobuf everywhere.
-    """
-    from ..protoruntime import ensure_protobuf_runtime, worker_env_overrides
 
-    ok, extra_path = ensure_protobuf_runtime()
+    transformWithState also requires the RocksDB state store: the CALLER
+    scopes ``STATE_STORE_PROVIDER`` to ``ROCKSDB`` around STARTING the
+    query. Setting it here would mutate the shared session as a side effect
+    of building a DataFrame (and break sibling queries restarting from
+    HDFS-backed checkpoints).
+    """
+    # looked up at call time, so a patched discovery takes effect
+    from .. import protoruntime
+
+    ok, extra_path = protoruntime.ensure_protobuf_runtime()
     if not ok:
         from ..errors import EnvironmentGateError
 
@@ -366,6 +348,34 @@ def stateful_user_counts_tws(events: DataFrame) -> DataFrame:
             "cluster; see stream_stateful_counts for the "
             "applyInPandasWithState equivalent that runs without it"
         )
+    sc_env = events.sparkSession.sparkContext.environment
+    overrides = protoruntime.worker_env_overrides(extra_path)
+    saved = {k: sc_env.get(k) for k in overrides}
+    for k, v in overrides.items():
+        prev = saved[k]
+        sc_env[k] = v if not prev or k != "PYTHONPATH" else prev + os.pathsep + v
+    try:
+        return events.groupBy("user_id").transformWithStateInPandas(
+            processor,
+            outputStructType=out_schema,
+            outputMode=output_mode,
+            timeMode=time_mode,
+        )
+    finally:
+        for k, old in saved.items():
+            if old is None:
+                sc_env.pop(k, None)
+            else:
+                sc_env[k] = old
+
+
+def stateful_user_counts_tws(events: DataFrame) -> DataFrame:
+    """Running per-user event counts via ``transformWithStateInPandas``
+    **ValueState** (see :func:`_transform_with_state` for the protobuf and
+    state-store requirements). Emits each user's running total once per
+    micro-batch the user appears in (update mode) — a finite single-batch
+    replay therefore equals the batch GROUP BY.
+    """
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -392,31 +402,7 @@ def stateful_user_counts_tws(events: DataFrame) -> DataFrame:
         def close(self) -> None:
             pass
 
-    # transformWithState requires the RocksDB state store provider; the
-    # CALLER must set spark.sql.streaming.stateStore.providerClass =
-    # ...state.RocksDBStateStoreProvider before STARTING the query — setting
-    # it here would mutate the shared session as a side effect of building a
-    # DataFrame (and break sibling queries restarting from HDFS-backed
-    # checkpoints), against the house no-session-conf-mutation discipline.
-    sc_env = events.sparkSession.sparkContext.environment
-    overrides = worker_env_overrides(extra_path)
-    saved = {k: sc_env.get(k) for k in overrides}
-    for k, v in overrides.items():
-        prev = sc_env.get(k)
-        sc_env[k] = v if not prev or k != "PYTHONPATH" else prev + os.pathsep + v
-    try:
-        return events.groupBy("user_id").transformWithStateInPandas(
-            RunningCounts(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    finally:
-        for k, old in saved.items():
-            if old is None:
-                sc_env.pop(k, None)
-            else:
-                sc_env[k] = old
+    return _transform_with_state(events, RunningCounts(), out_schema, "Update", "None")
 
 
 def recent_events_tws(events: DataFrame, k: int = 3) -> DataFrame:
@@ -431,18 +417,7 @@ def recent_events_tws(events: DataFrame, k: int = 3) -> DataFrame:
 
     Input must carry ``user_id``, ``ts_us`` (epoch-µs BIGINT — convert
     before calling so the state schema is engine-neutral), ``event_id``.
-    Same protobuf runtime plumbing as :func:`stateful_user_counts_tws`.
     """
-    from ..protoruntime import ensure_protobuf_runtime, worker_env_overrides
-
-    ok, extra_path = ensure_protobuf_runtime()
-    if not ok:
-        from ..errors import EnvironmentGateError
-
-        raise EnvironmentGateError(
-            "transformWithStateInPandas needs google.protobuf and no "
-            "runtime was discoverable (set SPARKFUSION_PROTOBUF_PATH)"
-        )
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
@@ -486,25 +461,7 @@ def recent_events_tws(events: DataFrame, k: int = 3) -> DataFrame:
         def close(self) -> None:
             pass
 
-    sc_env = events.sparkSession.sparkContext.environment
-    overrides = worker_env_overrides(extra_path)
-    saved = {kk: sc_env.get(kk) for kk in overrides}
-    for kk, v in overrides.items():
-        prev = sc_env.get(kk)
-        sc_env[kk] = v if not prev or kk != "PYTHONPATH" else prev + os.pathsep + v
-    try:
-        return events.groupBy("user_id").transformWithStateInPandas(
-            RecentK(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    finally:
-        for kk, old in saved.items():
-            if old is None:
-                sc_env.pop(kk, None)
-            else:
-                sc_env[kk] = old
+    return _transform_with_state(events, RecentK(), out_schema, "Update", "None")
 
 
 def user_type_counts_tws(events: DataFrame) -> DataFrame:
@@ -517,19 +474,8 @@ def user_type_counts_tws(events: DataFrame) -> DataFrame:
     single-batch replay emits exactly the batch
     ``GROUP BY user_id, event_type`` counts.
 
-    Input must carry ``user_id`` and ``event_type``. Same protobuf runtime
-    plumbing as :func:`stateful_user_counts_tws`.
+    Input must carry ``user_id`` and ``event_type``.
     """
-    from ..protoruntime import ensure_protobuf_runtime, worker_env_overrides
-
-    ok, extra_path = ensure_protobuf_runtime()
-    if not ok:
-        from ..errors import EnvironmentGateError
-
-        raise EnvironmentGateError(
-            "transformWithStateInPandas needs google.protobuf and no "
-            "runtime was discoverable (set SPARKFUSION_PROTOBUF_PATH)"
-        )
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -566,30 +512,10 @@ def user_type_counts_tws(events: DataFrame) -> DataFrame:
         def close(self) -> None:
             pass
 
-    sc_env = events.sparkSession.sparkContext.environment
-    overrides = worker_env_overrides(extra_path)
-    saved = {kk: sc_env.get(kk) for kk in overrides}
-    for kk, v in overrides.items():
-        prev = sc_env.get(kk)
-        sc_env[kk] = v if not prev or kk != "PYTHONPATH" else prev + os.pathsep + v
-    try:
-        return events.groupBy("user_id").transformWithStateInPandas(
-            TypeCounts(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    finally:
-        for kk, old in saved.items():
-            if old is None:
-                sc_env.pop(kk, None)
-            else:
-                sc_env[kk] = old
+    return _transform_with_state(events, TypeCounts(), out_schema, "Update", "None")
 
 
-def session_timeout_tws(
-    events: DataFrame, gap_minutes: int = 30, out_schema=None
-) -> DataFrame:
+def session_timeout_tws(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Session-timeout detection via transformWithStateInPandas **event-time
     TIMERS** — the fourth and last piece of the typed-state API surface
     (ValueState/ListState/MapState are covered by the sibling operators).
@@ -618,17 +544,6 @@ def session_timeout_tws(
     processor rather than skipping (r14: the tolerant branch turned a
     mis-wired ingest into a silent 0-row stream).
     """
-    from ..protoruntime import ensure_protobuf_runtime, worker_env_overrides
-
-    ok, extra_path = ensure_protobuf_runtime()
-    if not ok:
-        from ..errors import EnvironmentGateError
-
-        raise EnvironmentGateError(
-            "transformWithStateInPandas needs google.protobuf — see "
-            "stateful_user_counts for the applyInPandasWithState "
-            "equivalent that runs without it"
-        )
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -711,25 +626,9 @@ def session_timeout_tws(
         def close(self) -> None:
             pass
 
-    sc_env = events.sparkSession.sparkContext.environment
-    overrides = worker_env_overrides(extra_path)
-    saved = {k: sc_env.get(k) for k in overrides}
-    for k, v in overrides.items():
-        prev = sc_env.get(k)
-        sc_env[k] = v if not prev or k != "PYTHONPATH" else prev + os.pathsep + v
-    try:
-        return events.groupBy("user_id").transformWithStateInPandas(
-            SessionTimeout(),
-            outputStructType=out_schema,
-            outputMode="Append",
-            timeMode="EventTime",
-        )
-    finally:
-        for k, old in saved.items():
-            if old is None:
-                sc_env.pop(k, None)
-            else:
-                sc_env[k] = old
+    return _transform_with_state(
+        events, SessionTimeout(), out_schema, "Append", "EventTime"
+    )
 
 
 def stream_stream_left_outer_join(

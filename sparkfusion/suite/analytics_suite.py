@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..llm.chunking import assign_split, chunk_sliding
 from ..operators.analytics import cohort_retention, funnel, scd2_intervals
 from ..operators.merge import merge_upsert
-from ..session import events_with_ts, table
+from ..session import events_with_ts, scoped_conf, table
 from . import register
 from ..operators.partitioning import repartition_for_compute
 from .sources_suite import IO_DIR
@@ -1263,12 +1263,9 @@ def rc1_recursive_subtree(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recursion guard trips at sf1 (150k customers × ~18 levels ≈ 2.7M).
     # Raise it ONLY for the duration of this query's execution: the result is
     # materialized via localCheckpoint while the limit is up, and the prior
-    # value is restored in the finally — leaving the guard raised would strip
+    # value is restored on exit — leaving the guard raised would strip
     # the session's runaway-recursion protection for every later query.
-    limit_key = "spark.sql.cteRecursionRowLimit"
-    prior = spark.conf.get(limit_key, None)
-    spark.conf.set(limit_key, "100000000")
-    try:
+    with scoped_conf(spark, "spark.sql.cteRecursionRowLimit", "100000000"):
         return spark.sql(
             """
             WITH RECURSIVE anc(node, a) AS (
@@ -1282,11 +1279,6 @@ def rc1_recursive_subtree(spark: SparkSession, sf_dir: str) -> DataFrame:
             GROUP BY a
             """
         ).localCheckpoint(eager=True)
-    finally:
-        if prior is None:
-            spark.conf.unset(limit_key)
-        else:
-            spark.conf.set(limit_key, prior)
 
 
 @register(

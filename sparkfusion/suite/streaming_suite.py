@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scoped_conf
 from ..streaming import (
     read_events_stream,
     run_stream_to_table,
@@ -26,6 +27,7 @@ from ..streaming import (
     stream_stream_interval_join,
     tumbling_window_agg,
 )
+from ..streaming.windows import ROCKSDB, STATE_STORE_PROVIDER
 from . import register
 
 
@@ -189,25 +191,14 @@ def stream_stateful_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     so sibling streaming queries keep their default provider). The state
     protocol needs google.protobuf; :mod:`sparkfusion.protoruntime`
     discovers a vendored runtime and ships it to the spawned workers via
-    the captured UDF env (see stateful_user_counts_tws docstring). A finite
-    single-batch replay in update mode emits exactly one final total per
-    user."""
+    the captured UDF env (see ``windows._transform_with_state``). A
+    finite single-batch replay in update mode emits exactly one final total
+    per user."""
     from ..streaming.windows import stateful_user_counts_tws
 
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, STATE_STORE_PROVIDER, ROCKSDB):
         stream = read_events_stream(spark, sf_dir)
         out = run_stream_to_table(stateful_user_counts_tws(stream), "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
     return out.select("user_id", "n_events")
 
 
@@ -237,22 +228,11 @@ def stream_recent_events_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.windows import recent_events_tws
 
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, STATE_STORE_PROVIDER, ROCKSDB):
         stream = read_events_stream(spark, sf_dir).select(
             "user_id", F.unix_micros(F.col("ts")).alias("ts_us"), "event_id"
         )
         out = run_stream_to_table(recent_events_tws(stream, k=3), "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
     return out
 
 
@@ -272,20 +252,9 @@ def stream_user_type_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``GROUP BY user_id, event_type``."""
     from ..streaming.windows import user_type_counts_tws
 
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, STATE_STORE_PROVIDER, ROCKSDB):
         stream = read_events_stream(spark, sf_dir).select("user_id", "event_type")
         out = run_stream_to_table(user_type_counts_tws(stream), "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
     return out
 
 
@@ -474,13 +443,7 @@ def stream_session_timeout_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.windows import run_stream_to_table, session_timeout_tws
 
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, STATE_STORE_PROVIDER, ROCKSDB):
         ev = (
             read_events_stream(spark, sf_dir)
             .withWatermark("ts", "1 hour")
@@ -489,11 +452,6 @@ def stream_session_timeout_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         out = run_stream_to_table(session_timeout_tws(ev, gap_minutes=30), "append")
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
     return out
 
 

@@ -42,3 +42,18 @@ def test_no_python_stage_in_plan(spark):
 def test_empty_falls_back(spark):
     df = inline_rows(spark, [], "i int, s string")
     assert df.count() == 0 and df.columns == ["i", "s"]
+
+
+def test_escaped_string_literals_mode(spark):
+    """Under the legacy ``escapedStringLiterals`` parser mode a backslash
+    escape stays verbatim; the rendered VALUES must still read back exactly,
+    and the caller's mode must survive the call."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    rows = [("it's",), ("back\\slash",), ("é\nü",)]
+    spark.conf.set(key, "true")
+    try:
+        got = [tuple(r) for r in inline_rows(spark, rows, "s string").collect()]
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.unset(key)
+    assert got == rows

@@ -59,6 +59,19 @@ GLOBAL_WINDOW_ALLOWED = {
     "suite/llm_suite.py": "qf1 sweep over ~10 threshold buckets; ret1 re-ranks two limit(100) frames",
 }
 
+#: files allowed to call ``.conf.unset(`` — the save/restore of a session
+#: conf has one owner; everything else scopes confs through it
+CONF_UNSET_ALLOWED = {
+    "session.py": "scoped_conf: the one owner of temporary session-conf changes",
+}
+
+#: files allowed to touch ``sparkContext.environment`` (pyspark snapshots it
+#: into each Python function it creates, so a leaked entry reaches every
+#: later UDF's workers)
+SC_ENVIRONMENT_ALLOWED = {
+    "streaming/windows.py": "_transform_with_state: scoped protobuf runtime merge for the TWS workers",
+}
+
 
 def _walk_calls(path):
     with open(path) as f:
@@ -191,3 +204,49 @@ def test_collect_allowlist_entries_still_exist():
         if not hit:
             stale.append(f"GLOBAL_WINDOW_ALLOWED: {key}")
     assert not stale, f"stale allowlist rows (file no longer makes the call): {stale}"
+
+
+def _conf_unset_sites(full):
+    """Call sites of ``<x>.conf.unset(...)``."""
+    with open(full) as f:
+        tree = ast.parse(f.read())
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "unset"
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "conf"
+        ):
+            yield node.lineno
+
+
+def _sc_environment_sites(full):
+    """Accesses of ``<x>.environment`` — in this package only a
+    SparkContext has one."""
+    with open(full) as f:
+        tree = ast.parse(f.read())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == "environment":
+            yield node.lineno
+
+
+def test_session_state_has_one_owner():
+    """A hand-rolled conf save/restore or ``sc.environment`` patch outside
+    its owner fails here: use ``session.scoped_conf`` or
+    ``streaming.windows._transform_with_state`` instead. Allowlisted files
+    must still make the call, so a stale row cannot linger."""
+    bad, seen = [], set()
+    for sites, allowed in (
+        (_conf_unset_sites, CONF_UNSET_ALLOWED),
+        (_sc_environment_sites, SC_ENVIRONMENT_ALLOWED),
+    ):
+        for full, rel in _pkg_files():
+            for line in sites(full):
+                if rel in allowed:
+                    seen.add(rel)
+                else:
+                    bad.append(f"{rel}:{line} ({sites.__name__})")
+    assert not bad, f"session state changed outside its owner: {bad}"
+    stale = set(CONF_UNSET_ALLOWED) | set(SC_ENVIRONMENT_ALLOWED)
+    assert not stale - seen, f"stale allowlist rows: {sorted(stale - seen)}"

@@ -74,8 +74,8 @@ def _stream_confs(spark):
 def _start(spark, src: str, cp: str, sink: str):
     from pyspark.sql import functions as F
 
-    from sparkfusion.session import _ensure_read_confs
-    from sparkfusion.streaming.windows import _ts_convert, session_timeout_tws
+    from sparkfusion.session import _ensure_read_confs, ts_column
+    from sparkfusion.streaming.windows import session_timeout_tws
 
     _ensure_read_confs(spark)
     static = spark.read.parquet(src)
@@ -83,7 +83,7 @@ def _start(spark, src: str, cp: str, sink: str):
         spark.readStream.schema(static.schema)
         .option("maxFilesPerTrigger", str(FILES_PER_TRIGGER))
         .parquet(src)
-        .withColumn("ts", _ts_convert(dict(static.dtypes)["ts"]))
+        .withColumn("ts", ts_column(dict(static.dtypes)["ts"]))
     )
     sessions = session_timeout_tws(
         stream.withWatermark("ts", "1 hour").select(

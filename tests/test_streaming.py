@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sparkfusion.session import events_with_ts, table
+from sparkfusion.session import events_with_ts, scoped_conf, table
 from sparkfusion.streaming import (
     read_events_stream,
     run_stream_to_table,
@@ -15,6 +15,7 @@ from sparkfusion.streaming import (
     stream_stream_interval_join,
     tumbling_window_agg,
 )
+from sparkfusion.streaming.windows import ROCKSDB, STATE_STORE_PROVIDER
 
 
 def test_tumbling_matches_batch(spark, sf_dir):
@@ -264,13 +265,7 @@ def test_recent_events_tws_state_survives_micro_batches(spark, sf_dir, tmp_path)
 
     from sparkfusion.streaming import recent_events_tws, run_stream_to_table
 
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, STATE_STORE_PROVIDER, ROCKSDB):
         ev = events_with_ts(spark, sf_dir).select(
             "user_id", F.unix_micros(F.col("ts")).alias("ts_us"), "event_id"
         )
@@ -311,11 +306,6 @@ def test_recent_events_tws_state_survives_micro_batches(spark, sf_dir, tmp_path)
             .collect()
         }
         assert got == truth and len(got) > 0
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
 
 
 def test_session_timeout_tws_timers_fire_across_batches(spark, tmp_path):
@@ -337,13 +327,7 @@ def test_session_timeout_tws_timers_fire_across_batches(spark, tmp_path):
     # watermark and are dropped as late before reaching the operator
     b0 = [(1, DAY + 0 * MIN), (1, DAY + 10 * MIN), (2, DAY + 0 * MIN)]
     b1 = [(2, DAY + 100 * MIN), (3, DAY + 300 * MIN)]
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, STATE_STORE_PROVIDER, ROCKSDB):
         src = str(tmp_path / "batches")
         for name, rows in [("b0", b0), ("b1", b1)]:
             spark.createDataFrame(rows, "user_id long, ts_us long").selectExpr(
@@ -363,11 +347,6 @@ def test_session_timeout_tws_timers_fire_across_batches(spark, tmp_path):
             (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
             for r in out.collect()
         }
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
     # final watermark = 300min - 60min = 240min
     want = {
         (1, DAY, DAY + 40 * MIN, 2),  # stopped user -> closed by TIMER
