@@ -42,9 +42,11 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: how many parquet footers to open when estimating rows — beyond this the
+from ..session import files_meta
+
+#: how many parquet footers to read when estimating rows — beyond this the
 #: mean of the sample is extrapolated (footer reads are metadata-only but
-#: still one open() per file; thousands of part files need no exactness here)
+#: still one open() per new file; thousands of part files need no exactness)
 _FOOTER_SAMPLE = 16
 
 
@@ -62,8 +64,11 @@ def _input_meta(df: DataFrame) -> tuple[int, int | None]:
     files — pure metadata, runs no Spark job. Splits follow the scan's own
     packing arithmetic (``maxPartitionBytes`` / ``openCostInBytes``); rows
     come from parquet footers (sampled + extrapolated past
-    ``_FOOTER_SAMPLE`` files). A frame with no input files (in-memory or
-    checkpoint-rooted) reports (1, None): treated as narrow-input."""
+    ``_FOOTER_SAMPLE`` files). Sizes and footer rows come from the table
+    metadata record's file part (:func:`sparkfusion.session.files_meta`),
+    so each footer is opened once per file vintage. A frame with no input
+    files (in-memory or checkpoint-rooted) reports (1, None): treated as
+    narrow-input."""
     files = [f for f in map(_local_path, df.inputFiles()) if f and os.path.exists(f)]
     if not files:
         return 1, None
@@ -86,15 +91,13 @@ def _input_meta(df: DataFrame) -> tuple[int, int | None]:
 
     max_split = _bytes_conf("spark.sql.files.maxPartitionBytes", 128 * 1024**2)
     open_cost = _bytes_conf("spark.sql.files.openCostInBytes", 4 * 1024**2)
-    total_cost = sum(os.path.getsize(f) + open_cost for f in files)
+    meta = files_meta(files)
+    total_cost = meta.total_bytes + open_cost * len(files)
     est_splits = max(1, -(-total_cost // max_split))
     rows: int | None = None
     try:
-        import pyarrow.parquet as pq
-
-        sample = files[:_FOOTER_SAMPLE]
-        sampled = sum(pq.ParquetFile(f).metadata.num_rows for f in sample)
-        rows = sampled * len(files) // len(sample)
+        sampled = meta.footer_rows(_FOOTER_SAMPLE)
+        rows = sum(sampled) * len(files) // len(sampled)
     except Exception:  # non-parquet input: bytes estimate still stands
         rows = None
     return int(est_splits), rows

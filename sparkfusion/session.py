@@ -20,8 +20,10 @@ from __future__ import annotations
 import contextlib
 import os
 from collections.abc import Iterator
+from dataclasses import dataclass
 
 from pyspark.sql import Column, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -107,6 +109,128 @@ def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
             spark.conf.set(key, prev)
 
 
+#: session confs that change the schema Spark's parquet inference returns;
+#: their values are part of a table record's key
+INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+
+@dataclass(frozen=True)
+class TableFiles:
+    """The file part of a table's metadata record: each data file as
+    ``(absolute path, size, mtime_ns)``. Needs no SparkSession, so the
+    oracle generators and the staleness keys read it too."""
+
+    files: tuple[tuple[str, int, int], ...]
+
+    @property
+    def signature(self) -> tuple[tuple[str, int, int], ...]:
+        """``(name, size, mtime_ns)`` of each data file (sorted by name for
+        a table): it changes whenever the table's bytes could have."""
+        return tuple((os.path.basename(p), size, mtime) for p, size, mtime in self.files)
+
+    @property
+    def total_bytes(self) -> int:
+        return sum(size for _, size, _ in self.files)
+
+    def footer_rows(self, limit: int | None = None) -> list[int]:
+        """Footer row count of each data file (of the first ``limit`` files),
+        read once per file vintage."""
+        return [_footer_rows(*f) for f in self.files[:limit]]
+
+    @property
+    def rows(self) -> int:
+        return sum(self.footer_rows())
+
+
+#: absolute file path -> (size, mtime_ns, footer rows)
+_FOOTERS: dict[str, tuple[int, int, int]] = {}
+
+
+def _footer_rows(path: str, size: int, mtime_ns: int) -> int:
+    hit = _FOOTERS.get(path)
+    if hit is not None and hit[:2] == (size, mtime_ns):
+        return hit[2]
+    import pyarrow.parquet as pq
+
+    rows = pq.read_metadata(path).num_rows
+    _FOOTERS[path] = (size, mtime_ns, rows)
+    return rows
+
+
+def files_meta(paths: list[str]) -> TableFiles:
+    """:class:`TableFiles` over the given data files, in the given order."""
+    out = []
+    for p in paths:
+        st = os.stat(p)
+        out.append((os.path.abspath(p), st.st_size, st.st_mtime_ns))
+    return TableFiles(tuple(out))
+
+
+def table_files(path: str) -> TableFiles:
+    """:class:`TableFiles` of a parquet table: the ``*.parquet`` files of a
+    directory (by name), or the file itself. ``os.stat`` on a directory
+    succeeds too, but an in-place rewrite of a part file leaves the
+    directory's own stat unchanged, so a directory is always listed."""
+    if os.path.isdir(path):
+        names = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        return files_meta([os.path.join(path, f) for f in names])
+    return files_meta([path])
+
+
+@dataclass(frozen=True)
+class TableMeta:
+    """A table's metadata record: its files, the inference confs it was
+    resolved under, and the ``StructType`` Spark itself inferred (never
+    pyarrow's, whose NTZ and nanos typing differs from Spark's)."""
+
+    path: str
+    files: TableFiles
+    confs: tuple[str | None, ...]
+    schema: StructType
+
+
+#: absolute table path -> its record; one entry per distinct path
+_TABLE_META: dict[str, TableMeta] = {}
+
+
+def table_meta(spark: SparkSession, path: str) -> TableMeta:
+    """The metadata record of the parquet table at ``path``, resolved once.
+
+    The record is replaced when the table's stat signature or the value of
+    any :data:`INFERENCE_CONFS` key changes; the files are stat'ed BEFORE a
+    miss infers, so a rewrite racing the inference leaves an older signature
+    and the next call re-infers. A path this process cannot stat (missing,
+    or a remote URI) is inferred on every call and never recorded — Spark
+    then raises or reads exactly as a plain ``spark.read.parquet`` would.
+    Two threads missing at once may both infer; each stores a record whose
+    key matches its schema, so the cache stays consistent without a lock.
+
+    Mirrors the reference resolving a schema once at
+    ``ctx.register_parquet`` (``examples/dataframe/query.rs:118-123``)."""
+    confs = tuple(spark.conf.get(k, None) for k in INFERENCE_CONFS)
+    if not os.path.exists(path):
+        return TableMeta(path, TableFiles(()), confs, spark.read.parquet(path).schema)
+    path = os.path.abspath(path)
+    files = table_files(path)
+    meta = _TABLE_META.get(path)
+    if meta is None or meta.files != files or meta.confs != confs:
+        meta = TableMeta(path, files, confs, spark.read.parquet(path).schema)
+        _TABLE_META[path] = meta
+    return meta
+
+
+def star_meta(spark: SparkSession, sf_dir: str, name: str) -> TableMeta:
+    """The record of star table ``name`` under ``sf_dir``, resolved under
+    the suite's read confs (:func:`_ensure_read_confs`)."""
+    _ensure_read_confs(spark)
+    return table_meta(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
 def load_star(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = STAR_TABLES) -> None:
     """Register each star-schema parquet as a lazy temp view.
 
@@ -115,18 +239,18 @@ def load_star(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = STAR_T
     Catalyst sees through it, so filter pushdown / column pruning reach the
     parquet scan (no materialization).
     """
-    _ensure_read_confs(spark)
     for name in tables:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
+        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
+            table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str):
     """Read one star-schema table as a DataFrame (reference ``read_parquet``,
-    ``src/utils/datasets.rs:184-185``)."""
-    _ensure_read_confs(spark)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    ``src/utils/datasets.rs:184-185``), with the schema from its metadata
+    record: no inference job once the record is warm, and the same relation
+    shape on a hit and a miss, so cached-plan lookups keep matching."""
+    meta = star_meta(spark, sf_dir, name)
+    return spark.read.schema(meta.schema).parquet(meta.path)
 
 
 def ts_column(dtype: str) -> Column:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState
 
-from ..session import scoped_conf, table, ts_column
+from ..session import scoped_conf, star_meta, ts_column
 
 #: the session conf that picks the state store, and the provider the
 #: transformWithState operators need (the ONLY one that API supports)
@@ -37,11 +37,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """File-source stream over any star-schema parquet table, schema pinned
-    from the batch read so the stream cannot drift from the table
-    contract."""
-    static = table(spark, sf_dir, name)
+    from the table's metadata record (:func:`~sparkfusion.session.star_meta`)
+    so the stream cannot drift from the table contract."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    reader = spark.readStream.schema(static.schema)
+    reader = spark.readStream.schema(star_meta(spark, sf_dir, name).schema)
     if os.path.isdir(path):
         # directory-of-part-files layout (e.g. scaled .localdata): stream the
         # directory itself; a pathGlobFilter on sf_dir would silently match

@@ -80,16 +80,9 @@ def table_rows(sf_dir: str, name: str) -> int:
     that must agree with them bit-for-bit)."""
     import os
 
-    import pyarrow.parquet as pq
+    from ..session import table_files
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            pq.read_metadata(os.path.join(path, f)).num_rows
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    return pq.read_metadata(path).num_rows
+    return table_files(os.path.join(sf_dir, f"{name}.parquet")).rows
 
 
 def queries() -> dict[str, QueryFn]:

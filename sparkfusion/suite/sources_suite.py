@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import PlanError
-from ..session import table
+from ..session import table, table_files
 from ..sources import (
     get_empty_df,
     get_random_df,
@@ -32,25 +32,11 @@ IO_DIR = "/tmp/sparkfusion_io"
 
 def _parquet_vintage(sf_dir: str, name: str) -> str:
     """Staleness key for a parquet table under ``sf_dir`` — changes whenever
-    the table's bytes could have (mtime_ns + size), for marker-keyed sidecar
-    fixtures (s26 blobs). ``os.stat()`` on a DIRECTORY succeeds (returning
-    the dirent's own stat, size 4096), so the directory-shaped layout (e.g.
-    the sf1 build) is detected explicitly with ``isdir`` — an in-place
-    regeneration that rewrites part files under identical names leaves the
-    directory mtime unchanged, and a stat-of-directory key would silently
-    pin stale fixture blobs (r12 advice). Flat-file layout keys on the
-    file's own (mtime_ns, size)."""
-    src = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(src):
-        parts = sorted(
-            (f, os.path.getsize(p), os.stat(p).st_mtime_ns)
-            for f in os.listdir(src)
-            if f.endswith(".parquet")
-            for p in [os.path.join(src, f)]
-        )
-        return f"{sf_dir}|{parts}"
-    st = os.stat(src)
-    return f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
+    the table's bytes could have, for marker-keyed sidecar fixtures (s26
+    blobs). The key is the table record's stat signature
+    (:func:`sparkfusion.session.table_files`), which lists a directory's
+    part files rather than stat-ing the directory itself."""
+    return f"{sf_dir}|{table_files(os.path.join(sf_dir, f'{name}.parquet')).signature}"
 
 
 @register(

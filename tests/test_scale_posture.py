@@ -72,6 +72,19 @@ SC_ENVIRONMENT_ALLOWED = {
     "streaming/windows.py": "_transform_with_state: scoped protobuf runtime merge for the TWS workers",
 }
 
+#: files allowed to run Spark's parquet schema inference over a star-table
+#: path — every other star-table read goes through ``session.table`` /
+#: ``load_star`` / ``star_meta``, which read the table's metadata record
+STAR_READ_ALLOWED = {
+    "session.py": "table_meta: the one inference per table vintage, and table()'s schema-pinned read",
+}
+
+#: files allowed to open parquet footers with pyarrow
+FOOTER_READ_ALLOWED = {
+    "session.py": "the table record's footer rows, read once per file vintage",
+    "sources/s3py.py": "the S3 reader opens remote objects, which have no local stat",
+}
+
 
 def _walk_calls(path):
     with open(path) as f:
@@ -250,3 +263,92 @@ def test_session_state_has_one_owner():
     assert not bad, f"session state changed outside its owner: {bad}"
     stale = set(CONF_UNSET_ALLOWED) | set(SC_ENVIRONMENT_ALLOWED)
     assert not stale - seen, f"stale allowlist rows: {sorted(stale - seen)}"
+
+
+class _ParquetReads(ast.NodeVisitor):
+    """Batch parquet reads (``<x>.read[.<option>(..)].parquet(...)``), each
+    with a flag: does its path name a star table? A path names one when its
+    source text — or, for a bare name, the text assigned to that name in the
+    same function — mentions ``sf_dir`` or a ``<table>.parquet`` literal."""
+
+    def __init__(self, src: str):
+        from sparkfusion.session import STAR_TABLES
+
+        self.src = src
+        self.markers = ("sf_dir", *(f"{t}.parquet" for t in STAR_TABLES))
+        self.scopes: list[dict[str, str]] = [{}]
+        self.sites: list[tuple[int, bool]] = []
+
+    def visit_FunctionDef(self, node):
+        self.scopes.append({})
+        self.generic_visit(node)
+        self.scopes.pop()
+
+    visit_AsyncFunctionDef = visit_FunctionDef
+
+    def visit_Assign(self, node):
+        text = ast.get_source_segment(self.src, node.value) or ""
+        for t in node.targets:
+            if isinstance(t, ast.Name):
+                self.scopes[-1][t.id] = self.scopes[-1].get(t.id, "") + " " + text
+        self.generic_visit(node)
+
+    def visit_Call(self, node):
+        if isinstance(node.func, ast.Attribute) and node.func.attr == "parquet":
+            recv = node.func.value
+            while isinstance(recv, (ast.Call, ast.Attribute)) and not (
+                isinstance(recv, ast.Attribute) and recv.attr == "read"
+            ):
+                recv = recv.func if isinstance(recv, ast.Call) else recv.value
+            if isinstance(recv, ast.Attribute):
+                text = " ".join(
+                    (ast.get_source_segment(self.src, a) or "")
+                    + (self.scopes[-1].get(a.id, "") if isinstance(a, ast.Name) else "")
+                    for a in node.args
+                )
+                self.sites.append((node.lineno, any(m in text for m in self.markers)))
+        self.generic_visit(node)
+
+
+def _parquet_read_sites(full):
+    with open(full) as f:
+        src = f.read()
+    v = _ParquetReads(src)
+    v.visit(ast.parse(src))
+    return v.sites
+
+
+def _footer_open_sites(full):
+    """Calls of pyarrow's footer readers (``pq.read_metadata``,
+    ``pq.read_schema``, ``pq.ParquetFile``), however imported."""
+    with open(full) as f:
+        tree = ast.parse(f.read())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name in ("read_metadata", "read_schema", "ParquetFile"):
+                yield node.lineno
+
+
+def test_table_metadata_has_one_owner():
+    """Schema inference over a star-table path, or a pyarrow footer open,
+    outside its owner fails here: read star tables through
+    ``session.table`` / ``load_star`` / ``star_meta`` and footer facts
+    through ``session.table_files`` / ``files_meta``. Allowlisted files must
+    still make the call, so a stale row cannot linger."""
+    bad, seen_read, seen_footer = [], set(), set()
+    for full, rel in _pkg_files():
+        for line, star in _parquet_read_sites(full):
+            if rel in STAR_READ_ALLOWED:
+                seen_read.add(rel)
+            elif star:
+                bad.append(f"{rel}:{line} star-table spark.read.parquet")
+        for line in _footer_open_sites(full):
+            if rel in FOOTER_READ_ALLOWED:
+                seen_footer.add(rel)
+            else:
+                bad.append(f"{rel}:{line} parquet footer open")
+    assert not bad, f"table metadata resolved outside its owner: {bad}"
+    stale = (set(STAR_READ_ALLOWED) - seen_read) | (set(FOOTER_READ_ALLOWED) - seen_footer)
+    assert not stale, f"stale allowlist rows: {sorted(stale)}"
