@@ -180,11 +180,9 @@ def negative_pairs(
     # busiest partition) — the r14 salt experiment that splits it
     # replicated the candidate build side and measured net SLOWER
     # (sf0.1 0.80→1.36s), so plain widening stays.
-    from ..operators.partitioning import target_parts
+    from ..operators.partitioning import copartition_for_compute
 
-    n_parts = max(target_parts(anchors, 1)[1], target_parts(cands, 1)[1])
-    anchors = anchors.repartition(n_parts, F.col("b"))
-    cands = cands.repartition(n_parts, F.col("b"))
+    anchors, cands = copartition_for_compute(anchors, cands, "b")
     w = Window.partitionBy("anchor_id").orderBy("pair_h", "neg_id")
     return (
         anchors.join(cands, "b")

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.partitioning import repartition_for_compute
+from ..operators.ranks import partition_offsets
 from ..errors import PlanError
 
 # Minimal per-language stopword sets for the n-gram/stopword-overlap heuristic.
@@ -217,47 +218,33 @@ def pack_sequences(
     token offset where the doc starts, the training sequence it starts in,
     and how many sequences it spans (0 for token-less docs).
 
-    Scale shape (no global sort, no single reducer): range-repartition by id
-    so partition p holds a contiguous id span, cumulative-sum tokens WITHIN
-    each partition (parallel windows), then broadcast-join per-partition
-    token totals prefix-summed on a #partitions-row frame — the same
-    two-pass offset scheme as ``operators.projection.zip_with_index_df``,
-    with token counts in place of row counts.
+    Scale shape (no global sort, no single reducer): the compact
+    (id, n_tokens) projection goes through
+    :func:`~sparkfusion.operators.ranks.partition_offsets` — range-partitioned
+    by id so partition p holds a contiguous id span, with the token totals of
+    every earlier partition as ``__off_tok`` — and a cumulative sum WITHIN
+    each partition (parallel windows) adds the doc's local offset.
     """
     from pyspark.sql import DataFrame, Window
 
     assert isinstance(df, DataFrame)
-    n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(n_parts, F.col(id_col))
-    # localCheckpoint: totals and the main branch both read `tagged` —
-    # without one materialization each re-executes the range exchange and
-    # AQE may coalesce them to different partition counts, making
-    # spark_partition_id() disagree between branches (the r11 ranks.py
-    # sf1 bug class); the checkpointed frame is the compact (id, n_tokens)
-    # projection, cheap at any scale.
-    tagged = (
-        ranged.select(
+    tagged = partition_offsets(
+        df.select(
             F.col(id_col), token_count(F.col(text_col)).cast("long").alias("n_tokens")
-        )
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        ),
+        {"tok": F.sum("n_tokens")},
+        [F.col(id_col)],
+        num_partitions,
     )
-    totals = tagged.groupBy("__pid").agg(F.sum("n_tokens").alias("__ptot"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "__off", F.coalesce(F.sum("__ptot").over(w_off), F.lit(0))
-    ).drop("__ptot")
     w_cum = (
         Window.partitionBy("__pid")
         .orderBy(id_col)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    b = F.lit(budget)
     return (
-        tagged.join(F.broadcast(offsets), "__pid")
-        .withColumn(
+        tagged.withColumn(
             "start_off",
-            F.col("__off") + F.coalesce(F.sum("n_tokens").over(w_cum), F.lit(0)),
+            F.col("__off_tok") + F.coalesce(F.sum("n_tokens").over(w_cum), F.lit(0)),
         )
         .withColumn("seq_id", F.expr(f"start_off div {budget}"))
         .withColumn(

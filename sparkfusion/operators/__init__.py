@@ -13,7 +13,6 @@ from .projection import (
     df_sql,
     select_all_exclude,
     with_typed_null,
-    zip_with_index,
     zip_with_index_df,
 )
 from .schema import df_cols_to_json, df_cols_to_struct
@@ -26,7 +25,6 @@ __all__ = [
     "with_typed_null",
     "add_column",
     "add_pk_to_df",
-    "zip_with_index",
     "zip_with_index_df",
     "df_cols_to_json",
     "df_cols_to_struct",

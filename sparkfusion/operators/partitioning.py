@@ -103,8 +103,8 @@ def _input_meta(df: DataFrame) -> tuple[int, int | None]:
     return int(est_splits), rows
 
 
-def target_parts(df: DataFrame, min_rows_per_part: int) -> tuple[int, int]:
-    """(input width estimate, capped target) — shared by both helpers."""
+def _target_parts(df: DataFrame, min_rows_per_part: int) -> tuple[int, int]:
+    """(input width estimate, capped target) — shared by the helpers below."""
     cores = df.sparkSession.sparkContext.defaultParallelism
     est_splits, rows = _input_meta(df)
     target = max(cores, est_splits)
@@ -121,7 +121,7 @@ def spread_for_compute(
     never values (callers are per-row maps or partitioning-invariant integer
     folds). ``min_rows_per_part`` caps the fan-out by the input's estimated
     rows (see module doc)."""
-    est_splits, target = target_parts(df, min_rows_per_part)
+    est_splits, target = _target_parts(df, min_rows_per_part)
     if est_splits >= target:
         return df
     if key_cols:
@@ -147,5 +147,19 @@ def repartition_for_compute(
     scan is already ≥ cores partitions and the count simply preserves that
     width, never a local constant. ``min_rows_per_part`` caps the count by
     estimated input rows (see module doc)."""
-    _, target = target_parts(df, min_rows_per_part)
+    _, target = _target_parts(df, min_rows_per_part)
     return df.repartition(target, *[F.col(c) for c in key_cols])
+
+
+def copartition_for_compute(
+    left: DataFrame, right: DataFrame, key: str
+) -> tuple[DataFrame, DataFrame]:
+    """Both sides of a CPU-dense equi-join, hash-repartitioned on ``key``
+    to one EXPLICIT width: the wider of the two sides'
+    :func:`repartition_for_compute` widths. Equal counts keep the sides
+    co-partitioned (the join plans no further exchange), and an explicit
+    count is exempt from AQE's byte-based coalescing, which would otherwise
+    shrink a join whose shuffles are tiny but whose in-bucket work is
+    quadratic down to a few tasks."""
+    n = max(_target_parts(left, 1)[1], _target_parts(right, 1)[1])
+    return left.repartition(n, F.col(key)), right.repartition(n, F.col(key))

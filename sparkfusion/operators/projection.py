@@ -12,7 +12,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from ..errors import SchemaError
+from ..errors import PlanError, SchemaError
+from .ranks import partition_offsets
 
 
 def df_sql(df: DataFrame, predicate: str) -> DataFrame:
@@ -67,7 +68,8 @@ def add_pk_to_df(df: DataFrame, name: str = "pk", order_by: Sequence[str] | None
 
     Scale note: a global ``row_number`` over one unpartitioned window is a
     single-reducer sort — correct but serial. For 100 TB assignments use
-    :func:`zip_with_index` below (partition-offset arithmetic, fully parallel).
+    :func:`zip_with_index_df` below (partition-offset arithmetic, fully
+    parallel).
 
     >>> df = spark.createDataFrame([("b",), ("a",)], "k STRING")
     >>> [(r["k"], r["pk"]) for r in add_pk_to_df(df, order_by=["k"]).orderBy("pk").collect()]
@@ -78,64 +80,32 @@ def add_pk_to_df(df: DataFrame, name: str = "pk", order_by: Sequence[str] | None
     return df.withColumn(name, (F.row_number().over(w) - F.lit(1)).cast("int"))
 
 
-def zip_with_index(df: DataFrame, name: str = "pk") -> DataFrame:
-    """Contiguous 0..n-1 ids without a global sort — the 100 TB-scale variant.
-
-    Two-pass partition-offset scheme (same trick as RDD ``zipWithIndex`` but
-    staying in DataFrame land): count rows per partition, prefix-sum the
-    offsets on the driver (tiny — one int per partition), then add the
-    within-partition position. Order follows current partition order, so it is
-    deterministic only after an explicit sort/repartition — callers who need a
-    *stable* key should sort first or use :func:`add_pk_to_df`.
-    """
-    from pyspark.sql.types import StructType
-
-    spark = df.sparkSession
-    rdd = df.rdd.zipWithIndex()
-    # copy before .add — StructType.add mutates in place, and df.schema is a
-    # cached object: mutating it corrupts the source frame for later calls
-    out_schema = StructType(list(df.schema.fields)).add(name, "long", False)
-    return spark.createDataFrame(rdd.map(lambda pair: (*pair[0], pair[1])), out_schema)
-
-
 def zip_with_index_df(df: DataFrame, name: str = "pk") -> DataFrame:
-    """Contiguous 0..n-1 ids, pure-DataFrame (Spark Connect-safe) variant of
-    :func:`zip_with_index` — no RDD API, so it works where the RDD surface is
-    unavailable (Connect) and stays inside Catalyst.
+    """Contiguous 0..n-1 ids without a global sort — the 100 TB-scale
+    variant of :func:`add_pk_to_df`, pure DataFrame (Spark Connect-safe, no
+    RDD API) so it stays inside Catalyst.
 
-    Same two-pass partition-offset scheme, expressed relationally: tag each
-    row with its partition id and a within-partition ordinal
+    Ids follow the current partition layout: a within-partition ordinal
     (``monotonically_increasing_id`` is strictly increasing *within* a
-    partition, so a window ordered by it yields the intra-partition position);
-    compute per-partition counts (one row per partition — tiny), prefix-sum
-    them with a window over that tiny frame, broadcast-join the offsets back.
-    No global sort, no single reducer: the only total ordering is over the
-    partition-count frame (#partitions rows).
+    partition, so a window ordered by it yields the intra-partition
+    position) plus the count of rows in earlier partitions from
+    :func:`~sparkfusion.operators.ranks.partition_offsets`. No global sort,
+    no single reducer: the only total ordering is over the #partitions-row
+    counts frame.
 
-    Determinism caveat (same as :func:`zip_with_index`): ids follow current
-    partition layout, so they are stable only for a deterministic source scan;
+    Determinism caveat: ids are stable only for a deterministic source scan;
     sort first or use :func:`add_pk_to_df` for an order-defined key.
     """
-    # localCheckpoint: counts and the main branch both read `tagged`; if the
-    # input contains a non-user-specified shuffle, AQE can coalesce the two
-    # re-executions differently and spark_partition_id()/__mid disagree
-    # between branches (the r11 ranks.py sf1 bug class) — materialize once.
-    tagged = (
-        df.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__mid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=False)
+    if "__mid" in df.columns:
+        raise PlanError("zip_with_index_df: column collision on __mid")
+    tagged = partition_offsets(
+        df.withColumn("__mid", F.monotonically_increasing_id()),
+        {"rows": F.count(F.lit(1))},
     )
-    counts = tagged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "__off", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0))
-    ).drop("__cnt")
     w_pos = Window.partitionBy("__pid").orderBy("__mid")
-    return (
-        tagged.join(F.broadcast(offsets), "__pid")
-        .withColumn(name, (F.row_number().over(w_pos) - 1 + F.col("__off")).cast("long"))
-        .drop("__pid", "__mid", "__off")
-    )
+    return tagged.withColumn(
+        name, (F.row_number().over(w_pos) - 1 + F.col("__off_rows")).cast("long")
+    ).drop("__pid", "__mid", "__off_rows")
 
 
 def add_column(df: DataFrame, values_df: DataFrame, order_by: Sequence[str]) -> DataFrame:

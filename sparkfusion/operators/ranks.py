@@ -1,20 +1,20 @@
-"""Distributable total-order primitives: global rank and ordered cumulative
-sums without a single-reducer window.
+"""Distributable total-order primitives: global rank, ordered cumulative
+sums and contiguous row ids without a single-reducer window.
 
 ``RANK() OVER (ORDER BY v)`` / ``SUM(x) OVER (ORDER BY v)`` with no
 PARTITION BY move every row to ONE partition in Spark (WindowExec warns
-"No Partition Defined"). The rank statistics family (Mann-Whitney, KS) and
-cumulative-distribution work genuinely need a total order, so these helpers
-implement it the scale-correct way — the same two-pass partition-offset
-scheme as ``operators.projection.zip_with_index_df`` and
-``llm.text.pack_sequences``:
+"No Partition Defined"). The rank statistics family (Mann-Whitney, KS),
+cumulative-distribution work, sequence packing and contiguous ids genuinely
+need a total order, so they all go through :func:`partition_offsets`, the
+one owner of the two-pass partition-offset scheme:
 
 1. ``repartitionByRange`` on the order key — each reducer owns a contiguous
    key range (sampled boundaries, fully parallel), and because the range
-   partitioner assigns BY KEY, tie groups can never straddle partitions;
-2. per-partition rank/cumsum with an ordinary partitioned window;
-3. per-partition totals (one row per partition) prefix-summed on the driver
-   -side tiny frame via a window over #partitions rows, broadcast back.
+   partitioner assigns BY KEY, tie groups can never straddle partitions
+   (no order keeps the current layout: ``zip_with_index_df``);
+2. per-partition totals (one row per partition) prefix-summed by a window
+   over that #partitions-row frame, broadcast back as ``__off_<name>``;
+3. the caller's own partitioned window over ``__pid`` plus the offset.
 
 The only unpartitioned window left is over the #partitions-row totals frame.
 Reference parity: the reference has no window engine beyond per-key frames
@@ -23,17 +23,17 @@ Reference parity: the reference has no window engine beyond per-key frames
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..errors import PlanError
 
-# Internal working columns materialized by these primitives. Every public
-# entry point guards ALL of them: an input frame already carrying e.g.
-# __off_rows or __lrank would join ambiguously against the offsets frame and
-# produce silently wrong ranks rather than an error.
+# Internal working column names of these primitives. Every public entry
+# point guards ALL of them: an input frame already carrying e.g. __pid or
+# __off_rows would join ambiguously against the offsets frame and produce
+# silently wrong ranks rather than an error.
 _INTERNAL_COLS = ("__pid", "__lrank", "__lpos", "__off_rows", "__one", "__n", "__keydup")
 
 
@@ -43,20 +43,49 @@ def _guard_collisions(df: DataFrame, fn: str, *extra: str) -> None:
         raise PlanError(f"{fn}: column collision on {', '.join(clash)}")
 
 
-def _offsets(tagged: DataFrame, totals_cols: dict[str, str]) -> DataFrame:
-    """Prefix-sum per-partition totals: input ``tagged`` must carry __pid.
-    Returns one row per partition with ``__off_<name>`` columns — the sum of
-    every EARLIER partition's total for that column."""
-    aggs = [F.sum(src).alias(f"__tot_{name}") for name, src in totals_cols.items()]
-    totals = tagged.groupBy("__pid").agg(*aggs)
+def partition_offsets(
+    df: DataFrame,
+    totals: Mapping[str, Column],
+    order: Sequence[Column | str] | None = None,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Tag every row of ``df`` with its partition id ``__pid`` and, for each
+    ``name -> aggregate`` in ``totals``, the sum of that aggregate over every
+    EARLIER partition as ``__off_<name>`` (e.g. ``{"rows": F.count(F.lit(1))}``
+    gives the global position of a partition's first row).
+
+    With ``order``, ``df`` is first range-partitioned on it across
+    ``num_partitions`` (default: the session's parallelism), so partition p
+    holds a contiguous key range; without it the current layout is kept.
+    Callers add their own ``Window.partitionBy("__pid")`` pass and stitch
+    the offset on. Rejects an input already carrying a working column.
+    """
+    _guard_collisions(df, "partition_offsets", *(f"__off_{n}" for n in totals))
+    if order is not None:
+        n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+        df = df.repartitionByRange(n_parts, *order)
+    # localCheckpoint: the offsets subtree and the main subtree BOTH read
+    # `tagged`; without materialization each re-executes the input's
+    # exchange, and AQE may coalesce the two executions to DIFFERENT
+    # partition counts — the partition ids then disagree between branches
+    # and the __pid join silently drops rows (an sf1 sweep caught it on st3:
+    # Spark lost 41% of events). Explicit numPartitions alone also
+    # disables AQE coalescing, but one materialization is both safer and
+    # cheaper than running the exchange twice.
+    tagged = df.withColumn("__pid", F.spark_partition_id()).localCheckpoint(
+        eager=False
+    )
     w = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    out = totals
-    for name in totals_cols:
-        out = out.withColumn(
-            f"__off_{name}",
-            F.coalesce(F.sum(f"__tot_{name}").over(w), F.lit(0)),
-        )
-    return out.select("__pid", *[f"__off_{n}" for n in totals_cols])
+    offs = tagged.groupBy("__pid").agg(
+        *[agg.alias(f"__tot_{n}") for n, agg in totals.items()]
+    ).select(
+        "__pid",
+        *[
+            F.coalesce(F.sum(f"__tot_{n}").over(w), F.lit(0)).alias(f"__off_{n}")
+            for n in totals
+        ],
+    )
+    return tagged.join(F.broadcast(offs), "__pid")
 
 
 def global_rank(
@@ -85,31 +114,11 @@ def global_rank(
         raise PlanError("global_rank: ascending list must match order_col list")
     _guard_collisions(df, "global_rank", out)
     keys = [F.col(c) if a else F.col(c).desc() for c, a in zip(cols, asc)]
-    n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(n_parts, *keys)
-    # localCheckpoint: the offsets subtree and the main subtree BOTH read
-    # `tagged`; without materialization each re-executes the range exchange,
-    # and AQE may coalesce the two executions to DIFFERENT partition counts —
-    # spark_partition_id() then disagrees between branches and the __pid
-    # join silently drops rows (caught by the r11 sf1 sweep on st3: Spark
-    # lost 41% of events). Explicit numPartitions alone also disables AQE
-    # coalescing, but one materialization is both safer and cheaper than
-    # running the exchange twice.
-    tagged = ranged.withColumn("__pid", F.spark_partition_id()).localCheckpoint(
-        eager=False
-    )
-    offs = _offsets(
-        tagged.select("__pid").withColumn("__one", F.lit(1)), {"rows": "__one"}
-    )
-    w = Window.partitionBy("__pid").orderBy(
-        *[F.col(c) if a else F.col(c).desc() for c, a in zip(cols, asc)]
-    )
-    return (
-        tagged.withColumn("__lrank", F.rank().over(w))
-        .join(F.broadcast(offs), "__pid")
-        .withColumn(out, (F.col("__lrank") + F.col("__off_rows")).cast("long"))
-        .drop("__pid", "__lrank", "__off_rows")
-    )
+    tagged = partition_offsets(df, {"rows": F.count(F.lit(1))}, keys, num_partitions)
+    w = Window.partitionBy("__pid").orderBy(*keys)
+    return tagged.withColumn(
+        out, (F.rank().over(w) + F.col("__off_rows")).cast("long")
+    ).drop("__pid", "__off_rows")
 
 
 def ranged_cumsum(
@@ -135,13 +144,9 @@ def ranged_cumsum(
     _guard_collisions(df, "ranged_cumsum", *(f"cum_{c}" for c in sum_cols))
     integral = {"tinyint", "smallint", "int", "bigint"}
     dtypes = dict(df.dtypes)
-    n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(n_parts, F.col(order_col))
-    # same single-evaluation discipline as global_rank (see comment there)
-    tagged = ranged.withColumn("__pid", F.spark_partition_id()).localCheckpoint(
-        eager=False
+    tagged = partition_offsets(
+        df, {c: F.sum(c) for c in sum_cols}, [F.col(order_col)], num_partitions
     )
-    offs = _offsets(tagged, {c: c for c in sum_cols})
     w = (
         Window.partitionBy("__pid")
         .orderBy(order_col)
@@ -158,10 +163,7 @@ def ranged_cumsum(
         ).otherwise(F.lit(0)),
     )
     for c in sum_cols:
-        out = out.withColumn(f"cum_{c}", F.sum(c).over(w))
-    out = out.join(F.broadcast(offs), "__pid")
-    for c in sum_cols:
-        stitched = F.col(f"cum_{c}") + F.col(f"__off_{c}") + F.col("__keydup")
+        stitched = F.sum(c).over(w) + F.col(f"__off_{c}") + F.col("__keydup")
         if dtypes.get(c) in integral:
             stitched = stitched.cast("long")
         out = out.withColumn(f"cum_{c}", stitched)
@@ -199,19 +201,9 @@ def global_ntile(
         raise PlanError("global_ntile: ascending list must match order_col list")
     _guard_collisions(df, "global_ntile", out)
     keys = [F.col(c) if a else F.col(c).desc() for c, a in zip(cols, asc)]
-    n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(n_parts, *keys)
-    # single-evaluation discipline — see global_rank
-    tagged = ranged.withColumn("__pid", F.spark_partition_id()).localCheckpoint(
-        eager=False
-    )
-    offs = _offsets(
-        tagged.select("__pid").withColumn("__one", F.lit(1)), {"rows": "__one"}
-    )
+    tagged = partition_offsets(df, {"rows": F.count(F.lit(1))}, keys, num_partitions)
     total = tagged.agg(F.count(F.lit(1)).alias("__n"))
-    w = Window.partitionBy("__pid").orderBy(
-        *[F.col(c) if a else F.col(c).desc() for c, a in zip(cols, asc)]
-    )
+    w = Window.partitionBy("__pid").orderBy(*keys)
     pos = F.col("__lpos") + F.col("__off_rows")
     k = F.lit(n_tiles)
     q = F.expr(f"__n div {n_tiles}")
@@ -224,7 +216,6 @@ def global_ntile(
     )
     return (
         tagged.withColumn("__lpos", F.row_number().over(w))
-        .join(F.broadcast(offs), "__pid")
         .crossJoin(F.broadcast(total))
         .withColumn(out, tile.cast("int"))
         .drop("__pid", "__lpos", "__off_rows", "__n")

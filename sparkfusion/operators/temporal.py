@@ -113,11 +113,9 @@ def range_join_bucketed(
     # at production scale it preserves the scan width rather than pinning a
     # local constant (guide §2.5). Time buckets are uniform by construction
     # (width ≈ interval length), so forgoing AQE's skew split here is safe.
-    from .partitioning import target_parts
+    from .partitioning import copartition_for_compute
 
-    n = max(target_parts(b_points, 1)[1], target_parts(b_intervals, 1)[1])
-    b_points = b_points.repartition(n, F.col("__bucket"))
-    b_intervals = b_intervals.repartition(n, F.col("__bucket"))
+    b_points, b_intervals = copartition_for_compute(b_points, b_intervals, "__bucket")
     return (
         b_points.join(b_intervals, "__bucket")
         .filter(

@@ -22,9 +22,11 @@ from pyspark.sql import functions as F
 
 from sparkfusion.operators.partitioning import (
     _input_meta,
+    copartition_for_compute,
     repartition_for_compute,
     spread_for_compute,
 )
+from sparkfusion.session import scoped_conf
 
 
 @pytest.fixture(scope="module")
@@ -80,6 +82,19 @@ def test_cap_is_derived_not_constant(spark, tmp_path):
     df = spark.read.parquet(path)
     wide = repartition_for_compute(df, "doc_id", min_rows_per_part=100)
     assert wide.rdd.getNumPartitions() >= cores
+
+
+def test_copartition_shares_the_wider_width(spark, small_parquet):
+    # both sides of a bucket join get ONE explicit width — the wider side's
+    # — so they stay co-partitioned; a file-less side counts as narrow
+    df = spark.read.parquet(small_parquet)
+    narrow = spark.range(10).select((F.col("id") % 7).alias("grp"))
+    with scoped_conf(spark, "spark.sql.files.maxPartitionBytes", "64"):
+        wide_splits = _input_meta(df)[0]
+        left, right = copartition_for_compute(df, narrow, "grp")
+    assert wide_splits > spark.sparkContext.defaultParallelism
+    assert left.rdd.getNumPartitions() == wide_splits
+    assert right.rdd.getNumPartitions() == wide_splits
 
 
 def test_input_meta_reads_parquet_rows(spark, small_parquet):

@@ -9,6 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparkfusion.errors import PlanError
+from sparkfusion.operators.projection import zip_with_index_df
 from sparkfusion.operators.ranks import global_rank, ranged_cumsum
 
 
@@ -146,6 +147,20 @@ def test_internal_column_collision_raises(spark, col):
         global_rank(df, "v")
     with pytest.raises(PlanError, match="collision"):
         ranged_cumsum(df, "v", ["id"])
+    with pytest.raises(PlanError, match="collision"):
+        zip_with_index_df(df)
+
+
+def test_zip_with_index_df_keeps_caller_columns(spark):
+    """zip_with_index_df's own ordinal column is rejected; a caller column
+    that is not a working column, such as ``__off``, passes through with
+    its values."""
+    df = _vals_df(spark)
+    with pytest.raises(PlanError, match="collision on __mid"):
+        zip_with_index_df(df.withColumn("__mid", F.lit(1)))
+    rows = zip_with_index_df(df.withColumn("__off", F.col("v") * 2)).collect()
+    assert {(r["id"], r["__off"]) for r in rows} == {(r.id, r.v * 2) for r in df.collect()}
+    assert sorted(r.pk for r in rows) == list(range(len(rows)))
 
 
 def test_no_single_partition_window_in_plan(spark):

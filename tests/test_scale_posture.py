@@ -50,13 +50,20 @@ CROSSJOIN_ALLOWED = {
 #: bounded or why the serial form is the documented contract. The scale
 #: alternative for genuine total orders is operators/ranks.py.
 GLOBAL_WINDOW_ALLOWED = {
-    "operators/ranks.py": "the offsets frame: one row per partition by construction",
-    "operators/projection.py": "add_pk documented-serial (scale variant zip_with_index_df); zip_with_index_df/add_column windows run over #partitions-row count frames or reference-parity ordinals",
+    "operators/ranks.py": "partition_offsets' offsets frame: one row per partition by construction",
+    "operators/projection.py": "add_pk_to_df documented-serial (scale variant zip_with_index_df); add_column's reference-parity ordinals",
     "operators/timeseries.py": "rolling trend over the period-cardinality bucket frame (docstring-bounded)",
-    "llm/text.py": "pack_sequences offsets frame: one row per partition",
     "suite/curation_suite.py": "boot1 ranks B bootstrap replicate means (B<=32; tok2's vocab rank moved to operators/ranks.global_rank in r11)",
     "suite/analytics_suite.py": "pop1 lag over the day frame; abc1 pareto cumsum over part aggregate (bounded rollups; rfm1's NTILEs moved to operators/ranks.global_ntile in r11)",
     "suite/llm_suite.py": "qf1 sweep over ~10 threshold buckets; ret1 re-ranks two limit(100) frames",
+}
+
+#: files allowed to call ``spark_partition_id(`` — a total order over rows
+#: goes through ``ranks.partition_offsets``, which tags the partition ids
+#: and materializes them once, so every branch sees the same ids
+PARTITION_ID_ALLOWED = {
+    "operators/ranks.py": "partition_offsets: the one owner of the partition-offset scheme",
+    "operators/joins.py": "salted_join: the left row's partition id picks its salt",
 }
 
 #: files allowed to call ``.conf.unset(`` — the save/restore of a session
@@ -351,4 +358,33 @@ def test_table_metadata_has_one_owner():
                 bad.append(f"{rel}:{line} parquet footer open")
     assert not bad, f"table metadata resolved outside its owner: {bad}"
     stale = (set(STAR_READ_ALLOWED) - seen_read) | (set(FOOTER_READ_ALLOWED) - seen_footer)
+    assert not stale, f"stale allowlist rows: {sorted(stale)}"
+
+
+def _partition_id_sites(full):
+    """Calls of ``spark_partition_id(...)``, however imported."""
+    with open(full) as f:
+        tree = ast.parse(f.read())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name == "spark_partition_id":
+                yield node.lineno
+
+
+def test_partition_offsets_have_one_owner():
+    """A ``spark_partition_id()`` tag outside its owner fails here: number
+    rows, rank or prefix-sum over a total order through
+    ``ranks.partition_offsets``. Allowlisted files must still make the call,
+    so a stale row cannot linger."""
+    bad, seen = [], set()
+    for full, rel in _pkg_files():
+        for line in _partition_id_sites(full):
+            if rel in PARTITION_ID_ALLOWED:
+                seen.add(rel)
+            else:
+                bad.append(f"{rel}:{line}")
+    assert not bad, f"spark_partition_id outside its owner: {bad}"
+    stale = set(PARTITION_ID_ALLOWED) - seen
     assert not stale, f"stale allowlist rows: {sorted(stale)}"

@@ -96,17 +96,16 @@ def test_add_column_plan_has_no_count_jobs(spark):
 
 
 def test_zip_with_index_variants_contiguous(spark):
-    # both the RDD and the Connect-safe DataFrame variants must assign a
-    # contiguous 0..n-1 key across partitions
-    from sparkfusion.operators import zip_with_index, zip_with_index_df
+    # the Connect-safe DataFrame variant must assign a contiguous 0..n-1 key
+    # across partitions
+    from sparkfusion.operators import zip_with_index_df
 
     df = spark.range(0, 1000, 1, 8).select(F.col("id").alias("x"))
-    for fn in (zip_with_index, zip_with_index_df):
-        out = fn(df, "pk")
-        pks = sorted(r.pk for r in out.collect())
-        assert pks == list(range(1000)), fn.__name__
-        # key follows partition order: within the same layout, x==pk here
-        assert all(r.x == r.pk for r in fn(df, "pk").collect()), fn.__name__
+    out = zip_with_index_df(df, "pk")
+    pks = sorted(r.pk for r in out.collect())
+    assert pks == list(range(1000))
+    # key follows partition order: within the same layout, x==pk here
+    assert all(r.x == r.pk for r in zip_with_index_df(df, "pk").collect())
 
 
 def test_p13b_zip_with_index_no_global_sort(spark, sf_dir):
