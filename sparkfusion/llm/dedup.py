@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.iterate import _release, iterate
 from ..operators.partitioning import repartition_for_compute
 
 from .text import fingerprint, words
@@ -379,11 +380,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     groupBy over the EDGE list, which only holds near-dup pairs and is orders
     of magnitude smaller than the corpus); (2) pointer jumping — every node
     relabels through its label's own label (path halving), so convergence is
-    O(log diameter) rounds, not O(diameter). Every round's labels go through
-    ``localCheckpoint`` — iterative self-referencing plans MUST truncate
-    lineage or per-round analysis cost grows without bound (the canonical
-    Spark iterative-algorithm trap: plain ``cache()`` does not cut the
-    logical plan).
+    O(log diameter) rounds, not O(diameter). The rounds run through
+    :func:`sparkfusion.operators.iterate.iterate`, which checkpoints every
+    round's labels once and releases the earlier rounds and the edge list;
+    the returned frame is the final round's checkpoint.
 
     Raises ``RuntimeError`` after ``max_iter`` unconverged rounds rather than
     silently returning partial components.
@@ -395,15 +395,14 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     (which shuffled the whole label set again). The sum runs in DECIMAL(38)
     so billions of 64-bit ids cannot overflow.
     """
-    # materialize the pair pipeline ONCE before symmetrizing: the union reads
-    # `half` twice, and without this checkpoint the (potentially expensive —
-    # MinHash/LSH) upstream subtree executes twice (measured 2x on
-    # dedup_minhash_clusters at sf0.1)
-    half = pairs.select(
-        F.col("id_a").alias("s"), F.col("id_b").alias("d")
-    ).localCheckpoint()
+    # symmetrize in one pass over the (potentially expensive — MinHash/LSH)
+    # pair pipeline: a union of two projections of it runs it twice
+    # (measured 2x on dedup_minhash_clusters at sf0.1)
     edges = (
-        half.union(half.select(F.col("d").alias("s"), F.col("s").alias("d")))
+        pairs.selectExpr(
+            "inline(array(named_struct('s', id_a, 'd', id_b),"
+            " named_struct('s', id_b, 'd', id_a)))"
+        )
         .distinct()
         .localCheckpoint()
     )
@@ -411,7 +410,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
         edges.select(F.col("s").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
 
     def _label_sum(frame: DataFrame):
@@ -419,8 +418,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
         ).head()["s"]
 
-    prev_sum = _label_sum(labels)
-    for _ in range(max_iter):
+    def step(labels: DataFrame) -> DataFrame:
         nbr_min = (
             edges.join(labels, edges["s"] == labels["node"])
             .groupBy(edges["d"].alias("node"))
@@ -437,25 +435,22 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
         roots = stepped.select(
             F.col("node").alias("component"), F.col("component").alias("__root")
         )
-        # lazy checkpoint: the convergence count below is the action that
-        # materializes it — one job per round instead of two
-        new_labels = (
-            stepped.join(roots, "component", "left")
-            .select(
-                "node", F.coalesce("__root", F.col("component")).alias("component")
-            )
-            .localCheckpoint(eager=False)
+        return stepped.join(roots, "component", "left").select(
+            "node", F.coalesce("__root", F.col("component")).alias("component")
         )
-        # materializing action for the lazy checkpoint AND the convergence
-        # test in one job: the label sum strictly decreases until fixpoint
-        new_sum = _label_sum(new_labels)
-        labels.unpersist()
-        labels = new_labels
-        if new_sum == prev_sum:
-            edges.unpersist()
-            return labels
-        prev_sum = new_sum
-    edges.unpersist()
+
+    sums = [_label_sum(labels)]
+
+    def converged(labels: DataFrame) -> bool:
+        # the round's one job: it materializes the lazy checkpoint AND tests
+        # convergence — the label sum strictly decreases until fixpoint
+        sums.append(_label_sum(labels))
+        return sums[-1] == sums[-2]
+
+    labels = iterate(labels, step, max_iter, until=converged, invariants=(edges,))
+    if len(sums) > 1 and sums[-1] == sums[-2]:
+        return labels
+    _release(labels)
     raise ConvergenceError(
         f"connected_components: no convergence in {max_iter} rounds "
         "(component diameter exceeds 2^rounds — raise max_iter or pre-split)"

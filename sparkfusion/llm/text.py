@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.iterate import _release, iterate
 from ..operators.partitioning import repartition_for_compute
 from ..operators.ranks import partition_offsets
 from ..errors import PlanError
@@ -391,23 +392,29 @@ def bpe_pair_counts(df, id_col: str = "doc_id", text_col: str = "text", k: int =
     of raw text, which this function's word explode reduces to on its first
     aggregation.
     """
-    pairs = (
-        repartition_for_compute(df, id_col)
-        .select(F.explode(words(F.lower(F.col(text_col)))).alias("word"))
+    word_freq = repartition_for_compute(df, id_col).select(
+        F.explode(words(F.lower(F.col(text_col)))).alias("word"),
+        F.lit(1).cast("long").alias("wn"),
+    )
+    return _ranked_pairs(word_freq).limit(k)
+
+
+def _ranked_pairs(word_freq: DataFrame) -> DataFrame:
+    """``(pair, n)``: the adjacent character pairs of ``(word, wn)``
+    weighted by ``wn``, in (n DESC, pair) order."""
+    return (
         # single-char words emit no pairs — and Spark's sequence(1, 0) counts
         # DOWN rather than being empty, so the guard is load-bearing
-        .filter(F.length("word") >= 2)
+        word_freq.filter(F.length("word") >= 2)
         .select(
             F.explode(
                 F.expr("transform(sequence(1, length(word) - 1), i -> substring(word, i, 2))")
-            ).alias("pair")
+            ).alias("pair"),
+            "wn",
         )
-    )
-    return (
-        pairs.groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .groupBy("pair")
+        .agg(F.sum("wn").alias("n"))
         .orderBy(F.col("n").desc(), "pair")
-        .limit(k)
     )
 
 
@@ -427,8 +434,8 @@ def bpe_train_merges(df, id_col: str, text_col: str, iters: int = 2):
     Each round is one map-side-combinable groupBy + a 1-row
     TakeOrderedAndProject collect (bounded driver scalar, the sanctioned
     iterative-convergence pattern), and the rewritten frequency table is
-    ``localCheckpoint``-ed so lineage cannot accrete across rounds
-    (CLAUDE.md iterative-algorithm rule). Returns (merge_rank, pair, n).
+    checkpointed once per round (:mod:`sparkfusion.operators.iterate`) so
+    lineage cannot accrete across rounds. Returns (merge_rank, pair, n).
     """
     from ..operators.localrel import inline_rows
 
@@ -453,38 +460,24 @@ def _bpe_merges_list(
         .localCheckpoint(eager=False)
     )
     merges: list[tuple[int, str, int]] = []
-    for i in range(iters):
-        rows = (
-            word_freq.filter(F.length("word") >= 2)
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, length(word) - 1),"
-                        " i -> substring(word, i, 2))"
-                    )
-                ).alias("pair"),
-                "wn",
-            )
-            .groupBy("pair")
-            .agg(F.sum("wn").alias("n"))
-            .orderBy(F.col("n").desc(), "pair")
-            .limit(1)
-            .collect()
-        )
-        if not rows:  # corpus fully merged to 1-char words (or empty): done
-            break
-        top = rows[0]
-        merges.append((i + 1, top["pair"], int(top["n"])))
-        # eager=False (CLAUDE.md iterative rule): the next round's top-pair
-        # collect is the materializing action — no extra checkpoint job
-        word_freq = (
-            word_freq.withColumn(
-                "word", F.replace(F.col("word"), F.lit(top["pair"]), F.lit(chr(ord("A") + i)))
-            )
-            .groupBy("word")
-            .agg(F.sum("wn").alias("wn"))
-            .localCheckpoint(eager=False)
-        )
+
+    def pick(freq: DataFrame) -> bool:
+        # the round's one job: it appends the top pair to `merges` and fills
+        # freq's lazy checkpoint; True once training is done
+        rows = _ranked_pairs(freq).limit(1).collect()
+        if rows:  # none once the corpus is all 1-char words (or empty)
+            merges.append((len(merges) + 1, rows[0]["pair"], int(rows[0]["n"])))
+        return not rows or len(merges) == iters
+
+    def merge_top(freq: DataFrame) -> DataFrame:
+        rank, pair, _n = merges[-1]
+        token = F.lit(chr(ord("A") + rank - 1))
+        word = F.replace(F.col("word"), F.lit(pair), token)
+        return freq.withColumn("word", word).groupBy("word").agg(F.sum("wn").alias("wn"))
+
+    if iters > 0 and not pick(word_freq):
+        word_freq = iterate(word_freq, merge_top, iters - 1, until=pick)
+    _release(word_freq)
     return merges
 
 

@@ -1,10 +1,10 @@
-"""Graph operators: fixed-iteration PageRank with engine-stable numerics.
+"""Graph operators: PageRank, BFS, SSSP and k-core with engine-stable numerics.
 
 Complements the connected-components operator in :mod:`sparkfusion.llm.dedup`
-(min-label propagation) with the other canonical iterative graph algorithm.
-Built as a driver-side loop over pure DataFrame plans, with
-``localCheckpoint`` truncating lineage each round (CLAUDE.md: plain cache()
-leaves per-round analysis cost growing superlinearly).
+(min-label propagation) with the other canonical iterative graph algorithms.
+Each is a driver-side loop over pure DataFrame plans run by
+:func:`sparkfusion.operators.iterate.iterate`, which checkpoints every round
+and releases what the loop persisted; the result is the final checkpoint.
 
 Numeric determinism (the interesting part — float PageRank is NOT
 reproducible across partitionings or engines: per-node contribution sums
@@ -20,8 +20,40 @@ full reproducibility — the same trick as the int8-quantized top-k
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import partial
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .iterate import iterate
+from .partitioning import repartition_for_compute
+
+
+def _degree_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct ``(src, dst, deg)`` edges, hash-partitioned on ``src``. Both
+    PageRanks cache it: the cached frame's outputPartitioning survives
+    InMemoryTableScan, so each round's rank join shuffles only the n-row
+    ranks frame, never the m-row edge list (r9 A/B of the g1 drift)."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    return repartition_for_compute(e.join(deg, "src"), "src")
+
+
+def _rank_round(
+    e_deg: DataFrame, nodes: DataFrame, teleport: Column, damping_pct: int, ranks: DataFrame
+) -> DataFrame:
+    """One fixed-point rank round of both PageRanks: ``rank' = teleport +
+    (damping_pct * Σ rank div out_degree) div 100`` for every node."""
+    contrib = e_deg.join(ranks.withColumnRenamed("node", "src"), "src").select(
+        F.col("dst").alias("node"), F.expr("rank_fp div deg").alias("c")
+    )
+    sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
+    return nodes.join(sums, "node", "left").select(
+        "node",
+        (teleport + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100"))
+        .cast("long")
+        .alias("rank_fp"),
+    )
 
 
 def pagerank(
@@ -45,53 +77,18 @@ def pagerank(
     10^scale for display.
     """
     one = 10**scale
-    # cache the loop-invariant frames: each iteration is a separate query
-    # execution (localCheckpoint), so without persistence the edge-build
-    # pipeline (scan + distinct shuffle + degree agg) would re-run every
-    # round. At 100 TB the edge list spills to disk serialized — still far
-    # cheaper than re-deriving it per iteration.
-    #
-    # Degrees are pre-joined into the edge list ONCE and the result is
-    # cached hash-partitioned on the join key (r9 A/B of the g1 drift):
-    # the cached frame's outputPartitioning survives InMemoryTableScan, so
-    # each iteration's rank join shuffles only the n-row ranks frame — the
-    # m-row edge list is never re-shuffled inside the loop. At 100 TB
-    # m >> n, so this moves the per-iteration shuffle from O(m) to O(n).
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    e_deg = e.join(deg, "src").repartition(n_parts, "src").cache()
-    # nodes reads the CACHED e_deg (same src set: every src in e has a
-    # degree), so the scan+distinct edge-build pipeline runs exactly once —
-    # nodes.count() below populates both caches in one pass. (r14 A/B: an
-    # explicit repartition(n_parts, "node") before the cache — intended to
-    # let the per-iteration left join reuse the partitioning — measured
-    # SLOWER at bench scale, 1.87s → 2.07s: the distinct's own output
-    # partitioning already feeds the join, and the extra exchange at cache
-    # build is pure cost. Left as-is.)
+    # cache the loop-invariant frames, or every round re-runs the edge build
+    e_deg = _degree_edges(edges, src, dst).cache()
+    # nodes reads the CACHED e_deg (every src in e has a degree), so the edge
+    # build runs once and nodes.count() fills both caches in one pass. (r14
+    # A/B: repartitioning nodes on "node" before the cache measured SLOWER,
+    # 1.87s → 2.07s — the distinct's own partitioning already feeds the join.)
     nodes = e_deg.select("src").distinct().withColumnRenamed("src", "node").cache()
     n_nodes = nodes.count()  # one scalar action; N parameterizes the formula
-    init_fp = one // n_nodes
-    teleport_fp = ((100 - damping_pct) * one) // (100 * n_nodes)
-    ranks = nodes.withColumn("rank_fp", F.lit(init_fp).cast("long"))
-    for _ in range(iterations):
-        contrib = e_deg.join(ranks.withColumnRenamed("node", "src"), "src").select(
-            F.col("dst").alias("node"),
-            F.expr("rank_fp div deg").alias("c"),
-        )
-        sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(sums, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(teleport_fp)
-                    + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
-                ).cast("long").alias("rank_fp"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    ranks = nodes.withColumn("rank_fp", F.lit(one // n_nodes).cast("long"))
+    teleport = F.lit(((100 - damping_pct) * one) // (100 * n_nodes))
+    step = partial(_rank_round, e_deg, nodes, teleport, damping_pct)
+    return iterate(ranks, step, iterations, invariants=(e_deg, nodes))
 
 
 def triangle_count(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
@@ -179,47 +176,20 @@ def bfs_distances(
     Frontier discipline (the 100 TB part): each round expands ONLY the nodes
     first reached in the previous round — never the whole visited set — so
     round ``i``'s join cost is proportional to the frontier boundary, not to
-    everything seen so far. Unit edge weights make frontier-BFS equal to
-    full min-distance propagation, which is what the unrolled SQL oracle
-    computes. Per-round ``localCheckpoint(eager=False)`` truncates lineage
-    (CLAUDE.md iterative-algorithm rule); the edge list is cached once and
-    reused every round. Fixed ``max_hops`` keeps the plan depth bounded and
-    the result deterministic — no convergence race, no count() actions in
-    the loop.
+    everything seen so far. That is :func:`sssp_distances` with unit
+    weights: a node first reached at hop ``h`` is exactly the node whose
+    distance improved in round ``h``, and the min-plus distance is the hop
+    count the unrolled SQL oracle computes. Fixed ``max_hops`` keeps the
+    plan depth bounded and the result deterministic — no convergence race,
+    no count() in the loop.
 
     Returns ``(node, dist)`` with ``dist`` INT in ``[0, max_hops]``; seed
     nodes absent from the edge list still appear at dist 0 (isolated
     sources), unreached nodes are absent.
     """
-    # cached hash-partitioned on the per-round join key (same rationale as
-    # pagerank's e_deg): the frontier join then shuffles only the frontier
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .repartition(n_parts, "src")
-        .cache()
-    )
-    visited = (
-        seeds.select(F.col(node).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("int"))
-    )
-    frontier = visited.select("node")
-    for hop in range(1, max_hops + 1):
-        neighbors = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        fresh = (
-            neighbors.join(visited, "node", "left_anti")
-            .select("node", F.lit(hop).cast("int").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        visited = visited.unionByName(fresh).localCheckpoint(eager=False)
-        frontier = fresh.select("node")
-    return visited
+    unit = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), F.lit(1).alias("w"))
+    out = sssp_distances(unit, seeds, node=node, rounds=max_hops)
+    return out.select("node", F.col("dist").cast("int").alias("dist"))
 
 
 def sssp_distances(
@@ -244,8 +214,8 @@ def sssp_distances(
     the per-round join cost is proportional to the improving boundary, not
     the visited set. Integer weights keep every distance an exact BIGINT:
     no float min-plus accumulation, bit-identical on any engine or
-    partitioning. Per-round ``localCheckpoint(eager=False)`` truncates
-    lineage; the weighted edge list is cached once.
+    partitioning. The one ``(node, dist, is_improved)`` state is
+    checkpointed per round; the weighted edge list is cached once.
 
     Returns ``(node, dist)`` with ``dist`` BIGINT; unreached nodes absent.
     """
@@ -257,18 +227,21 @@ def sssp_distances(
         )
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))  # parallel edges: only the lightest matters
-        # hash-partitioned on the per-round join key (pagerank e_deg
-        # rationale): each relaxation round shuffles only the frontier
-        .repartition(edges.sparkSession.sparkContext.defaultParallelism, "src")
-        .cache()
     )
-    dist = (
+    # cached hash-partitioned on the per-round join key (pagerank e_deg
+    # rationale): each relaxation round shuffles only the frontier
+    e = repartition_for_compute(e, "src").cache()
+    merged = (
         seeds.select(F.col(node).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
+        .withColumn("is_improved", F.lit(True))
     )
-    improved = dist
-    for _ in range(rounds):
+
+    def relax(merged: DataFrame) -> DataFrame:
+        # the frontier and the distances are views of one checkpointed state:
+        # checkpointing them apart ran each round's join twice (r13 profile)
+        improved = merged.filter("is_improved")
         cand = (
             improved.join(e, improved["node"] == e["src"])
             .select(
@@ -278,21 +251,16 @@ def sssp_distances(
             .groupBy("node")
             .agg(F.min("cand").alias("cand"))
         )
-        # ONE checkpoint per round: `dist` and `improved` are both cheap
-        # views of the same merged frame — checkpointing them separately
-        # re-executed the round's relax join + full_outer merge twice per
-        # round (r13 profile: every round's join stage appeared 2x)
-        merged = dist.join(cand, "node", "full_outer").select(
+        return merged.select("node", "dist").join(cand, "node", "full_outer").select(
             "node",
             F.least(F.col("dist"), F.col("cand")).alias("dist"),
             (
                 F.col("dist").isNull()
                 | (F.col("cand").isNotNull() & (F.col("cand") < F.col("dist")))
             ).alias("is_improved"),
-        ).localCheckpoint(eager=False)
-        dist = merged.select("node", "dist")
-        improved = merged.filter("is_improved").select("node", "dist")
-    return dist
+        )
+
+    return iterate(merged, relax, rounds, invariants=(e,)).select("node", "dist")
 
 
 def kcore_peel(
@@ -316,9 +284,8 @@ def kcore_peel(
 
     Scale shape: each round is one degree aggregation (map-side combinable)
     plus two LEFT SEMI joins (never materializing node×edge products), with
-    ``localCheckpoint`` per round so plan lineage stays flat (the CLAUDE.md
-    iterative-algorithm rule). Skewed hubs survive peeling by definition —
-    AQE handles the degree-join skew."""
+    one checkpoint per round so plan lineage stays flat. Skewed hubs survive
+    peeling by definition — AQE handles the degree-join skew."""
     e = (
         edges.filter(F.col(src) != F.col(dst))
         .select(
@@ -335,15 +302,15 @@ def kcore_peel(
             .agg(F.count(F.lit(1)).alias("deg"))
         )
 
-    for _ in range(rounds):
-        keep = degrees(e).filter(F.col("deg") >= k).select("node")
-        e = (
-            e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
+    def peel(ed: DataFrame) -> DataFrame:
+        keep = degrees(ed).filter(F.col("deg") >= k).select("node")
+        return (
+            ed.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=False)
         )
-    return degrees(e)
+
+    return degrees(iterate(e, peel, rounds))
 
 
 def personalized_pagerank(
@@ -360,8 +327,8 @@ def personalized_pagerank(
     recommendation ("items near what this user touched"), seed-expansion
     community detection, and trust propagation. Same fixed-point BIGINT
     arithmetic as :func:`pagerank` (float PPR is not reproducible across
-    partitionings; integer div/mul/add is bit-identical everywhere), same
-    per-iteration shape (one contribution shuffle + localCheckpoint), with
+    partitionings; integer div/mul/add is bit-identical everywhere), the
+    same round (one contribution shuffle + one checkpoint), with
     the teleport term gated on source membership: ``rank' =
     e(v)·teleport_fp + (d·Σ contrib) div 100`` where ``e(v)=1`` iff v is a
     source and ``teleport_fp = ((100−d)·10^scale) div (100·|S|)``.
@@ -371,42 +338,18 @@ def personalized_pagerank(
     (dst-only) are scored too rather than silently dropping their inbound
     mass (r8 advisor finding)."""
     one = 10**scale
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # same shape as pagerank(): degree pre-joined once, cached partitioned
-    # on src, so the loop shuffles only the ranks frame (O(n), not O(m))
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    e_deg = e.join(deg, "src").repartition(n_parts, "src").cache()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .cache()
+    e_deg = _degree_edges(edges, src, dst).cache()
+    # an explicit width: AQE does not coalesce a cached plan, so a bare
+    # distinct would cache spark.sql.shuffle.partitions tiny partitions
+    ends = e_deg.select(F.col("src").alias("node")).unionByName(
+        e_deg.select(F.col("dst").alias("node"))
     )
+    nodes = repartition_for_compute(ends, "node").distinct().cache()
     n_src = len(sources)
-    init_fp = one // n_src
-    teleport_fp = ((100 - damping_pct) * one) // (100 * n_src)
     is_src = F.col("node").isin(list(sources))
-    ranks = nodes.withColumn(
-        "rank_fp",
-        F.when(is_src, F.lit(init_fp)).otherwise(F.lit(0)).cast("long"),
-    )
-    for _ in range(iterations):
-        contrib = e_deg.join(ranks.withColumnRenamed("node", "src"), "src").select(
-            F.col("dst").alias("node"), F.expr("rank_fp div deg").alias("c")
-        )
-        sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(sums, "node", "left")
-            .select(
-                "node",
-                (
-                    F.when(is_src, F.lit(teleport_fp)).otherwise(F.lit(0))
-                    + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
-                )
-                .cast("long")
-                .alias("rank_fp"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    init = F.when(is_src, F.lit(one // n_src)).otherwise(F.lit(0))
+    ranks = nodes.withColumn("rank_fp", init.cast("long"))
+    teleport_fp = ((100 - damping_pct) * one) // (100 * n_src)
+    teleport = F.when(is_src, F.lit(teleport_fp)).otherwise(F.lit(0))
+    step = partial(_rank_round, e_deg, nodes, teleport, damping_pct)
+    return iterate(ranks, step, iterations, invariants=(e_deg, nodes))

@@ -172,3 +172,15 @@ def test_personalized_pagerank_concentrates_near_seeds(spark):
     }
     assert out["a1"] == max(out.values())
     assert min(out[f"a{i}"] for i in range(4)) > max(out[f"b{i}"] for i in range(1, 4))
+
+
+def test_personalized_pagerank_with_every_source_is_pagerank(spark):
+    """Both PageRanks share one rank round: with every node of a symmetric
+    graph as a source, PPR's teleport and initial ranks are PageRank's, so
+    the ranks must be bit-identical."""
+    from sparkfusion.operators.graph import personalized_pagerank
+
+    edges = _sym(spark, [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")])
+    pr = {r["node"]: r["rank_fp"] for r in pagerank(edges, iterations=4).collect()}
+    ppr = personalized_pagerank(edges, sorted(pr), iterations=4).collect()
+    assert {r["node"]: r["rank_fp"] for r in ppr} == pr

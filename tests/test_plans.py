@@ -202,15 +202,25 @@ def test_runtime_bloom_filter_prunes_probe_side(spark, sf_dir):
 
 
 def test_new_joins_no_cartesian(spark, sf_dir):
-    """er1 (fuzzy), j11 (interval overlap), and g1 (pagerank) are equi-join
-    compositions — a CartesianProduct appearing in any of them means the
-    bucket/blocking discipline regressed."""
-    from sparkfusion.suite.analytics_suite import g1_pagerank
+    """er1 (fuzzy), j11 (interval overlap), and a PageRank round over g1's
+    trade graph are equi-join compositions — a CartesianProduct appearing in
+    any of them means the bucket/blocking discipline regressed. g1's own
+    plan only scans its final round's checkpoint, so the round is checked."""
+    from sparkfusion.operators.graph import _degree_edges, _rank_round
+    from sparkfusion.suite.analytics_suite import _trade_edges
     from sparkfusion.suite.llm_suite import er1_fuzzy_name_join
     from sparkfusion.suite.temporal_suite import j11_interval_overlap
 
-    for fn in (er1_fuzzy_name_join, j11_interval_overlap, g1_pagerank):
-        assert "CartesianProduct" not in plan_of(fn(spark, sf_dir))
+    e_deg = _degree_edges(_trade_edges(spark, sf_dir), "src", "dst")
+    nodes = e_deg.select(F.col("src").alias("node")).distinct()
+    ranks = nodes.withColumn("rank_fp", F.lit(1).cast("long"))
+    g1_round = _rank_round(e_deg, nodes, F.lit(0), 85, ranks)
+    for df in (
+        er1_fuzzy_name_join(spark, sf_dir),
+        j11_interval_overlap(spark, sf_dir),
+        g1_round,
+    ):
+        assert "CartesianProduct" not in plan_of(df)
 
 
 def test_dq2_constraint_audit_single_scan(spark, sf_dir):

@@ -66,6 +66,13 @@ PARTITION_ID_ALLOWED = {
     "operators/joins.py": "salted_join: the left row's partition id picks its salt",
 }
 
+#: files allowed to call ``localCheckpoint(`` inside a ``for``/``while``
+#: body — a driver loop goes through ``iterate.iterate``, which owns the
+#: per-round checkpoint and the release of what the loop persisted
+LOOP_CHECKPOINT_ALLOWED = {
+    "operators/iterate.py": "iterate: the one owner of per-round checkpoints and their release",
+}
+
 #: files allowed to call ``.conf.unset(`` — the save/restore of a session
 #: conf has one owner; everything else scopes confs through it
 CONF_UNSET_ALLOWED = {
@@ -387,4 +394,39 @@ def test_partition_offsets_have_one_owner():
                 bad.append(f"{rel}:{line}")
     assert not bad, f"spark_partition_id outside its owner: {bad}"
     stale = set(PARTITION_ID_ALLOWED) - seen
+    assert not stale, f"stale allowlist rows: {sorted(stale)}"
+
+
+def _loop_checkpoint_sites(full):
+    """Lines of ``localCheckpoint(...)`` calls inside a ``for``/``while``."""
+    with open(full) as f:
+        tree = ast.parse(f.read())
+    sites = set()
+    for loop in ast.walk(tree):
+        if isinstance(loop, (ast.For, ast.While)):
+            for node in ast.walk(loop):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "localCheckpoint"
+                ):
+                    sites.add(node.lineno)
+    return sorted(sites)
+
+
+def test_iterative_loops_have_one_owner():
+    """A hand-written checkpoint-per-round loop outside its owner fails
+    here: run the loop through ``operators.iterate.iterate``, which
+    checkpoints each round once and releases the rounds and loop-invariant
+    frames the loop persisted. Allowlisted files must still make the call,
+    so a stale row cannot linger."""
+    bad, seen = [], set()
+    for full, rel in _pkg_files():
+        for line in _loop_checkpoint_sites(full):
+            if rel in LOOP_CHECKPOINT_ALLOWED:
+                seen.add(rel)
+            else:
+                bad.append(f"{rel}:{line}")
+    assert not bad, f"localCheckpoint in a loop outside iterate.py: {bad}"
+    stale = set(LOOP_CHECKPOINT_ALLOWED) - seen
     assert not stale, f"stale allowlist rows: {sorted(stale)}"
