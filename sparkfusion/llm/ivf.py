@@ -1,7 +1,7 @@
 """IVF (inverted-file) approximate nearest-neighbor search.
 
 The second ANN scale path next to sign-bucket LSH (:mod:`.similarity`):
-a coarse quantizer (seeded KMeans over a sample) partitions the corpus into
+a coarse quantizer (k-means over the corpus) partitions the corpus into
 cells; a query probes only the ``nprobe`` nearest cells, scanning
 ``~nprobe/k`` of the data. This is the classic IVF-Flat layout: at 100 TB the
 assigned corpus is written partitioned by ``cell`` so a probe is a partition-
@@ -12,9 +12,11 @@ pinned-constant-goes-superlinear class the r12 sf1 sweep caught in
 semdedup/cosine_pairs; the suite's small fixed k exists only for the
 deterministic oracle).
 
-KMeans is iterative → not SQL-expressible; the suite query is registered
-rows-only (the driver's weaker check), while recall vs the exact scan is
-asserted in tests.
+The trainer is :func:`..operators.kmeans.lloyd_centroids`, the exact
+quantized-integer Lloyd's the km1 oracle checks bit for bit, so the
+production quantizer is reproducible on any partitioning. The suite query
+still uses :func:`ivf_seeded_topk`'s SQL-nameable quantizer, whose oracle
+needs no unrolled Lloyd's; recall vs the exact scan is asserted in tests.
 """
 
 from __future__ import annotations
@@ -30,30 +32,35 @@ def ivf_build(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     k: int = 16,
-    seed: int = 42,
+    iterations: int = 10,
 ) -> tuple[DataFrame, DataFrame]:
     """Train the coarse quantizer and assign every vector to a cell.
 
     Returns ``(assigned, centroids)``: the corpus with a ``cell`` column, and
-    the k centroid vectors as ``(cell, centroid array<double>)``. Seeded →
-    deterministic. Training cost is one MLlib KMeans over the corpus (sample
-    at real scale; the assignment pass is a broadcast-join-free transform).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    the k centroid vectors as ``(cell, centroid array<double>)``. Training is
+    ``iterations`` rounds of quantized Lloyd's (components rounded to 10^-6,
+    initialized from the ``k`` smallest ids), so the cells are
+    deterministic; the assignment is one map-only argmin against the final
+    centroids, joined back to the corpus on the id."""
+    from ..operators.kmeans import (
+        _LITERAL_ARGMIN_MAX_K,
+        assign_quantized,
+        lloyd_centroids,
+        quantize_points,
+    )
 
-    featurized = df.select(
-        F.col(id_col),
-        F.col(emb_col),
-        array_to_vector(F.col(emb_col).cast("array<double>")).alias("features"),
+    # kmeans_quantized's scale: exact int64 distances to d ≈ 9000 at unit
+    # norm (kmeans.check_quantization_envelope)
+    scale = 6
+    pts = quantize_points(df, id_col, emb_col, scale, spread=k <= _LITERAL_ARGMIN_MAX_K)
+    cents = lloyd_centroids(pts, k, iterations)
+    cells = assign_quantized(pts, cents).select(
+        F.col("vec_id").alias(id_col), F.col("cid").alias("cell")
     )
-    model = KMeans(k=k, seed=seed, featuresCol="features", predictionCol="cell").fit(
-        featurized
-    )
-    assigned = model.transform(featurized).select(id_col, emb_col, "cell")
-    spark = df.sparkSession
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
+    assigned = df.select(id_col, emb_col).join(cells, id_col)
+    q = 10**scale
+    centroids = df.sparkSession.createDataFrame(
+        [(i, [v / q for v in c]) for i, c in enumerate(cents)],
         "cell int, centroid array<double>",
     )
     return assigned, centroids
@@ -90,9 +97,9 @@ def ivf_seeded_topk(
     the centroids are the embeddings of the first ``n_cells`` ids (a
     degenerate but fully SQL-expressible KMeans init — both engines can name
     the exact same centroid rows, so assignment, probe selection, and ranking
-    are cross-engine reproducible). :func:`ivf_build`'s seeded KMeans is the
-    production quantizer (better-balanced cells); its recall and determinism
-    are covered in tests/test_ivf.py. Same plan shape either way: broadcast
+    are cross-engine reproducible). :func:`ivf_build`'s Lloyd's-trained
+    quantizer is the production one (better-balanced cells); its recall is
+    covered in tests/test_ivf.py. Same plan shape either way: broadcast
     centroids, argmin-assign (one map pass), probe = ``nprobe`` nearest cells
     by centroid cosine, rank only vectors in probed cells.
 

@@ -2,12 +2,13 @@
 arithmetic — the fourth iterative algorithm next to PageRank / BFS / SSSP in
 :mod:`.graph` and the label-propagation CC in ``llm/dedup.py``.
 
-Why a hand-rolled Lloyd's when ``llm/ivf.py`` already wraps MLlib KMeans:
-MLlib's float centroids are not reproducible across engines (or even across
-partitionings — per-cluster component sums change addition order), so the IVF
-suite query had to fall back to a degenerate 0-iteration quantizer for its
-oracle. This module makes REAL Lloyd's iterations engine-exact by working in
-quantized integer space end-to-end:
+Why a hand-rolled Lloyd's rather than MLlib KMeans: MLlib's float centroids
+are not reproducible across engines (or even across partitionings —
+per-cluster component sums change addition order), so the IVF suite query
+had to fall back to a degenerate 0-iteration quantizer for its oracle. This
+module makes REAL Lloyd's iterations engine-exact by working in quantized
+integer space end-to-end (``llm/ivf.ivf_build`` trains its coarse quantizer
+with it too):
 
 - points are quantized once: ``xq_i = CAST(round(x_i * 10^scale) AS BIGINT)``
   (both engines round half away from zero; float32→double is exact);

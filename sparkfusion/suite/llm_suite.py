@@ -1002,9 +1002,9 @@ def sim_rp_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-Flat ANN top-k, deterministic data-derived quantizer (centroids =
     embeddings of vec_id 0..7, nprobe=2) — fully oracle-checkable because
-    both engines name the exact same centroid rows. The seeded-KMeans
+    both engines name the exact same centroid rows. The Lloyd's-trained
     quantizer (:func:`sparkfusion.llm.ivf.ivf_build`) is the production
-    trainer; its recall/determinism are asserted in tests/test_ivf.py."""
+    trainer; its recall is asserted in tests/test_ivf.py."""
     from ..llm.ivf import ivf_seeded_topk
 
     emb = table(spark, sf_dir, "embeddings")

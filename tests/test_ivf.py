@@ -11,7 +11,7 @@ from sparkfusion.session import table
 
 def test_ivf_build_assigns_all(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
-    assigned, centroids = ivf_build(emb, k=8, seed=42)
+    assigned, centroids = ivf_build(emb, k=8)
     assert assigned.count() == emb.count()
     assert centroids.count() == 8
     cells = {r.cell for r in assigned.select("cell").distinct().collect()}
@@ -22,7 +22,7 @@ def test_ivf_recall_vs_exact(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0)
     exact = {r.vec_id for r in brute_force_topk(emb, q, k=10).collect()}
-    assigned, centroids = ivf_build(emb, k=8, seed=42)
+    assigned, centroids = ivf_build(emb, k=8)
     # full probe (nprobe = k) must reproduce the exact scan
     full = {r.vec_id for r in ivf_topk(assigned, centroids, q, k=10, nprobe=8).collect()}
     assert full == exact

@@ -99,6 +99,13 @@ FOOTER_READ_ALLOWED = {
     "sources/s3py.py": "the S3 reader opens remote objects, which have no local stat",
 }
 
+#: files allowed to set the driver JVM's launch options
+#: (``spark.driver.defaultJavaOptions``, the class-data-sharing archive
+#: flags) or to write ``SPARK_CONF_DIR``
+JVM_LAUNCH_ALLOWED = {
+    "session.py": "_jvm_launch: the one owner of the driver JVM's launch options",
+}
+
 
 def _walk_calls(path):
     with open(path) as f:
@@ -429,4 +436,56 @@ def test_iterative_loops_have_one_owner():
                 bad.append(f"{rel}:{line}")
     assert not bad, f"localCheckpoint in a loop outside iterate.py: {bad}"
     stale = set(LOOP_CHECKPOINT_ALLOWED) - seen
+    assert not stale, f"stale allowlist rows: {sorted(stale)}"
+
+
+#: text that sets a driver JVM launch option
+_JVM_LAUNCH_TOKENS = ("defaultJavaOptions", "SharedArchiveFile", "ArchiveClassesAtExit")
+
+
+def _jvm_launch_sites(full):
+    """Lines of string literals naming a JVM launch option, and of writes to
+    ``SPARK_CONF_DIR``: an assignment or ``del`` of ``<x>["SPARK_CONF_DIR"]``,
+    a ``SPARK_CONF_DIR=`` keyword, or ``setdefault``/``pop``/``putenv``/
+    ``unsetenv`` called with it."""
+    with open(full) as f:
+        tree = ast.parse(f.read())
+
+    def names_conf_dir(node):
+        return isinstance(node, ast.Constant) and node.value == "SPARK_CONF_DIR"
+
+    sites = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if any(t in node.value for t in _JVM_LAUNCH_TOKENS):
+                sites.add(node.lineno)
+        elif isinstance(node, (ast.Assign, ast.AugAssign, ast.Delete)):
+            targets = node.targets if isinstance(node, (ast.Assign, ast.Delete)) else [node.target]
+            if any(isinstance(t, ast.Subscript) and names_conf_dir(t.slice) for t in targets):
+                sites.add(node.lineno)
+        elif isinstance(node, ast.Call):
+            if any(k.arg == "SPARK_CONF_DIR" for k in node.keywords):
+                sites.add(node.lineno)
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name in ("setdefault", "pop", "putenv", "unsetenv") and node.args and names_conf_dir(node.args[0]):
+                sites.add(node.lineno)
+    return sorted(sites)
+
+
+def test_jvm_launch_options_have_one_owner():
+    """A driver JVM launch option or a ``SPARK_CONF_DIR`` write outside its
+    owner fails here: the class-data-sharing archive needs the classpath and
+    the options to be the same at dump and use, so only
+    ``session._jvm_launch`` sets them. Allowlisted files must still make the
+    call, so a stale row cannot linger."""
+    bad, seen = [], set()
+    for full, rel in _pkg_files():
+        for line in _jvm_launch_sites(full):
+            if rel in JVM_LAUNCH_ALLOWED:
+                seen.add(rel)
+            else:
+                bad.append(f"{rel}:{line}")
+    assert not bad, f"JVM launch options set outside session.py: {bad}"
+    stale = set(JVM_LAUNCH_ALLOWED) - seen
     assert not stale, f"stale allowlist rows: {sorted(stale)}"
