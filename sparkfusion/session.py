@@ -139,18 +139,39 @@ def _conf_dir_inert() -> bool:
         return False
 
 
+#: the launcher's classpath inputs besides the conf dir and ``$SPARK_HOME/jars``
+_CLASSPATH_ENV = (
+    "SPARK_DIST_CLASSPATH",
+    "HADOOP_CONF_DIR",
+    "YARN_CONF_DIR",
+    "SPARK_PREPEND_CLASSES",
+)
+
+
+def _classpath_extra(submit_args: str) -> bool:
+    """Would the launch put anything on the driver's classpath besides the
+    conf dir and the jars: an environment input of Spark's launcher, or a
+    driver class path in ``PYSPARK_SUBMIT_ARGS``? The archive key covers
+    neither, and an archive dumped on another classpath is never mapped."""
+    if any(os.environ.get(var) for var in _CLASSPATH_ENV):
+        return True
+    return "extraClassPath" in submit_args or "--driver-class-path" in submit_args
+
+
 def _jvm_launch_conf() -> tuple[str, str] | None:
     """``(driver java options, conf dir)`` for a driver JVM launched now, or
     None to launch it as Spark would by itself (the rules are
-    :func:`_jvm_launch`'s). Deletes an incomplete archive at the key path,
-    so the JVM writes a new one."""
+    :func:`_jvm_launch`'s). When it asks for a new archive, it first
+    deletes every archive in :data:`JVM_ARCHIVE_DIR`: an incomplete one at
+    the key path, and those of other keys."""
     from pyspark import SparkContext
 
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return None  # a JVM is up already, and its flags are fixed
-    if "spark.driver.defaultJavaOptions" in os.environ.get("PYSPARK_SUBMIT_ARGS", ""):
+    submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    if "spark.driver.defaultJavaOptions" in submit_args:
         return None
-    if not _conf_dir_inert():
+    if not _conf_dir_inert() or _classpath_extra(submit_args):
         return None
     archive = _jvm_archive_path()
     if archive is None or any(c.isspace() for c in archive):
@@ -162,8 +183,10 @@ def _jvm_launch_conf() -> tuple[str, str] | None:
             return None
         if _archive_complete(archive):
             return f"-XX:SharedArchiveFile={archive} -Xshare:auto", conf_dir
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(archive)
+        # the one being replaced, and those of an earlier JDK or jar set
+        for old in glob.glob(os.path.join(JVM_ARCHIVE_DIR, "*.jsa")):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(old)
     except OSError:
         return None
     # the dump warns once per class it leaves out (~600 lines); errors still show
@@ -188,7 +211,8 @@ def _jvm_launch(builder: SparkSession.Builder) -> Iterator[None]:
       on the gateway's stdin, which a Python exit gives). That one process
       starts slower, and its exit takes 10-15 s to write 140-215 MB. A file
       without the magic (a dump killed midway) is deleted first, so a dump
-      cut short cannot disable the archive for good.
+      cut short cannot disable the archive for good; so are the archives of
+      other keys, which a JDK or jar change leaves behind.
     - The options go in ``spark.driver.defaultJavaOptions``;
       ``spark.driver.extraJavaOptions`` adds to them rather than replacing
       them. Nothing is added when a JVM is up already, when the caller set
@@ -201,6 +225,8 @@ def _jvm_launch(builder: SparkSession.Builder) -> Iterator[None]:
       holds nothing Spark reads (only ``*.template`` files, or no dir);
       otherwise no archive is used. ``os.environ`` is restored when the body
       exits; a process another thread starts meanwhile sees the swap.
+    - The key covers the jars but no other classpath input, so no archive is
+      used when the launch has one (:func:`_classpath_extra`).
 
     A deployment bakes the archive into its image by starting one session
     and stopping it cleanly."""

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 
@@ -127,8 +128,11 @@ def test_archive_for_another_classpath_is_ignored(tmp_path):
     archive_dir = tmp_path / ".jvm_archive"
     archive = _key_path(archive_dir)
     archive_dir.mkdir()
+    # the java the key names, so only the classpath differs
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
     subprocess.run(
-        ["java", f"-XX:ArchiveClassesAtExit={archive}", "-Xlog:cds=error",
+        [java, f"-XX:ArchiveClassesAtExit={archive}", "-Xlog:cds=error",
          "-cp", os.path.join(_find_spark_home(), "jars", "*"),
          "org.apache.spark.deploy.SparkSubmit", "--version"],
         check=True, capture_output=True, timeout=120,
@@ -148,7 +152,8 @@ def no_jvm(monkeypatch, tmp_path):
     ``tmp_path`` and no caller launch settings."""
     monkeypatch.setattr(SparkContext, "_gateway", None)
     monkeypatch.setattr(session, "JVM_ARCHIVE_DIR", str(tmp_path / ".jvm_archive"))
-    for var in ("PYSPARK_GATEWAY_PORT", "PYSPARK_SUBMIT_ARGS", "SPARK_CONF_DIR"):
+    for var in ("PYSPARK_GATEWAY_PORT", "PYSPARK_SUBMIT_ARGS", "SPARK_CONF_DIR",
+                *session._CLASSPATH_ENV):
         monkeypatch.delenv(var, raising=False)
     return tmp_path
 
@@ -158,6 +163,23 @@ def test_launch_asks_for_an_archive_by_default(no_jvm):
     assert java_opts.startswith(f"-XX:ArchiveClassesAtExit={session._jvm_archive_path()} ")
     assert conf_dir == os.path.join(session.JVM_ARCHIVE_DIR, "conf")
     assert os.listdir(conf_dir) == []
+
+
+def test_new_archive_request_deletes_other_archives(no_jvm):
+    """Archives of another JDK or jar set go when this key asks for its own;
+    a complete archive for this key is used and leaves them alone."""
+    os.makedirs(session.JVM_ARCHIVE_DIR)
+    other = os.path.join(session.JVM_ARCHIVE_DIR, "0123456789abcdef.jsa")
+    with open(other, "wb") as f:
+        f.write(session._DYNAMIC_ARCHIVE_MAGIC.to_bytes(4, sys.byteorder))
+    archive = session._jvm_archive_path()
+    with open(archive, "wb") as f:
+        f.write(session._DYNAMIC_ARCHIVE_MAGIC.to_bytes(4, sys.byteorder))
+    assert session._jvm_launch_conf()[0].startswith("-XX:SharedArchiveFile=")
+    assert os.path.exists(other)
+    os.remove(archive)
+    assert session._jvm_launch_conf()[0].startswith("-XX:ArchiveClassesAtExit=")
+    assert not os.path.exists(other)
 
 
 def _conf_dir_with_defaults(tmp_path, monkeypatch):
@@ -177,8 +199,30 @@ def _jvm_up(tmp_path, monkeypatch):
     monkeypatch.setattr(SparkContext, "_gateway", object())
 
 
+def _caller_driver_class_path(tmp_path, monkeypatch):
+    monkeypatch.setenv(
+        "PYSPARK_SUBMIT_ARGS", f"--conf spark.driver.extraClassPath={tmp_path} pyspark-shell"
+    )
+
+
+def _classpath_env(var):
+    def setup(tmp_path, monkeypatch):
+        monkeypatch.setenv(var, str(tmp_path))
+
+    setup.__name__ = f"_{var}"
+    return setup
+
+
 @pytest.mark.parametrize(
-    "setup", [_conf_dir_with_defaults, _caller_default_java_options, _jvm_up]
+    "setup",
+    [
+        _conf_dir_with_defaults,
+        _caller_default_java_options,
+        _jvm_up,
+        _caller_driver_class_path,
+        *map(_classpath_env, session._CLASSPATH_ENV),
+    ],
+    ids=lambda setup: setup.__name__.lstrip("_"),
 )
 def test_no_archive_flag(no_jvm, monkeypatch, setup):
     setup(no_jvm, monkeypatch)
