@@ -8,9 +8,10 @@ Run: python examples/ops_pipeline.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sparkfusion.session import get_session
 from sparkfusion.suite.analytics_suite import (

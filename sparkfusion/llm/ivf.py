@@ -48,6 +48,7 @@ def ivf_build(
         quantize_points,
         quantized,
     )
+    from ..operators.iterate import _release
 
     # kmeans_quantized's scale: exact int64 distances to d ≈ 9000 at unit
     # norm (kmeans.check_quantization_envelope)
@@ -57,7 +58,10 @@ def ivf_build(
     # 0.1% of 20 rounds', and the sorted cell sizes are within 2 vectors
     rounds = 10
     pts = quantize_points(df, id_col, emb_col, scale, spread=k <= _LITERAL_ARGMIN_MAX_K)
-    cents = lloyd_centroids(pts, k, rounds)
+    try:
+        cents = lloyd_centroids(pts, k, rounds)
+    finally:  # the assignment below reads the corpus, not the checkpoint
+        _release(pts)
     assigned = assign_quantized(
         df.select(id_col, emb_col, quantized(F.col(emb_col), scale).alias("xq")), cents
     ).select(id_col, emb_col, F.col("cid").alias("cell"))

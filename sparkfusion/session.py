@@ -70,7 +70,10 @@ def get_session(app_name: str = "sparkfusion", cpus: int | str | None = None) ->
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         # oracle tooling collects full results; the 1g default trips on
         # density-quadratic outputs (j10 at sf1 overlays 10 copies onto the
         # same time window). Operators themselves never collect.
@@ -80,6 +83,18 @@ def get_session(app_name: str = "sparkfusion", cpus: int | str | None = None) ->
         spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """A quarter of the host's ``MemTotal``, at least 1 GB, as a
+    ``spark.driver.memory`` value: room for a second JVM, the Python workers
+    and the OS beside the heap. 1 GB when ``meminfo`` is unreadable."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        total_kb = 0
+    return f"{max(1024, total_kb // 4 // 1024)}m"
 
 
 #: where the driver JVM's class-data-sharing archives live: beside
@@ -418,13 +433,35 @@ def load_star(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = STAR_T
             table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+#: the session attribute holding its resolved star relations:
+#: absolute table path -> (the record it was read under, the DataFrame)
+_FRAMES_ATTR = "_sparkfusion_frames"
+
+
 def table(spark: SparkSession, sf_dir: str, name: str):
     """Read one star-schema table as a DataFrame (reference ``read_parquet``,
     ``src/utils/datasets.rs:184-185``), with the schema from its metadata
     record: no inference job once the record is warm, and the same relation
-    shape on a hit and a miss, so cached-plan lookups keep matching."""
+    shape on a hit and a miss, so cached-plan lookups keep matching.
+
+    The same session and the same record give the same DataFrame: the
+    relation is resolved in the JVM once (~25 ms a call), as the reference
+    resolves a registered table once. A new record (a rewrite, new
+    inference confs) builds a new frame in its place. A path the records do
+    not hold (missing or remote) is read anew on every call. The frames hang
+    off the session object, so no other session sees them and they go with
+    it. A frame is immutable, so sharing it is safe; a caller joining a
+    table to itself aliases both sides, as with any self-join."""
     meta = star_meta(spark, sf_dir, name)
-    return spark.read.schema(meta.schema).parquet(meta.path)
+    if _TABLE_META.get(meta.path) is not meta:
+        return spark.read.schema(meta.schema).parquet(meta.path)
+    frames = spark.__dict__.setdefault(_FRAMES_ATTR, {})
+    hit = frames.get(meta.path)
+    if hit is not None and hit[0] is meta:
+        return hit[1]
+    df = spark.read.schema(meta.schema).parquet(meta.path)
+    frames[meta.path] = (meta, df)
+    return df
 
 
 def ts_column(dtype: str) -> Column:

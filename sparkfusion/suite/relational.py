@@ -15,9 +15,18 @@ conversion. Rule: ROUND wide-scale money sums to scale 2 (exact decimal
 rounding, identical both engines) BEFORE the double cast — a scale-2
 scaled int stays < 2^53 up through ~9e13 absolute (sf1000 here); past
 that envelope only a string-typed emission would stay comparable.
+
+q1 keeps the same exact values without Java ``BigDecimal`` rows: each money
+column becomes the BIGINT its decimal cast would hold scaled by 10^scale
+(:func:`_unscaled`), the products are formed in BIGINT (the declared
+precisions bound them below ~1.2·10^14), the sums run over DECIMAL(p, 0),
+and only the per-group results are scaled back by 10^-scale — the same
+values, bit for bit, as summing the decimal casts themselves.
 """
 
 from __future__ import annotations
+
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -29,6 +38,30 @@ from . import register
 
 def _dec(col: str, prec: int = 12, scale: int = 2):
     return F.col(col).cast(f"decimal({prec},{scale})")
+
+
+def _unscaled(col: str, prec: int, scale: int) -> str:
+    """A SQL BIGINT expression equal to ``CAST(col AS DECIMAL(prec, scale))
+    · 10^scale``, exactly, for every DOUBLE ``col``, that builds no
+    ``BigDecimal`` per row where the double math is provably the same.
+
+    Spark casts a double to DECIMAL by rounding its shortest decimal string
+    HALF_UP. Away from a .5 tie, ``floor(v + 0.5)`` with ``v = col·10^scale``
+    rounds to the same integer: the double error of ``v`` is a few ulps, and
+    below 10^10 an ulp is under 2·10^-6, far inside the 10^-3 tie margin.
+    Rows within 10^-3 of a tie (1.005 is 100.4999… in binary but "1.005" as
+    a string), at or past ``10^prec - 1``, NaN, ±inf and NULL take the
+    decimal cast itself, so they round, null out or raise exactly as the
+    cast does under either ``spark.sql.ansi.enabled``. A SQL string rather
+    than a ``Column``: building it costs no JVM call per operator."""
+    if prec > 10:
+        raise ValueError(f"prec {prec} > 10: the double fast path is exact only below 10^10")
+    v = f"({col} * {10**scale}D)"
+    return (
+        f"CASE WHEN abs({v}) < {10**prec - 1}D AND abs({v} - floor({v}) - 0.5D) >= 1E-3D"
+        f" THEN floor({v} + 0.5D)"
+        f" ELSE CAST(CAST({col} AS DECIMAL({prec},{scale})) * {10**scale}BD AS BIGINT) END"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -64,42 +97,51 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     group key.
     """
     li = table(spark, sf_dir, "lineitem")
-    # narrowest decimals that hold the data: keeps intermediate products
-    # within the Decimal64 fast path (~20% faster than blanket (12,2) casts)
-    # while remaining exact — the oracle's wider casts yield identical values
-    ep = F.col("l_extendedprice").cast("decimal(8,2)")
-    di = F.col("l_discount").cast("decimal(3,2)")
-    tx = F.col("l_tax").cast("decimal(3,2)")
-    disc_price = ep * (F.lit(1) - di)
-    charge = disc_price * (F.lit(1) + tx)
-    agg = (
-        li.filter(F.col("l_shipdate") <= F.lit("2000-09-02 00:00:00").cast("timestamp_ntz"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            # the scale-4/-6 sums are ROUNDED to money scale 2 BEFORE the
-            # double cast: a scale-2 scaled int stays < 2^53 through ~9e13
-            # absolute, so the conversion is a single correctly-rounded
-            # division in both engines — unrounded, DuckDB double-rounds
-            # past 2^53 (module docstring; the r12 sf1 sweep caught
-            # sum_charge at 6M rows)
-            F.sum(F.col("l_quantity").cast("decimal(5,2)")).alias("sum_qty"),
-            F.sum(ep).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).cast("double").alias("sum_disc_price"),
-            F.round(F.sum(charge), 2).cast("double").alias("sum_charge"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-    return agg.select(
+    # the money columns as scaled BIGINTs of the narrowest decimals that hold
+    # the data; the oracle's wider casts yield identical values
+    scaled = li.filter(
+        F.col("l_shipdate") <= F.lit("2000-09-02 00:00:00").cast("timestamp_ntz")
+    ).selectExpr(
         "l_returnflag",
         "l_linestatus",
-        F.col("sum_qty").cast("double").alias("sum_qty"),
-        F.col("sum_base_price").cast("double").alias("sum_base_price"),
+        f"{_unscaled('l_quantity', 5, 2)} AS qty",
+        f"{_unscaled('l_extendedprice', 8, 2)} AS ep",
+        f"{_unscaled('l_discount', 3, 2)} AS di",
+        f"{_unscaled('l_tax', 3, 2)} AS tx",
+    )
+    disc_price = "ep * (100 - di)"  # scale 4
+    charge = f"{disc_price} * (100 + tx)"  # scale 6
+
+    def money(unscaled: str, prec: int, scale: int) -> str:
+        """SUM of a scale-``scale`` BIGINT expression as its exact DECIMAL
+        value. A DECIMAL(≤8, 0) sum is long-backed, as a DECIMAL(18, 2) one
+        is; the products' DECIMAL(28, 0) sums cannot wrap."""
+        return f"SUM(CAST({unscaled} AS DECIMAL({prec},0))) * {Decimal(1).scaleb(-scale)}BD"
+
+    agg = scaled.groupBy("l_returnflag", "l_linestatus").agg(
+        # the scale-4/-6 sums are ROUNDED to money scale 2 BEFORE the
+        # double cast: a scale-2 scaled int stays < 2^53 through ~9e13
+        # absolute, so the conversion is a single correctly-rounded
+        # division in both engines — unrounded, DuckDB double-rounds
+        # past 2^53 (module docstring; the r12 sf1 sweep caught
+        # sum_charge at 6M rows)
+        F.expr(money("qty", 5, 2)).alias("sum_qty"),
+        F.expr(money("ep", 8, 2)).alias("sum_base_price"),
+        F.expr(f"CAST(ROUND({money(disc_price, 18, 4)}, 2) AS DOUBLE)").alias("sum_disc_price"),
+        F.expr(f"CAST(ROUND({money(charge, 18, 6)}, 2) AS DOUBLE)").alias("sum_charge"),
+        F.count(F.lit(1)).alias("count_order"),
+    )
+    return agg.selectExpr(
+        "l_returnflag",
+        "l_linestatus",
+        "CAST(sum_qty AS DOUBLE) AS sum_qty",
+        "CAST(sum_base_price AS DOUBLE) AS sum_base_price",
         "sum_disc_price",
         "sum_charge",
         # avgs are per-group intensive: numerator scaled ints stay << 2^53
         # through sf1000, so the double conversion is engine-identical
-        (F.col("sum_qty").cast("double") / F.col("count_order")).alias("avg_qty"),
-        (F.col("sum_base_price").cast("double") / F.col("count_order")).alias("avg_price"),
+        "CAST(sum_qty AS DOUBLE) / count_order AS avg_qty",
+        "CAST(sum_base_price AS DOUBLE) / count_order AS avg_price",
         "count_order",
     )
 

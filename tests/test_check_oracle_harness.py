@@ -7,10 +7,13 @@ import importlib.util
 import os
 import sys
 
+#: the checkout these tests belong to
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _load_check_oracle():
     spec = importlib.util.spec_from_file_location(
-        "check_oracle", "/root/repo/tools/check_oracle.py"
+        "check_oracle", os.path.join(ROOT, "tools", "check_oracle.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -280,7 +283,7 @@ def test_assert_sweep_clean_gate(tmp_path):
     import json
 
     spec = importlib.util.spec_from_file_location(
-        "assert_sweep_clean", "/root/repo/tools/assert_sweep_clean.py"
+        "assert_sweep_clean", os.path.join(ROOT, "tools", "assert_sweep_clean.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkfusion.llm.dedup import connected_components
+from sparkfusion.llm.ivf import ivf_build
 from sparkfusion.llm.text import bpe_encode_counts, bpe_train_merges
 from sparkfusion.operators.graph import (
     bfs_distances,
@@ -34,6 +35,12 @@ def _edges(spark):
 
 def _seeds(spark):
     return spark.createDataFrame([("a",)], "node string")
+
+
+def _vectors(spark):
+    """16 unit-scale 4-d vectors in four loose clusters."""
+    rows = [(i, [float(i % 4 == j) + 0.01 * i for j in range(4)]) for i in range(16)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
 def _docs(spark):
@@ -66,6 +73,9 @@ CASES = {
         1,
     ),
     "bpe_train_merges": (lambda s: bpe_train_merges(_docs(s), "doc_id", "text", 3), 0),
+    # the assignment reads the corpus, so the training checkpoint goes once
+    # the centroids are back
+    "ivf_build": (lambda s: ivf_build(_vectors(s), k=4)[0], 0),
     "bpe_encode_counts": (lambda s: bpe_encode_counts(_docs(s), iters=3), 0),
 }
 

@@ -9,6 +9,7 @@ plain rather than the test-session singleton."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -79,7 +80,7 @@ def _run_plain(queries: list[str], timeout: int = 600) -> None:
             *queries,
             "--plain",
         ],
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         capture_output=True,
         text=True,
         timeout=timeout,

@@ -6,11 +6,17 @@ each example is a Spark job.
 from __future__ import annotations
 
 import json
+import math
+from decimal import Decimal
 
-from hypothesis import given, settings, strategies as st
+import pytest
+from hypothesis import example, given, settings, strategies as st
+from pyspark.errors import PySparkException
 
 from sparkfusion.operators import add_pk_to_df, df_cols_to_json
 from sparkfusion.llm.similarity import cosine_r9
+from sparkfusion.session import scoped_conf
+from sparkfusion.suite.relational import _unscaled
 from pyspark.sql import functions as F
 
 SETTINGS = dict(max_examples=8, deadline=None)
@@ -169,3 +175,64 @@ def test_snapshot_diff_roundtrip_property(spark, old, new):
     diff = snapshot_diff(o, n, ["k"], ["v"])
     rebuilt = merge_upsert(o, diff, keys=["k"])
     assert sorted(map(tuple, rebuilt.collect())) == sorted(map(tuple, n.collect()))
+
+
+def _cast_unscaled(prec: int, scale: int):
+    """The decimal cast ``_unscaled`` stands for, scaled to a BIGINT."""
+    return (F.col("x").cast(f"decimal({prec},{scale})") * F.lit(Decimal(10**scale))).cast("bigint")
+
+
+def _unscaled_rows(spark, xs: list, prec: int, scale: int) -> list[tuple]:
+    """``(_unscaled, the decimal cast)`` of each of ``xs``, in one job."""
+    df = spark.createDataFrame([(x,) for x in xs], "x double")
+    ours = F.expr(_unscaled("x", prec, scale))
+    return [tuple(r) for r in df.select(ours, _cast_unscaled(prec, scale)).collect()]
+
+
+#: doubles around money values: exact .5 ties at scale 2 (1.005 is
+#: 1.00499… in binary), 3-decimal values, any double, and the edges
+money_doubles = st.one_of(
+    st.none(),
+    st.floats(allow_nan=True, allow_infinity=True),
+    st.integers(-(10**9), 10**9).map(lambda k: k / 1000),
+    st.integers(-(10**8), 10**8).map(lambda k: (2 * k + 1) / 200),
+    st.sampled_from([999.99, 999.995, 1000.0, 99999.995, 999999.99, 999999.995, 1e6, -1e6, 1e10]),
+)
+
+
+@settings(**SETTINGS)
+@given(
+    xs=st.lists(money_doubles, min_size=1, max_size=30),
+    ps=st.sampled_from([(3, 2), (5, 2), (8, 2), (10, 4)]),
+)
+@example(
+    xs=[1.005, 2.675, -0.125, 0.125, -2.675, 0.0, -0.0, None, float("nan"), float("inf"),
+        float("-inf"), 999999.99, 999999.995, 1e6, 1e8],
+    ps=(8, 2),
+)
+def test_unscaled_equals_the_decimal_cast(spark, xs, ps):
+    """q1's scaled BIGINTs equal the decimal cast's value · 10^scale on every
+    row, NULL included, under either ANSI setting. Both settings cast NULL,
+    NaN and ±inf to NULL. Without ANSI the cast nulls out a value past
+    10^prec too; under ANSI it raises and fails the batch, so the batch
+    there leaves out the values that may round past it (the next test pins
+    those)."""
+    prec, scale = ps
+    with scoped_conf(spark, "spark.sql.ansi.enabled", "false"):
+        assert all(a == b for a, b in _unscaled_rows(spark, xs, prec, scale))
+    bound = 10 ** (prec - scale) - 1
+    sure = [x for x in xs if x is None or not math.isfinite(x) or abs(x) < bound]
+    with scoped_conf(spark, "spark.sql.ansi.enabled", "true"):
+        assert all(a == b for a, b in _unscaled_rows(spark, sure, prec, scale))
+
+
+@pytest.mark.parametrize("x", [999999.995, 1e6, -1e8, 1e300])
+def test_unscaled_raises_where_the_ansi_cast_does(spark, x):
+    df = spark.createDataFrame([(x,)], "x double")
+    raised = []
+    with scoped_conf(spark, "spark.sql.ansi.enabled", "true"):
+        for col in (F.expr(_unscaled("x", 8, 2)), _cast_unscaled(8, 2)):
+            with pytest.raises(PySparkException) as e:
+                df.select(col).collect()
+            raised.append((type(e.value).__name__, e.value.getCondition()))
+    assert raised[0] == raised[1]

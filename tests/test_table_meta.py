@@ -10,7 +10,10 @@ Pinned here:
 - the inference confs key the record: the arrived dtype follows them;
 - a warm ``table()`` launches no Spark job;
 - the record's schema is exactly what a fresh ``spark.read.parquet`` infers;
-- footers are opened once per file vintage.
+- footers are opened once per file vintage;
+- ``table()`` returns one frame per (session, record): a rewrite gives a new
+  frame, another session gets its own, an unrecorded path is read anew on
+  every call, and two reads of one table still self-join.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
 from sparkfusion.session import (
@@ -157,3 +161,54 @@ def test_footers_read_once_per_vintage(sf_copy, monkeypatch):
     t = pq.read_table(path)
     pq.write_table(t.slice(0, 10), path)
     assert table_files(path).rows == 10 and len(opened) == 2
+
+
+def test_same_session_and_record_give_the_same_frame(spark, sf_copy):
+    nat = table(spark, sf_copy, "nation")
+    assert table(spark, sf_copy, "nation") is nat
+    assert table(spark, sf_copy, "region") is not nat
+    assert _jobs_in(spark, lambda: table(spark, sf_copy, "nation")) == []
+
+
+def test_rewrite_gives_a_new_frame_with_the_new_rows(spark, sf_copy):
+    path = os.path.join(sf_copy, "orders.parquet")
+    before = table(spark, sf_copy, "orders")
+    t = pq.read_table(path)
+    assert before.count() == t.num_rows
+    pq.write_table(t.slice(0, 10), path)
+    after = table(spark, sf_copy, "orders")
+    assert after is not before
+    assert after.count() == 10
+    assert table(spark, sf_copy, "orders") is after
+
+
+def test_each_session_gets_its_own_frame(spark, sf_copy):
+    other = spark.newSession()
+    mine = table(spark, sf_copy, "nation")
+    theirs = table(other, sf_copy, "nation")
+    assert theirs is not mine
+    assert theirs.sparkSession is other
+    assert table(other, sf_copy, "nation") is theirs
+    assert theirs.count() == mine.count() == 25
+
+
+def test_unrecorded_path_is_never_reused(spark, sf_copy):
+    # a file URI cannot be stat'ed here, so it has no record, yet Spark reads it
+    uri = "file://" + os.path.abspath(sf_copy)
+    first = table(spark, uri, "orders")
+    assert table(spark, uri, "orders") is not first
+    n = first.count()
+    path = os.path.join(sf_copy, "orders.parquet")
+    pq.write_table(pq.read_table(path).slice(0, 7), path)
+    assert n > 7 and table(spark, uri, "orders").count() == 7
+
+
+def test_two_reads_of_one_table_self_join(spark, sf_copy):
+    a = table(spark, sf_copy, "nation").alias("a")
+    b = table(spark, sf_copy, "nation").alias("b")
+    pairs = a.join(b, F.col("a.n_regionkey") == F.col("b.n_regionkey")).select(
+        F.col("a.n_nationkey").alias("x"), F.col("b.n_nationkey").alias("y")
+    )
+    keys = [r.n_regionkey for r in a.select("n_regionkey").collect()]
+    assert pairs.count() == sum(keys.count(k) for k in keys)
+    assert pairs.filter("x = y").count() == 25

@@ -18,12 +18,13 @@ so a value mismatch pins the exact differing cell post-hoc.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def normalize(df) -> tuple[list[str], list[tuple]]:
