@@ -16,12 +16,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparkfusion.context import SessionContext
-from sparkfusion.session import get_session, load_star
+from sparkfusion.session import get_session, table
 
 
 def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     ctx = SessionContext(get_session("example-query", cpus=8))
-    load_star(ctx.spark, sf_dir)
+    ctx.register_table("orders", table(ctx.spark, sf_dir, "orders"))
 
     print("== Entry A: SQL over registered tables ==")
     ctx.sql(

@@ -16,13 +16,13 @@ from .errors import (
     SourceError,
     SparkfusionError,
 )
-from .session import DEFAULT_SF_DIR, STAR_TABLES, get_session, load_star, table
+from .session import DEFAULT_SF_DIR, STAR_TABLES, get_session, star_sql, table
 
 __version__ = "0.1.0"
 
 __all__ = [
     "get_session",
-    "load_star",
+    "star_sql",
     "table",
     "DEFAULT_SF_DIR",
     "STAR_TABLES",

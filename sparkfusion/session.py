@@ -26,11 +26,12 @@ import glob
 import hashlib
 import os
 import shutil
+import string
 import sys
 from collections.abc import Iterator
 from dataclasses import dataclass
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -420,19 +421,6 @@ def star_meta(spark: SparkSession, sf_dir: str, name: str) -> TableMeta:
     return table_meta(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_star(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = STAR_TABLES) -> None:
-    """Register each star-schema parquet as a lazy temp view.
-
-    Mirrors the reference's ``ctx.register_parquet(name, path, opts)``
-    (``examples/dataframe/query.rs:118-123``): the view is a plan alias —
-    Catalyst sees through it, so filter pushdown / column pruning reach the
-    parquet scan (no materialization).
-    """
-    for name in tables:
-        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
-            table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 #: the session attribute holding its resolved star relations:
 #: absolute table path -> (the record it was read under, the DataFrame)
 _FRAMES_ATTR = "_sparkfusion_frames"
@@ -462,6 +450,21 @@ def table(spark: SparkSession, sf_dir: str, name: str):
     df = spark.read.schema(meta.schema).parquet(meta.path)
     frames[meta.path] = (meta, df)
     return df
+
+
+def star_sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
+    """Run ``query`` with each ``{name}`` field bound to star table ``name``
+    (:func:`table`) by value.
+
+    ``spark.sql``'s formatter names each frame ``_pyspark_<uuid>`` and drops
+    that view when the call returns, after analysis has bound the plan, so
+    the caller's catalog is left as it was and a caller's own view named
+    like a star table is never read in its place. Literal braces in
+    ``query`` are written doubled. Mirrors the reference resolving a table
+    once and running SQL over it (``ctx.register_parquet`` + ``ctx.sql``,
+    ``examples/dataframe/query.rs:118-173``)."""
+    names = {field for _, field, _, _ in string.Formatter().parse(query) if field}
+    return spark.sql(query, **{name: table(spark, sf_dir, name) for name in names})
 
 
 def ts_column(dtype: str) -> Column:

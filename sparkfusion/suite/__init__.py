@@ -74,6 +74,15 @@ def register(
     return deco
 
 
+def star_oracle(query: str) -> str:
+    """The DuckDB oracle of a :func:`sparkfusion.session.star_sql` text,
+    for queries whose Spark SQL and oracle SQL are the same: each ``{name}``
+    field formatted to the bare table name DuckDB reads."""
+    from ..session import STAR_TABLES
+
+    return query.format(**{name: name for name in STAR_TABLES})
+
+
 def table_rows(sf_dir: str, name: str) -> int:
     """Row count of a star table from parquet FOOTER metadata — no Spark, no
     scan; used by derived-constant oracle generators (and by query builders

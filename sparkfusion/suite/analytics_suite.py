@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..llm.chunking import assign_split, chunk_sliding
 from ..operators.analytics import cohort_retention, funnel, scd2_intervals
 from ..operators.merge import merge_upsert
-from ..session import events_with_ts, scoped_conf, table
+from ..session import events_with_ts, scoped_conf, star_sql, table
 from . import register
 from ..operators.partitioning import repartition_for_compute
 from .sources_suite import IO_DIR
@@ -1256,9 +1256,6 @@ def rc1_recursive_subtree(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteratively — the DataFrame-loop siblings (connected components,
     PageRank at operators/graph.py) remain the explicit-control form with
     localCheckpoint lineage management."""
-    from ..session import load_star
-
-    load_star(spark, sf_dir, ("customer",))
     # the recursion emits N·log2(N) ancestor rows; Spark's default 1M-row
     # recursion guard trips at sf1 (150k customers × ~18 levels ≈ 2.7M).
     # Raise it ONLY for the duration of this query's execution: the result is
@@ -1266,18 +1263,20 @@ def rc1_recursive_subtree(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value is restored on exit — leaving the guard raised would strip
     # the session's runaway-recursion protection for every later query.
     with scoped_conf(spark, "spark.sql.cteRecursionRowLimit", "100000000"):
-        return spark.sql(
+        return star_sql(
+            spark,
+            sf_dir,
             """
             WITH RECURSIVE anc(node, a) AS (
-              SELECT c_custkey, c_custkey FROM customer
+              SELECT c_custkey, c_custkey FROM {customer}
               UNION ALL
               SELECT node, a div 2 FROM anc WHERE a > 1
             )
             SELECT a AS ancestor, count(*) AS n_subtree,
                    CAST(sum(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS subtree_bal
-            FROM anc JOIN customer c ON anc.node = c.c_custkey
+            FROM anc JOIN {customer} c ON anc.node = c.c_custkey
             GROUP BY a
-            """
+            """,
         ).localCheckpoint(eager=True)
 
 

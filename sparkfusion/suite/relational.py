@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import concat_dfs, df_sql, join_dfs
-from ..session import load_star, table
-from . import register
+from ..session import star_sql, table
+from . import register, star_oracle
 
 
 def _dec(col: str, prec: int = 12, scale: int = 2):
@@ -180,19 +180,16 @@ def a3_count_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table(spark, sf_dir, "lineitem").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-@register(
-    "cte_count",
-    oracle="""
-    WITH tmp AS (SELECT * FROM orders WHERE o_orderstatus = 'F')
-    SELECT COUNT(*) AS cnt FROM tmp
-    """,
-)
+_CTE_COUNT_SQL = """
+WITH tmp AS (SELECT * FROM {orders} WHERE o_orderstatus = 'F')
+SELECT COUNT(*) AS cnt FROM tmp
+"""
+
+
+@register("cte_count", oracle=star_oracle(_CTE_COUNT_SQL))
 def cte_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CTE + count(*) (reference ``examples/dataframe/query.rs:171-173``)."""
-    load_star(spark, sf_dir, ("orders",))
-    return spark.sql(
-        "WITH tmp AS (SELECT * FROM orders WHERE o_orderstatus = 'F') SELECT COUNT(*) AS cnt FROM tmp"
-    )
+    return star_sql(spark, sf_dir, _CTE_COUNT_SQL)
 
 
 @register(
@@ -225,47 +222,37 @@ def a2_1brc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "a6_scalar_subquery_least",
-    oracle="""
-    SELECT o_orderkey, o_custkey, o_totalprice
-    FROM orders
-    WHERE o_totalprice = (SELECT MIN(o_totalprice) FROM orders)
-    """,
-)
+_A6_SQL = """
+SELECT o_orderkey, o_custkey, o_totalprice
+FROM {orders}
+WHERE o_totalprice = (SELECT MIN(o_totalprice) FROM {orders})
+"""
+
+
+@register("a6_scalar_subquery_least", oracle=star_oracle(_A6_SQL))
 def a6_scalar_subquery_least(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Least-value row via uncorrelated scalar subquery.
 
     Reference: ``examples/algo/least_values.rs:30-37``. Catalyst plans the
     subquery as a one-row broadcast — no second full scan at execution.
     """
-    load_star(spark, sf_dir, ("orders",))
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_custkey, o_totalprice
-        FROM orders
-        WHERE o_totalprice = (SELECT MIN(o_totalprice) FROM orders)
-        """
-    )
+    return star_sql(spark, sf_dir, _A6_SQL)
 
 
-@register(
-    "a7_round_robin",
-    oracle="""
-    SELECT s_suppkey, ((s_suppkey - 1) % (SELECT COUNT(*) FROM nation)) + 1 AS slot
-    FROM supplier
-    """,
-)
+_A7_SQL = """
+SELECT s_suppkey, ((s_suppkey - 1) % (SELECT COUNT(*) FROM {nation})) + 1 AS slot
+FROM {supplier}
+"""
+
+
+@register("a7_round_robin", oracle=star_oracle(_A7_SQL))
 def a7_round_robin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-robin slot pick: count(*) subquery inside arithmetic.
 
     Reference: ``examples/algo/round_robin.rs:31-36``
     (``((w-1) % (select count(*) from t)) + 1``).
     """
-    load_star(spark, sf_dir, ("supplier", "nation"))
-    return spark.sql(
-        "SELECT s_suppkey, ((s_suppkey - 1) % (SELECT COUNT(*) FROM nation)) + 1 AS slot FROM supplier"
-    )
+    return star_sql(spark, sf_dir, _A7_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -294,17 +281,17 @@ def j1_inner_join_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "c_name", "n_name")
 
 
-@register(
-    "j2_inner_join_sql",
-    oracle="""
-    SELECT o_orderpriority,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,
-           COUNT(*) AS n_rows
-    FROM lineitem INNER JOIN orders ON l_orderkey = o_orderkey
-    WHERE o_orderstatus = 'F'
-    GROUP BY o_orderpriority
-    """,
-)
+_J2_SQL = """
+SELECT o_orderpriority,
+       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,
+       COUNT(*) AS n_rows
+FROM {lineitem} INNER JOIN {orders} ON l_orderkey = o_orderkey
+WHERE o_orderstatus = 'F'
+GROUP BY o_orderpriority
+"""
+
+
+@register("j2_inner_join_sql", oracle=star_oracle(_J2_SQL))
 def j2_inner_join_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner join declared in SQL with a post-join filter + aggregate.
 
@@ -312,17 +299,7 @@ def j2_inner_join_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``examples/dataframe/operations.rs:99-106``. The status filter pushes
     below the join into the orders scan.
     """
-    load_star(spark, sf_dir, ("lineitem", "orders"))
-    return spark.sql(
-        """
-        SELECT o_orderpriority,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,
-               COUNT(*) AS n_rows
-        FROM lineitem INNER JOIN orders ON l_orderkey = o_orderkey
-        WHERE o_orderstatus = 'F'
-        GROUP BY o_orderpriority
-        """
-    )
+    return star_sql(spark, sf_dir, _J2_SQL)
 
 
 @register(
@@ -390,16 +367,16 @@ def j4_join_duplicate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
-    "w1_window_agg_sql",
-    oracle="""
-    SELECT o_orderkey,
-           o_orderpriority,
-           COUNT(o_orderkey) OVER (PARTITION BY o_orderpriority) AS cnt_w,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER (PARTITION BY o_orderpriority) AS DOUBLE) AS sum_w
-    FROM orders
-    """,
-)
+_W1_SQL = """
+SELECT o_orderkey,
+       o_orderpriority,
+       COUNT(o_orderkey) OVER (PARTITION BY o_orderpriority) AS cnt_w,
+       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER (PARTITION BY o_orderpriority) AS DOUBLE) AS sum_w
+FROM {orders}
+"""
+
+
+@register("w1_window_agg_sql", oracle=star_oracle(_W1_SQL))
 def w1_window_agg_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COUNT/SUM aggregate-over-window, SQL form.
 
@@ -408,16 +385,7 @@ def w1_window_agg_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is the whole partition, identical in DataFusion and Spark
     (SURVEY.md §2.5 frame note). Decimal sum keeps the windowed total exact.
     """
-    load_star(spark, sf_dir, ("orders",))
-    return spark.sql(
-        """
-        SELECT o_orderkey,
-               o_orderpriority,
-               COUNT(o_orderkey) OVER (PARTITION BY o_orderpriority) AS cnt_w,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER (PARTITION BY o_orderpriority) AS DOUBLE) AS sum_w
-        FROM orders
-        """
-    )
+    return star_sql(spark, sf_dir, _W1_SQL)
 
 
 @register(

@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from ..operators.bloom import bloom_semi_join
 from ..operators.localrel import inline_rows
-from ..session import table
-from . import register
+from ..session import star_sql, table
+from . import register, star_oracle
 
 
 def _dec(col: str):
@@ -192,30 +192,20 @@ def a9_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "a13_correlated_subquery",
-    oracle="""
-    SELECT c_custkey, c_nationkey, c_acctbal
-    FROM customer c
-    WHERE c_acctbal > (SELECT AVG(c2.c_acctbal) FROM customer c2
-                       WHERE c2.c_nationkey = c.c_nationkey)
-    """,
-)
+_A13_SQL = """
+SELECT c_custkey, c_nationkey, c_acctbal
+FROM {customer} c
+WHERE c_acctbal > (SELECT AVG(c2.c_acctbal) FROM {customer} c2
+                   WHERE c2.c_nationkey = c.c_nationkey)
+"""
+
+
+@register("a13_correlated_subquery", oracle=star_oracle(_A13_SQL))
 def a13_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery (customers above their nation's average
     balance) — Catalyst decorrelates it into an aggregate + join; extends the
     reference's uncorrelated-only subquery surface (A6/A7)."""
-    from ..session import load_star
-
-    load_star(spark, sf_dir, ("customer",))
-    return spark.sql(
-        """
-        SELECT c_custkey, c_nationkey, c_acctbal
-        FROM customer c
-        WHERE c_acctbal > (SELECT AVG(c2.c_acctbal) FROM customer c2
-                           WHERE c2.c_nationkey = c.c_nationkey)
-        """
-    )
+    return star_sql(spark, sf_dir, _A13_SQL)
 
 
 @register(
@@ -255,26 +245,17 @@ def a10_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "a11_grouping_sets",
-    oracle="""
-    SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-    FROM orders
-    GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-    """,
-)
+_A11_SQL = """
+SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
+FROM {orders}
+GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
+"""
+
+
+@register("a11_grouping_sets", oracle=star_oracle(_A11_SQL))
 def a11_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS — two independent groupings in one pass."""
-    from ..session import load_star
-
-    load_star(spark, sf_dir, ("orders",))
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        """
-    )
+    return star_sql(spark, sf_dir, _A11_SQL)
 
 
 @register(
@@ -378,35 +359,23 @@ def u6_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.exceptAll(b)
 
 
-@register(
-    "l1_lateral_topn",
-    oracle="""
-    SELECT n_name, c.c_custkey, c.c_acctbal
-    FROM nation, LATERAL (
-      SELECT c_custkey, c_acctbal FROM customer
-      WHERE c_nationkey = n_nationkey
-      ORDER BY c_acctbal DESC, c_custkey LIMIT 2
-    ) c
-    """,
-)
+_L1_SQL = """
+SELECT n_name, c.c_custkey, c.c_acctbal
+FROM {nation}, LATERAL (
+  SELECT c_custkey, c_acctbal FROM {customer}
+  WHERE c_nationkey = n_nationkey
+  ORDER BY c_acctbal DESC, c_custkey LIMIT 2
+) c
+"""
+
+
+@register("l1_lateral_topn", oracle=star_oracle(_L1_SQL))
 def l1_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL correlated subquery: per-nation top-2 customers by balance —
     the per-row-subquery SQL surface (Spark 4 DecorrelateInnerQuery rewrites
     it into a ranked join; the window form w3 is the DataFrame spelling of
     the same plan). Deterministic (acctbal DESC, custkey) order."""
-    from ..session import load_star
-
-    load_star(spark, sf_dir, ("nation", "customer"))
-    return spark.sql(
-        """
-        SELECT n_name, c.c_custkey, c.c_acctbal
-        FROM nation, LATERAL (
-          SELECT c_custkey, c_acctbal FROM customer
-          WHERE c_nationkey = n_nationkey
-          ORDER BY c_acctbal DESC, c_custkey LIMIT 2
-        ) c
-        """
-    )
+    return star_sql(spark, sf_dir, _L1_SQL)
 
 
 @register(
@@ -705,15 +674,14 @@ def a26_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark 4 surface): nation names per region concatenated in a
     DETERMINISTIC order — without the WITHIN GROUP order the result depends
     on partition arrival order, the classic listagg flakiness."""
-    from ..session import load_star
-
-    load_star(spark, sf_dir, ("nation",))
-    return spark.sql(
+    return star_sql(
+        spark,
+        sf_dir,
         """
         SELECT n_regionkey,
                listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS nations
-        FROM nation GROUP BY n_regionkey
-        """
+        FROM {nation} GROUP BY n_regionkey
+        """,
     )
 
 

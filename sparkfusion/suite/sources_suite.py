@@ -44,7 +44,7 @@ def _parquet_vintage(sf_dir: str, name: str) -> str:
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
 )
 def s1_s3_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CSV sink → CSV scan with header + inferred schema, registered as a view.
+    """CSV sink → CSV scan with header + inferred schema, bound into SQL by value.
 
     Reference: ``ctx.read_csv(path, CsvReadOptions::default())``
     (``src/utils/datasets.rs:54-56``) + ``register_csv``
@@ -54,8 +54,7 @@ def s1_s3_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     nat.write.mode("overwrite").option("header", True).csv(path)
     df = read_csv(spark, path, header=True, infer_schema=True)
-    df.createOrReplaceTempView("nation_from_csv")
-    return spark.sql("SELECT n_nationkey, n_name, n_regionkey FROM nation_from_csv")
+    return spark.sql("SELECT n_nationkey, n_name, n_regionkey FROM {csv}", csv=df)
 
 
 @register(

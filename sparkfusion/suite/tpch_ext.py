@@ -19,8 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_star, table
-from . import register
+from ..session import star_sql, table
+from . import register, star_oracle
 
 _REV = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))"
 
@@ -126,12 +126,12 @@ SELECT supp_nation, cust_nation, l_year, CAST(SUM(volume) AS DOUBLE) AS revenue
 FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
              CAST(EXTRACT(YEAR FROM l_shipdate) AS INTEGER) AS l_year,
              {_REV} AS volume
-      FROM supplier
-      JOIN lineitem ON s_suppkey = l_suppkey
-      JOIN orders ON o_orderkey = l_orderkey
-      JOIN customer ON c_custkey = o_custkey
-      JOIN nation n1 ON s_nationkey = n1.n_nationkey
-      JOIN nation n2 ON c_nationkey = n2.n_nationkey
+      FROM {{supplier}}
+      JOIN {{lineitem}} ON s_suppkey = l_suppkey
+      JOIN {{orders}} ON o_orderkey = l_orderkey
+      JOIN {{customer}} ON c_custkey = o_custkey
+      JOIN {{nation}} n1 ON s_nationkey = n1.n_nationkey
+      JOIN {{nation}} n2 ON c_nationkey = n2.n_nationkey
       WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
           OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
         AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -140,16 +140,13 @@ GROUP BY supp_nation, cust_nation, l_year
 """
 
 
-@register("q7_volume_shipping", oracle=_Q7_SQL)
+@register("q7_volume_shipping", oracle=star_oracle(_Q7_SQL))
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bilateral trade volume between two nations by year.
     Both nation dims broadcast (two aliases of the same 25-row table); the
     disjunctive nation-pair predicate prunes at the joins, so only the two
     nations' rows survive past the dimension joins."""
-    load_star(
-        spark, sf_dir, ("supplier", "lineitem", "orders", "customer", "nation")
-    )
-    return spark.sql(_Q7_SQL)
+    return star_sql(spark, sf_dir, _Q7_SQL)
 
 
 _Q8_SQL = f"""
@@ -161,30 +158,26 @@ SELECT o_year,
 FROM (SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS INTEGER) AS o_year,
              {_REV} AS volume,
              n2.n_name AS nation
-      FROM lineitem
-      JOIN orders ON o_orderkey = l_orderkey
-      JOIN customer ON c_custkey = o_custkey
-      JOIN nation n1 ON c_nationkey = n1.n_nationkey
-      JOIN region ON n1.n_regionkey = r_regionkey
-      JOIN supplier ON l_suppkey = s_suppkey
-      JOIN nation n2 ON s_nationkey = n2.n_nationkey
+      FROM {{lineitem}}
+      JOIN {{orders}} ON o_orderkey = l_orderkey
+      JOIN {{customer}} ON c_custkey = o_custkey
+      JOIN {{nation}} n1 ON c_nationkey = n1.n_nationkey
+      JOIN {{region}} ON n1.n_regionkey = r_regionkey
+      JOIN {{supplier}} ON l_suppkey = s_suppkey
+      JOIN {{nation}} n2 ON s_nationkey = n2.n_nationkey
       WHERE r_name = 'ASIA') all_nations
 GROUP BY o_year
 """
 
 
-@register("q8_market_share", oracle=_Q8_SQL)
+@register("q8_market_share", oracle=star_oracle(_Q8_SQL))
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one nation's share of a region's supplied revenue per
     year. Numerator and denominator both stay DECIMAL-exact until the final
     ratio (identical operands both engines → identical double division,
     rounded to 6 anyway). The fact table flows through broadcast dim joins
     without re-shuffling; the single groupBy is on the ~7 distinct years."""
-    load_star(
-        spark, sf_dir,
-        ("lineitem", "orders", "customer", "nation", "region", "supplier"),
-    )
-    return spark.sql(_Q8_SQL)
+    return star_sql(spark, sf_dir, _Q8_SQL)
 
 
 _Q9_SQL = f"""
@@ -193,27 +186,24 @@ FROM (SELECT n_name AS nation,
              CAST(EXTRACT(YEAR FROM o_orderdate) AS INTEGER) AS o_year,
              {_REV} - CAST(l_quantity AS DECIMAL(12,2))
                       * CAST(p_retailprice AS DECIMAL(12,2)) AS amount
-      FROM lineitem
-      JOIN part ON p_partkey = l_partkey
-      JOIN supplier ON l_suppkey = s_suppkey
-      JOIN orders ON o_orderkey = l_orderkey
-      JOIN nation ON s_nationkey = n_nationkey
+      FROM {{lineitem}}
+      JOIN {{part}} ON p_partkey = l_partkey
+      JOIN {{supplier}} ON l_suppkey = s_suppkey
+      JOIN {{orders}} ON o_orderkey = l_orderkey
+      JOIN {{nation}} ON s_nationkey = n_nationkey
       WHERE p_name LIKE 'red%') profit
 GROUP BY nation, o_year
 """
 
 
-@register("q9_product_profit", oracle=_Q9_SQL)
+@register("q9_product_profit", oracle=star_oracle(_Q9_SQL))
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (adapted: cost = quantity x retail price — no
     partsupp.supplycost exists): profit on color-named parts by supplier
     nation and year. All money math DECIMAL (quantities are integer-valued
     doubles, retail prices 2-decimal-intent → exact casts); the p_name LIKE
     prefix filter prunes part before the fact join."""
-    load_star(
-        spark, sf_dir, ("lineitem", "part", "supplier", "orders", "nation")
-    )
-    return spark.sql(_Q9_SQL)
+    return star_sql(spark, sf_dir, _Q9_SQL)
 
 
 _Q12_SQL = """
@@ -222,55 +212,53 @@ SELECT l_returnflag,
                   THEN 1 END) AS high_count,
        COUNT(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
                   THEN 1 END) AS low_count
-FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+FROM {orders} JOIN {lineitem} ON o_orderkey = l_orderkey
 WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
 GROUP BY l_returnflag
 """
 
 
-@register("q12_priority_shipping", oracle=_Q12_SQL)
+@register("q12_priority_shipping", oracle=star_oracle(_Q12_SQL))
 def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (adapted: grouped by l_returnflag — the schema has no
     l_shipmode): high/low-priority order counts per flag for a ship-date
     year. COUNT(CASE ...) not SUM(CASE 1 ...): DuckDB sums integers into
     HUGEINT, which would break the schema compare; counts are BIGINT in both
     engines."""
-    load_star(spark, sf_dir, ("orders", "lineitem"))
-    return spark.sql(_Q12_SQL)
+    return star_sql(spark, sf_dir, _Q12_SQL)
 
 
 _Q13_SQL = """
 SELECT c_count, COUNT(*) AS custdist
 FROM (SELECT c_custkey, COUNT(o_orderkey) AS c_count
-      FROM customer LEFT JOIN orders
+      FROM {customer} LEFT JOIN {orders}
         ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
       GROUP BY c_custkey) c_orders
 GROUP BY c_count
 """
 
 
-@register("q13_order_distribution", oracle=_Q13_SQL)
+@register("q13_order_distribution", oracle=star_oracle(_Q13_SQL))
 def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: customer order-count histogram, zero-order customers
     included via the left join (COUNT of a nullable key counts only matches).
     The join filter lives in the ON clause — moving it to WHERE would turn
     the left join inner and drop the zero bucket. Two shuffles (custkey,
     then c_count) — the second input is one row per customer."""
-    load_star(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(_Q13_SQL)
+    return star_sql(spark, sf_dir, _Q13_SQL)
 
 
 _Q16_SQL = """
 SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem JOIN part ON p_partkey = l_partkey
+FROM {lineitem} JOIN {part} ON p_partkey = l_partkey
 WHERE p_brand <> 'Brand#5' AND p_type <> 'MEDIUM'
   AND p_size IN (1, 4, 9, 14, 19, 23)
 GROUP BY p_brand, p_type, p_size
 """
 
 
-@register("q16_supplier_cnt", oracle=_Q16_SQL)
+@register("q16_supplier_cnt", oracle=star_oracle(_Q16_SQL))
 def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape (adapted: suppliers linked through lineitem — no
     partsupp; single-word p_type makes NOT LIKE 'MEDIUM%' a plain <>):
@@ -278,13 +266,12 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans as the two-level expand+agg Spark uses for exact distinct — fine
     here because the group count is small; at 100 TB swap in
     approx_count_distinct (a10) when exactness isn't required."""
-    load_star(spark, sf_dir, ("lineitem", "part"))
-    return spark.sql(_Q16_SQL)
+    return star_sql(spark, sf_dir, _Q16_SQL)
 
 
 _Q19_SQL = f"""
 SELECT CAST(SUM({_REV}) AS DOUBLE) AS revenue
-FROM lineitem JOIN part ON p_partkey = l_partkey
+FROM {{lineitem}} JOIN {{part}} ON p_partkey = l_partkey
 WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5
        AND l_quantity BETWEEN 1 AND 11)
    OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
@@ -294,36 +281,34 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5
 """
 
 
-@register("q19_disjunctive_revenue", oracle=_Q19_SQL)
+@register("q19_disjunctive_revenue", oracle=star_oracle(_Q19_SQL))
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: disjunction of brand/size/quantity branches across
     the join. Catalyst extracts the common sub-predicates (quantity range,
     size range) as scan-level filters on each side and evaluates the full
     disjunction post-join — the classic 'OR across tables' pushdown test."""
-    load_star(spark, sf_dir, ("lineitem", "part"))
-    return spark.sql(_Q19_SQL)
+    return star_sql(spark, sf_dir, _Q19_SQL)
 
 
 _Q20_SQL = """
 SELECT s_suppkey, s_name
-FROM supplier
+FROM {supplier}
 WHERE s_suppkey IN (SELECT l_suppkey
-                    FROM lineitem JOIN part ON p_partkey = l_partkey
+                    FROM {lineitem} JOIN {part} ON p_partkey = l_partkey
                     WHERE p_name LIKE 'red%'
                     GROUP BY l_suppkey, l_partkey
                     HAVING SUM(l_quantity) > 60)
 """
 
 
-@register("q20_part_promotion", oracle=_Q20_SQL)
+@register("q20_part_promotion", oracle=star_oracle(_Q20_SQL))
 def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape (adapted: excess-quantity criterion from lineitem —
     no partsupp.availqty): suppliers who moved more than a threshold of any
     red part. The IN subquery is a grouped pre-aggregate followed by a semi
     join — quantity sums are integer-valued doubles (order-insensitive,
     exact), and they only gate the threshold, never reach the output."""
-    load_star(spark, sf_dir, ("supplier", "lineitem", "part"))
-    return spark.sql(_Q20_SQL)
+    return star_sql(spark, sf_dir, _Q20_SQL)
 
 
 @register(

@@ -11,8 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_star, table
-from . import register
+from ..session import star_sql, table
+from . import register, star_oracle
 
 _REV = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))"
 
@@ -60,44 +60,28 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q5_local_supplier_volume",
-    oracle=f"""
-    SELECT n_name,
-           CAST(SUM({_REV}) AS DOUBLE) AS revenue
-    FROM customer
-    JOIN orders ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-    JOIN nation ON s_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    WHERE r_name = 'ASIA'
-      AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY n_name
-    """,
-)
+_Q5_SQL = f"""
+SELECT n_name,
+       CAST(SUM({_REV}) AS DOUBLE) AS revenue
+FROM {{customer}}
+JOIN {{orders}} ON c_custkey = o_custkey
+JOIN {{lineitem}} ON l_orderkey = o_orderkey
+JOIN {{supplier}} ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+JOIN {{nation}} ON s_nationkey = n_nationkey
+JOIN {{region}} ON n_regionkey = r_regionkey
+WHERE r_name = 'ASIA'
+  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+GROUP BY n_name
+"""
+
+
+@register("q5_local_supplier_volume", oracle=star_oracle(_Q5_SQL))
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join through the full star (fact ⋈ two dims ⋈
     nation ⋈ region) with a local-supplier condition; nation/region/supplier
     broadcast, the fact side never re-shuffles between the chained joins."""
-    load_star(spark, sf_dir, ("customer", "orders", "lineitem", "supplier", "nation", "region"))
-    return spark.sql(
-        f"""
-        SELECT n_name,
-               CAST(SUM({_REV}) AS DOUBLE) AS revenue
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        JOIN nation ON s_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA'
-          AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        GROUP BY n_name
-        """
-    )
+    return star_sql(spark, sf_dir, _Q5_SQL)
 
 
 @register(

@@ -6,7 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.aggregates import register_udtf, weighted_mean
-from ..session import table
+from ..session import star_sql, table
 from . import register
 
 
@@ -44,13 +44,12 @@ def udaf_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def udtf_split_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF via LATERAL join: one input row → N output rows (table
     function — absent from the reference's surface, SURVEY.md §2.10)."""
-    from ..session import load_star
-
-    load_star(spark, sf_dir, ("documents",))
     register_udtf(spark)
-    return spark.sql(
+    return star_sql(
+        spark,
+        sf_dir,
         """
         SELECT d.doc_id, s.token
-        FROM documents d, LATERAL split_to_rows(d.source, 'c') s
-        """
+        FROM {documents} d, LATERAL split_to_rows(d.source, 'c') s
+        """,
     )

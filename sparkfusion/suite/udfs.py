@@ -14,7 +14,7 @@ from ..functions import (
     split_row_pandas_udf,
     split_text_builtin,
 )
-from ..session import table
+from ..session import star_sql, table
 from . import register
 
 
@@ -45,11 +45,8 @@ def x2_udf_sql_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UDF registered into the SQL catalog (X2; reference
     ``ctx.register_udf`` → ``select split_text(name) from t``,
     ``examples/udf/udf.rs:96-106``)."""
-    from ..session import load_star
-
-    load_star(spark, sf_dir, ("part",))
     register_split_text(spark, "split_text", " ")
-    return spark.sql("SELECT p_partkey, split_text(p_type) AS first_word FROM part")
+    return star_sql(spark, sf_dir, "SELECT p_partkey, split_text(p_type) AS first_word FROM {part}")
 
 
 @register(
@@ -282,17 +279,17 @@ def x5_udtf_lateral_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     generate_subscripts - 1. The builtin split + posexplode stays the hot
     path; this proves the extension point end-to-end."""
     from ..functions.aggregates import register_udtf
-    from ..session import load_star
 
-    load_star(spark, sf_dir, ("documents",))
     register_udtf(spark)
-    return spark.sql(
+    return star_sql(
+        spark,
+        sf_dir,
         """
         SELECT d.doc_id, count(*) AS n_words,
                sum(s.pos * length(s.token)) AS checksum
-        FROM documents d, LATERAL split_to_rows(d.text, ' ') s
+        FROM {documents} d, LATERAL split_to_rows(d.text, ' ') s
         GROUP BY d.doc_id
-        """
+        """,
     )
 
 
@@ -348,13 +345,13 @@ def x9_udtf_analyze_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     slicing; Python's whitespace split == the suite's canonical word split.
     See :func:`sparkfusion.functions.aggregates.register_analyze_udtf`."""
     from ..functions.aggregates import register_analyze_udtf
-    from ..session import table
 
     register_analyze_udtf(spark)
-    table(spark, sf_dir, "documents").createOrReplaceTempView("x9_docs")
-    return spark.sql(
+    return star_sql(
+        spark,
+        sf_dir,
         "SELECT d.doc_id, s.w1, s.w2, s.w3 "
-        "FROM x9_docs d, LATERAL first_words(lower(d.text), 3) s"
+        "FROM {documents} d, LATERAL first_words(lower(d.text), 3) s",
     )
 
 

@@ -118,14 +118,15 @@ def test_to_arrow_roundtrip(spark, sf_dir):
 
 def test_parameterized_sql(spark, sf_dir):
     """spark.sql named parameters: injection-safe literal binding."""
-    from sparkfusion.session import load_star
+    from sparkfusion.session import table
 
-    load_star(spark, sf_dir, ("nation",))
+    nation = table(spark, sf_dir, "nation")
     out = spark.sql(
-        "SELECT count(*) AS n FROM nation WHERE n_regionkey = :rk",
+        "SELECT count(*) AS n FROM {nation} WHERE n_regionkey = :rk",
         args={"rk": 1},
+        nation=nation,
     ).collect()
-    want = spark.sql("SELECT count(*) AS n FROM nation WHERE n_regionkey = 1").collect()
+    want = spark.sql("SELECT count(*) AS n FROM {nation} WHERE n_regionkey = 1", nation=nation).collect()
     assert out == want
 
 

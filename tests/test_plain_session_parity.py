@@ -2,7 +2,7 @@
 SparkSession (no sparkfusion confs). Any query that silently depends on
 ``get_session()``'s confs passes local checks but fails the driver — the r5
 failure mode. This test runs the conf-risk slice (queries that never route a
-read through ``table()``/``load_star()``, i.e. the ``_ensure_read_confs``
+read through ``table()``/``star_sql()``, i.e. the ``_ensure_read_confs``
 bypass set, plus the three r5 driver-red sources queries) through
 ``tools/check_oracle.py --plain`` in a SUBPROCESS, so the session really is
 plain rather than the test-session singleton."""
@@ -13,7 +13,7 @@ import os
 import subprocess
 import sys
 
-# queries whose bodies never call table()/load_star()/events_with_ts directly
+# queries whose bodies never call table()/star_sql()/events_with_ts directly
 # (AST scan; some route confs through module helpers — those passing here is
 # the proof), plus the r5 driver-mismatch set.
 PLAIN_SLICE = [

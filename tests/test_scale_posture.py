@@ -88,7 +88,7 @@ SC_ENVIRONMENT_ALLOWED = {
 
 #: files allowed to run Spark's parquet schema inference over a star-table
 #: path — every other star-table read goes through ``session.table`` /
-#: ``load_star`` / ``star_meta``, which read the table's metadata record
+#: ``star_sql`` / ``star_meta``, which read the table's metadata record
 STAR_READ_ALLOWED = {
     "session.py": "table_meta: the one inference per table vintage, and table()'s schema-pinned read",
 }
@@ -105,6 +105,20 @@ FOOTER_READ_ALLOWED = {
 JVM_LAUNCH_ALLOWED = {
     "session.py": "_jvm_launch: the one owner of the driver JVM's launch options",
 }
+
+
+#: files allowed to create a temp view — a query binds its frames into SQL
+#: by value (``session.star_sql``, ``spark.sql(..., name=df)``), which drops
+#: each view when the call returns; registering a named view is the contract
+#: only of the entry points that mirror the reference's ``register_*`` calls
+TEMP_VIEW_ALLOWED = {
+    "context.py": "SessionContext.register_*/cache_table: registration is the caller's request",
+    "sources/readers.py": "register_csv/register_parquet/read_batch(name=): registration is the contract",
+    "sources/s3.py": "read_from_s3: registers the object as a table, as the reference's read_from_s3 does",
+    "sources/s3py.py": "read_from_s3_native: registers the prefix as a table, as the reference's read_from_s3 does",
+}
+
+_TEMP_VIEW_CALLS = ("createOrReplaceTempView", "createTempView", "createGlobalTempView", "registerTempTable")
 
 
 def _walk_calls(path):
@@ -355,7 +369,7 @@ def _footer_open_sites(full):
 def test_table_metadata_has_one_owner():
     """Schema inference over a star-table path, or a pyarrow footer open,
     outside its owner fails here: read star tables through
-    ``session.table`` / ``load_star`` / ``star_meta`` and footer facts
+    ``session.table`` / ``star_sql`` / ``star_meta`` and footer facts
     through ``session.table_files`` / ``files_meta``. Allowlisted files must
     still make the call, so a stale row cannot linger."""
     bad, seen_read, seen_footer = [], set(), set()
@@ -488,4 +502,24 @@ def test_jvm_launch_options_have_one_owner():
                 bad.append(f"{rel}:{line}")
     assert not bad, f"JVM launch options set outside session.py: {bad}"
     stale = set(JVM_LAUNCH_ALLOWED) - seen
+    assert not stale, f"stale allowlist rows: {sorted(stale)}"
+
+
+def test_temp_views_have_one_owner():
+    """A temp view created outside the registration entry points fails
+    here: a query that names its tables in the caller's catalog overwrites
+    the caller's own views of the same name and leaves its own behind.
+    Allowlisted files must still make the call, so a stale row cannot
+    linger."""
+    bad, seen = [], set()
+    for full, rel in _pkg_files():
+        for attr, line in _walk_calls(full):
+            if attr not in _TEMP_VIEW_CALLS:
+                continue
+            if rel in TEMP_VIEW_ALLOWED:
+                seen.add(rel)
+            else:
+                bad.append(f"{rel}:{line} .{attr}()")
+    assert not bad, f"temp views created outside their owners: {bad}"
+    stale = set(TEMP_VIEW_ALLOWED) - seen
     assert not stale, f"stale allowlist rows: {sorted(stale)}"

@@ -3,7 +3,9 @@
 ``session.scoped_conf`` is the one owner of temporary conf changes and
 ``streaming.windows._transform_with_state`` the one writer of
 ``sc.environment``; these tests pin that both leave the session as they
-found it, on their own and through the suite queries that use them.
+found it, on their own and through the suite queries that use them. SQL
+queries bind their tables by value (``session.star_sql``), so they leave
+the caller's catalog as they found it too.
 """
 
 from __future__ import annotations
@@ -115,3 +117,48 @@ def test_tws_operators_leave_sc_environment_as_found(spark, sf_dir):
         before = dict(env)
         assert build().isStreaming, name
         assert dict(env) == before, name
+
+
+#: every suite query that runs SQL over star tables or an ad-hoc frame
+SQL_QUERIES = [
+    "cte_count",
+    "a6_scalar_subquery_least",
+    "a7_round_robin",
+    "j2_inner_join_sql",
+    "w1_window_agg_sql",
+    "a11_grouping_sets",
+    "a13_correlated_subquery",
+    "a26_string_agg",
+    "l1_lateral_topn",
+    "q5_local_supplier_volume",
+    "q7_volume_shipping",
+    "q8_market_share",
+    "q9_product_profit",
+    "q12_priority_shipping",
+    "q13_order_distribution",
+    "q16_supplier_cnt",
+    "q19_disjunctive_revenue",
+    "q20_part_promotion",
+    "rc1_recursive_subtree",
+    "udtf_split_rows",
+    "x2_udf_sql_registered",
+    "x5_udtf_lateral_words",
+    "x9_udtf_analyze_schema",
+    "s1_s3_csv_roundtrip",
+]
+
+
+def test_sql_queries_leave_the_catalog_as_found(spark, sf_dir):
+    """A caller's own view named like a star table keeps its rows, and no
+    query leaves a view behind."""
+    from sparkfusion.suite import queries
+
+    spark.createDataFrame([(1,), (2,), (3,)], "o_orderkey long").createOrReplaceTempView("orders")
+    try:
+        before = sorted(spark.catalog.listTables(), key=lambda t: t.name)
+        for name in SQL_QUERIES:
+            queries()[name](spark, sf_dir).count()
+        assert spark.table("orders").count() == 3
+        assert sorted(spark.catalog.listTables(), key=lambda t: t.name) == before
+    finally:
+        spark.catalog.dropTempView("orders")
