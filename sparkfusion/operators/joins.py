@@ -59,14 +59,17 @@ def salted_join(
     even when it is concentrated in few input partitions AND keeps the salt
     a pure function of the data (reproducible across retries/layouts).
     Either way results are a pure join equivalence. Replication factor ×
-    right size is the cost — use only when the right side is modest.
+    right size is the cost — use only when the right side is modest. The
+    right side is replicated by exploding a salt sequence, not by a cross
+    join: without cost-based optimization Catalyst sizes a cross join as the
+    product of its inputs' sizes, which can make a small replicated right
+    side look bigger than the left, and so make the left the broadcast
+    build side.
 
     Only inner/left/semi/anti joins are equivalence-preserving under right-side
     replication: a right or full outer join would emit each unmatched right row
     ``salt`` times (once per replica). Those forms raise ``ValueError``.
     """
-    from pyspark.sql.functions import broadcast
-
     allowed = {"inner", "left", "left_outer", "leftouter", "semi", "left_semi",
                "leftsemi", "anti", "left_anti", "leftanti"}
     if how.lower() not in allowed:
@@ -81,7 +84,6 @@ def salted_join(
     else:
         left_salt = F.pmod(F.spark_partition_id(), F.lit(salt))
     salted_left = left.withColumn("__salt", left_salt)
-    salts = left.sparkSession.range(salt).select(F.col("id").cast("int").alias("__salt"))
-    salted_right = right.crossJoin(broadcast(salts))
+    salted_right = right.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
     out = salted_left.join(salted_right, on=[key, "__salt"], how=how)
     return out.drop("__salt")

@@ -109,13 +109,20 @@ JVM_ARCHIVE_DIR = os.path.join(
 _DYNAMIC_ARCHIVE_MAGIC = 0xF00BABA8
 
 
+def _archive_conf_dir() -> str:
+    """The empty conf dir a launch with an archive points Spark at."""
+    return os.path.join(JVM_ARCHIVE_DIR, "conf")
+
+
 def _jvm_archive_path() -> str | None:
-    """The archive for the JDK and jar set a launch would use now, or None
-    when there is nothing to key it on. The key is the resolved ``java`` as
-    Spark's launcher finds it (``$JAVA_HOME/bin/java``, else ``java`` on the
-    PATH), the stat of that JDK's ``libjvm.so``, and the name, size and
-    mtime of each jar in ``$SPARK_HOME/jars``: a JDK update or a changed jar
-    gets a new archive instead of one the JVM would refuse."""
+    """The archive for the JDK, jar set and checkout a launch would use now,
+    or None when there is nothing to key it on. The key is the resolved
+    ``java`` as Spark's launcher finds it (``$JAVA_HOME/bin/java``, else
+    ``java`` on the PATH), the stat of that JDK's ``libjvm.so``, the name,
+    size and mtime of each jar in ``$SPARK_HOME/jars``, and the absolute
+    path of the launch's conf dir, which the archive records at the head of
+    its classpath: a JDK update, a changed jar or a moved checkout gets a
+    new archive instead of one the JVM would refuse."""
     from pyspark.find_spark_home import _find_spark_home
 
     java_home = os.environ.get("JAVA_HOME")
@@ -127,7 +134,7 @@ def _jvm_archive_path() -> str | None:
     jars = sorted(glob.glob(os.path.join(_find_spark_home(), "jars", "*.jar")))
     if not os.path.exists(libjvm) or not jars:
         return None
-    key = repr((java, files_meta([libjvm]).files, files_meta(jars).signature))
+    key = repr((java, files_meta([libjvm]).files, files_meta(jars).signature, _archive_conf_dir()))
     return os.path.join(JVM_ARCHIVE_DIR, hashlib.sha256(key.encode()).hexdigest()[:16] + ".jsa")
 
 
@@ -192,7 +199,7 @@ def _jvm_launch_conf() -> tuple[str, str] | None:
     archive = _jvm_archive_path()
     if archive is None or any(c.isspace() for c in archive):
         return None  # Spark splits the options string on whitespace
-    conf_dir = os.path.join(JVM_ARCHIVE_DIR, "conf")
+    conf_dir = _archive_conf_dir()
     try:
         os.makedirs(conf_dir, exist_ok=True)
         if os.listdir(conf_dir) or not os.access(JVM_ARCHIVE_DIR, os.W_OK):

@@ -8,8 +8,11 @@ stick to int/string columns (float text round-trips are format-dependent).
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
+import uuid
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +40,18 @@ def _parquet_vintage(sf_dir: str, name: str) -> str:
     (:func:`sparkfusion.session.table_files`), which lists a directory's
     part files rather than stat-ing the directory itself."""
     return f"{sf_dir}|{table_files(os.path.join(sf_dir, f'{name}.parquet')).signature}"
+
+
+@contextlib.contextmanager
+def _view_name(spark: SparkSession) -> Iterator[str]:
+    """A fresh view name for a registering reader, dropped when the ``with``
+    body exits. A frame the body returns from ``spark.sql`` has bound the
+    view's plan at analysis, so the caller's catalog ends as it began."""
+    name = f"_sparkfusion_{uuid.uuid4().hex}"
+    try:
+        yield name
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 @register(
@@ -92,10 +107,11 @@ def s4_s5_s11_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = os.path.join(IO_DIR, "supplier_pq")
     write_parquet(table(spark, sf_dir, "supplier"), path)
-    register_parquet(spark, "supplier_rt", path)
-    return spark.sql(
-        "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier_rt WHERE s_acctbal > 0"
-    )
+    with _view_name(spark) as name:
+        register_parquet(spark, name, path)
+        return spark.sql(
+            f"SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM {name} WHERE s_acctbal > 0"
+        )
 
 
 @register(
@@ -107,12 +123,12 @@ def s4_s5_s11_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s7_memory_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-memory batch source (reference ``ctx.read_batch``/``register_batch``,
-    ``examples/dataframe/query.rs:41``) — the ``idnamedata`` fixture."""
+    ``examples/dataframe/query.rs:41``) — the ``idnamedata`` fixture,
+    returned as a frame without registering a view."""
     return read_batch(
         spark,
         [(1, "foo", 42), (2, "bar", 43), (3, "baz", 44)],
         schema="id int, name string, data int",
-        name="mem_batch",
     )
 
 
@@ -305,10 +321,10 @@ def s24_s3_native_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(4)
     )
     write_to_s3_native(slice_df, "sparkfusion-suite", "roundtrip/orders", **opts)
-    return read_from_s3_native(
-        spark, "sparkfusion-suite", "roundtrip/orders",
-        name="s24_orders_back", **opts,
-    )
+    with _view_name(spark) as name:
+        return read_from_s3_native(
+            spark, "sparkfusion-suite", "roundtrip/orders", name=name, **opts
+        )
 
 
 @register(
@@ -637,7 +653,6 @@ def s27_s3_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     across batch boundaries. Replay idempotence (original manifest wins,
     replay objects swept) is pinned separately in tests/test_s3_native.py."""
     import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -683,9 +698,8 @@ def s27_s3_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination(180)
     shutil.rmtree(base, ignore_errors=True)
-    return read_from_s3_native(
-        spark, "sparkfusion-suite", prefix, name=f"s27_back_{run}", **opts
-    )
+    with _view_name(spark) as name:
+        return read_from_s3_native(spark, "sparkfusion-suite", prefix, name=name, **opts)
 
 
 @register(

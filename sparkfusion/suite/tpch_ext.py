@@ -101,21 +101,29 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape (adapted: the EXISTS condition is 'shipped after order
     date' — the schema has no commit/receipt dates): priority histogram of
-    orders with at least one late-shipped item. The EXISTS becomes a left-semi
-    hash join on orderkey with the non-equi date predicate as join residual —
-    at 100 TB the semi join keeps the probe side at orders width and never
-    duplicates matching orders."""
-    orders = table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-07-01 00:00:00").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("1996-10-01 00:00:00").cast("timestamp_ntz"))
+    orders with at least one late-shipped item. The EXISTS is not a left-semi
+    join: Spark's broadcast join can build only a semi join's right side,
+    which there is the whole ``lineitem`` scan. Instead ``lineitem`` streams
+    through an inner join against the broadcast quarter of ``orders``, with
+    the date predicate as join residual, and the matches are reduced to one
+    row per order (``o_orderkey`` is orders' key) before the count, so only
+    matching line items reach the shuffle."""
+    orders = (
+        table(spark, sf_dir, "orders")
+        .filter(
+            (F.col("o_orderdate") >= F.lit("1996-07-01 00:00:00").cast("timestamp_ntz"))
+            & (F.col("o_orderdate") < F.lit("1996-10-01 00:00:00").cast("timestamp_ntz"))
+        )
+        .select("o_orderkey", "o_orderdate", "o_orderpriority")
     )
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     return (
-        orders.join(
-            li,
-            (orders.o_orderkey == li.l_orderkey) & (li.l_shipdate > orders.o_orderdate),
-            "left_semi",
+        li.join(
+            F.broadcast(orders),
+            (li.l_orderkey == orders.o_orderkey) & (li.l_shipdate > orders.o_orderdate),
         )
+        .select("o_orderkey", "o_orderpriority")
+        .distinct()
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
     )
@@ -374,36 +382,45 @@ def q21_late_sole_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     date — no commit/receipt dates in this schema): line items of finalized
     multi-supplier orders where THIS supplier was the only late one. The
     oracle keeps Q21's classic correlated EXISTS / NOT EXISTS; the Spark
-    plan decorrelates both into ONE per-order aggregate (distinct-supplier
-    count and distinct-late-supplier count) joined back to the late rows —
-    one extra shuffle on orderkey instead of two correlated re-scans of
-    lineitem, the shape that survives 100 TB."""
+    plan decorrelates both into ONE per-order aggregate with no join back
+    to the line items. An order has a second supplier when its min and max
+    ``l_suppkey`` differ, and exactly one late supplier when the min and max
+    of its late suppliers are equal; that supplier's late rows are then the
+    order's late rows with a supplier. All five are algebraic, so
+    ``lineitem`` streams once through the broadcast ``orders`` into one
+    partially aggregated shuffle on orderkey."""
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
-    lo = (
+    late_supp = F.when(late, F.col("l_suppkey"))
+    per_order = (
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey", "l_shipdate")
         .join(
-            table(spark, sf_dir, "orders")
-            .filter(F.col("o_orderstatus") == "F")
-            .select("o_orderkey", "o_orderdate"),
+            F.broadcast(
+                table(spark, sf_dir, "orders")
+                .filter(F.col("o_orderstatus") == "F")
+                .select("o_orderkey", "o_orderdate")
+            ),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        .withColumn("__late", late)
-    )
-    stats = lo.groupBy("l_orderkey").agg(
-        F.countDistinct("l_suppkey").alias("__n_supp"),
-        F.countDistinct(F.when(F.col("__late"), F.col("l_suppkey"))).alias(
-            "__n_late_supp"
-        ),
+        .groupBy("l_orderkey")
+        .agg(
+            F.min("l_suppkey").alias("__min_supp"),
+            F.max("l_suppkey").alias("__max_supp"),
+            F.min(late_supp).alias("__min_late"),
+            F.max(late_supp).alias("__max_late"),
+            F.count(late_supp).alias("__n_late"),
+        )
+        .filter(
+            (F.col("__min_supp") != F.col("__max_supp"))
+            & (F.col("__min_late") == F.col("__max_late"))
+        )
     )
     sup = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
-        lo.filter(F.col("__late"))
-        .join(stats, "l_orderkey")
-        .filter((F.col("__n_supp") > 1) & (F.col("__n_late_supp") == 1))
-        .join(F.broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
+        per_order.join(F.broadcast(sup), F.col("__min_late") == F.col("s_suppkey"))
         .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
+        # coalesce keeps numwait NOT NULL, as the oracle's COUNT(*) is
+        .agg(F.coalesce(F.sum("__n_late"), F.lit(0)).alias("numwait"))
     )
 
 

@@ -63,9 +63,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q5_SQL = f"""
 SELECT n_name,
        CAST(SUM({_REV}) AS DOUBLE) AS revenue
-FROM {{customer}}
-JOIN {{orders}} ON c_custkey = o_custkey
-JOIN {{lineitem}} ON l_orderkey = o_orderkey
+FROM {{lineitem}}
+JOIN {{orders}} ON l_orderkey = o_orderkey
+JOIN {{customer}} ON c_custkey = o_custkey
 JOIN {{supplier}} ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
 JOIN {{nation}} ON s_nationkey = n_nationkey
 JOIN {{region}} ON n_regionkey = r_regionkey
@@ -79,8 +79,13 @@ GROUP BY n_name
 @register("q5_local_supplier_volume", oracle=star_oracle(_Q5_SQL))
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join through the full star (fact ⋈ two dims ⋈
-    nation ⋈ region) with a local-supplier condition; nation/region/supplier
-    broadcast, the fact side never re-shuffles between the chained joins."""
+    nation ⋈ region) with a local-supplier condition. The text names the
+    fact table first: without cost-based optimization Catalyst sizes a join
+    as the product of its inputs' sizes, so a ``customer ⋈ orders`` written
+    first would look bigger than the lone ``lineitem`` scan and make the
+    fact table the broadcast build side. Fact first, ``orders``,
+    ``customer``, ``supplier``, ``nation`` and ``region`` are broadcast and
+    ``lineitem`` streams through every join without a shuffle."""
     return star_sql(spark, sf_dir, _Q5_SQL)
 
 

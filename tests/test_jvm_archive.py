@@ -101,6 +101,23 @@ def test_complete_archive_is_mapped(written):
     assert archive in out["mapped"]
 
 
+def test_moved_checkout_writes_its_own_archive(written, tmp_path):
+    """The archive records the conf dir's absolute path on its classpath,
+    so a copy of the checkout cannot map it: the copy's launch keys a new
+    archive, deletes the copied one and writes its own at a clean exit."""
+    archive_dir, _ = written
+    copied = _key_path(archive_dir)
+    moved_dir = tmp_path / "moved" / ".jvm_archive"
+    shutil.copytree(archive_dir, moved_dir)
+    archive = _key_path(moved_dir)
+    assert os.path.basename(archive) != os.path.basename(copied)
+    out = _launch(moved_dir, "clean")
+    assert out["flags"] == [f"-XX:ArchiveClassesAtExit={archive}"]
+    assert out["rc"] == 0
+    assert session._archive_complete(archive)
+    assert not os.path.exists(moved_dir / os.path.basename(copied))
+
+
 @pytest.mark.parametrize(
     "content",
     [b"\0" * 65536, b"not a class-data archive\n" * 100],

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkfusion.session import table
+from sparkfusion.suite import REGISTRY, queries
 
 
 def plan_of(df, execute: bool = False) -> str:
@@ -22,6 +23,85 @@ def plan_of(df, execute: bool = False) -> str:
         # action would spawn a separate one
         df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _plan_children(node) -> list:
+    """The plans under ``node``, including those ``children`` does not
+    list: a query stage's plan, a reused exchange's original, an adaptive
+    plan's current plan and expression subqueries."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if cls.endswith("QueryStageExec"):  # Broadcast-, Shuffle-, ResultQueryStageExec
+        return [node.plan()]
+    if cls == "ReusedExchangeExec":
+        return [node.child()]
+    return _seq(node.children()) + _seq(node.subqueries())
+
+
+def broadcast_scans(df) -> list[frozenset[tuple[str, bool]]]:
+    """Run ``df``, then list, for each BroadcastExchange in its final
+    adaptive plan, the parquet tables scanned under it as
+    ``(table, via_aggregate)`` pairs. ``via_aggregate`` is True when an
+    aggregate sits between the broadcast and the scan, so the broadcast
+    holds one row per group rather than the table's rows."""
+    df.collect()
+    found: list[set] = []
+
+    def walk(node, open_broadcasts: list[int], aggregated: list[bool]) -> None:
+        cls = node.getClass().getSimpleName()
+        if cls == "BroadcastExchangeExec":
+            found.append(set())
+            open_broadcasts = [*open_broadcasts, len(found) - 1]
+            aggregated = [*aggregated, False]
+        elif "Aggregate" in cls:
+            aggregated = [True] * len(aggregated)
+        elif cls == "FileSourceScanExec":
+            for path in _seq(node.relation().location().rootPaths()):
+                name = path.getName().removesuffix(".parquet")
+                for i, agg in zip(open_broadcasts, aggregated):
+                    found[i].add((name, agg))
+        for child in _plan_children(node):
+            walk(child, open_broadcasts, aggregated)
+
+    walk(df._jdf.queryExecution().executedPlan(), [], [])
+    return [frozenset(tables) for tables in found]
+
+
+#: the suite modules whose queries join over the star tables
+STAR_MODULES = ("relational", "relational_ext", "tpch_like", "tpch_ext")
+
+#: star queries whose final plan may broadcast a raw ``lineitem`` scan
+RAW_LINEITEM_BROADCAST_ALLOWED = {
+    "j6_semi_join": "left-semi join whose build side can only be lineitem; "
+    "broadcasting supplier or the distinct suppliers lost its A/B",
+}
+
+
+def _star_queries() -> list[str]:
+    return [
+        name for name in queries()
+        if REGISTRY[name].fn.__module__.rsplit(".", 1)[-1] in STAR_MODULES
+    ]
+
+
+@pytest.mark.parametrize("name", _star_queries())
+def test_star_joins_stream_lineitem(spark, sf_dir, name):
+    """The fact table streams through every star join: no BroadcastExchange
+    holds a raw ``lineitem`` scan (a ``lineitem`` aggregate may be
+    broadcast). Without cost-based optimization Catalyst sizes a join as
+    the product of its inputs' sizes, so the join order a query's text or
+    frames give decides the build side; the fact table goes first."""
+    scans = broadcast_scans(queries()[name](spark, sf_dir))
+    raw_lineitem = any(("lineitem", False) in tables for tables in scans)
+    if name in RAW_LINEITEM_BROADCAST_ALLOWED:
+        assert raw_lineitem, f"{name} streams lineitem now: drop its allowlist row"
+    else:
+        assert not raw_lineitem, scans
 
 
 def test_q1_filter_pushed_to_scan(spark, sf_dir):

@@ -37,7 +37,6 @@ CROSSJOIN_ALLOWED = {
     "suite/curation_suite.py": "broadcast scalar totals / 5-row grid frames",
     "llm/chunking.py": "broadcast packing offsets",
     "operators/quality.py": "1-row count aggregates combined into a report row",
-    "operators/joins.py": "salted join replicates right side × broadcast salts",
     "llm/ivf.py": "broadcast centroid table (k ≤ 256) and query vectors",
     "llm/text.py": "broadcast 1-row corpus totals (PMI normalizers)",
     "operators/graph.py": "broadcast 1-row count aggregates (triangle report)",

@@ -119,7 +119,8 @@ def test_tws_operators_leave_sc_environment_as_found(spark, sf_dir):
         assert dict(env) == before, name
 
 
-#: every suite query that runs SQL over star tables or an ad-hoc frame
+#: every suite query that runs SQL over star tables or an ad-hoc frame, or
+#: reads through a reader that registers a view
 SQL_QUERIES = [
     "cte_count",
     "a6_scalar_subquery_least",
@@ -145,6 +146,10 @@ SQL_QUERIES = [
     "x5_udtf_lateral_words",
     "x9_udtf_analyze_schema",
     "s1_s3_csv_roundtrip",
+    "s4_s5_s11_parquet_roundtrip",
+    "s7_memory_batch",
+    "s24_s3_native_roundtrip",
+    "s27_s3_stream_sink_roundtrip",
 ]
 
 
