@@ -59,12 +59,15 @@ def salted_join(
     even when it is concentrated in few input partitions AND keeps the salt
     a pure function of the data (reproducible across retries/layouts).
     Either way results are a pure join equivalence. Replication factor ×
-    right size is the cost — use only when the right side is modest. The
-    right side is replicated by exploding a salt sequence, not by a cross
-    join: without cost-based optimization Catalyst sizes a cross join as the
-    product of its inputs' sizes, which can make a small replicated right
-    side look bigger than the left, and so make the left the broadcast
-    build side.
+    right size is the cost. The right side is replicated by exploding a
+    salt sequence, not by a cross join: without cost-based optimization
+    Catalyst sizes a cross join as the product of its inputs' sizes, which
+    can make a small replicated right side look bigger than the left, and
+    so make the left the broadcast build side. The explode's estimate errs
+    the other way: it is the right side's own size, without the ``salt``
+    factor, so a right side under the broadcast threshold is broadcast at
+    ``salt`` times its estimate. Use only when ``salt`` × right size is
+    modest.
 
     Only inner/left/semi/anti joins are equivalence-preserving under right-side
     replication: a right or full outer join would emit each unmatched right row

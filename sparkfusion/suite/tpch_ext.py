@@ -103,11 +103,12 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     date' — the schema has no commit/receipt dates): priority histogram of
     orders with at least one late-shipped item. The EXISTS is not a left-semi
     join: Spark's broadcast join can build only a semi join's right side,
-    which there is the whole ``lineitem`` scan. Instead ``lineitem`` streams
-    through an inner join against the broadcast quarter of ``orders``, with
-    the date predicate as join residual, and the matches are reduced to one
-    row per order (``o_orderkey`` is orders' key) before the count, so only
-    matching line items reach the shuffle."""
+    which there is the whole ``lineitem`` scan. Instead ``lineitem`` comes
+    first in an inner join against the quarter of ``orders``, with the date
+    predicate as join residual, so the planner may build either side and
+    picks the smaller (``orders``, broadcast while it is under the
+    threshold). The matches are reduced to one row per order
+    (``o_orderkey`` is orders' key) before the count."""
     orders = (
         table(spark, sf_dir, "orders")
         .filter(
@@ -119,7 +120,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     return (
         li.join(
-            F.broadcast(orders),
+            orders,
             (li.l_orderkey == orders.o_orderkey) & (li.l_shipdate > orders.o_orderdate),
         )
         .select("o_orderkey", "o_orderpriority")
@@ -387,19 +388,19 @@ def q21_late_sole_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``l_suppkey`` differ, and exactly one late supplier when the min and max
     of its late suppliers are equal; that supplier's late rows are then the
     order's late rows with a supplier. All five are algebraic, so
-    ``lineitem`` streams once through the broadcast ``orders`` into one
-    partially aggregated shuffle on orderkey."""
+    ``lineitem`` is scanned once, joined to the finalized ``orders`` (the
+    planner builds from the smaller side, ``orders``, broadcast while it is
+    under the threshold), and reaches one partially aggregated shuffle on
+    orderkey."""
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
     late_supp = F.when(late, F.col("l_suppkey"))
     per_order = (
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey", "l_shipdate")
         .join(
-            F.broadcast(
-                table(spark, sf_dir, "orders")
-                .filter(F.col("o_orderstatus") == "F")
-                .select("o_orderkey", "o_orderdate")
-            ),
+            table(spark, sf_dir, "orders")
+            .filter(F.col("o_orderstatus") == "F")
+            .select("o_orderkey", "o_orderdate"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .groupBy("l_orderkey")

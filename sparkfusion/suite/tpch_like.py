@@ -83,9 +83,9 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact table first: without cost-based optimization Catalyst sizes a join
     as the product of its inputs' sizes, so a ``customer ⋈ orders`` written
     first would look bigger than the lone ``lineitem`` scan and make the
-    fact table the broadcast build side. Fact first, ``orders``,
-    ``customer``, ``supplier``, ``nation`` and ``region`` are broadcast and
-    ``lineitem`` streams through every join without a shuffle."""
+    fact table the broadcast build side. Fact first, ``lineitem`` is inside
+    the left input of every later join, so it is not their build side, and
+    each dimension is broadcast while it is under the broadcast threshold."""
     return star_sql(spark, sf_dir, _Q5_SQL)
 
 
