@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import cosine_r9
+from .similarity import cosine_queries, cosine_r9, cosine_topk, top_k_per_query
 
 
 def ivf_build(
@@ -91,6 +91,51 @@ def euclid_r9(a, b):
     return F.round(F.sqrt(diff2), 9)
 
 
+def seeded_cells(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    emb_col: str = "embedding",
+    n_cells: int = 8,
+) -> tuple[DataFrame, DataFrame]:
+    """A *deterministic* data-derived coarse quantizer: the centroids are the
+    embeddings of the first ``n_cells`` ids (a degenerate but fully
+    SQL-expressible KMeans init — both engines can name the exact same
+    centroid rows), and every vector goes to its nearest centroid by
+    :func:`euclid_r9`, cell-id tiebreak, in one pass against the broadcast
+    centroids. Returns ``(assigned, centroids)`` in :func:`ivf_build`'s
+    shapes: ``(id, emb, cell)`` and ``(cell, centroid)``."""
+    cents = df.filter(F.col(id_col) < n_cells).select(
+        F.col(id_col).cast("int").alias("cell"), F.col(emb_col).alias("centroid")
+    )
+    d = euclid_r9(F.col(emb_col), F.col("centroid")).alias("d")
+    assigned = (
+        df.select(id_col, emb_col)
+        .crossJoin(F.broadcast(cents))
+        .groupBy(id_col)
+        .agg(
+            F.min(F.struct(d, F.col("cell"))).alias("m"),
+            F.first(emb_col).alias(emb_col),
+        )
+        .select(id_col, emb_col, F.col("m.cell").alias("cell"))
+    )
+    return assigned, cents
+
+
+def probe_cells(centroids: DataFrame, queries: DataFrame, nprobe: int) -> DataFrame:
+    """Each query's ``nprobe`` nearest cells by round-9 centroid cosine,
+    cell-id tiebreak: the centroids ``(cell, centroid)`` cross the broadcast
+    query batch ``(q_id, q_emb, ...)`` and the shared ranker keeps ``nprobe``
+    rows per query. Returns the query columns with ``cell`` and
+    ``centroid``. :func:`.pq.probe_cells_for_query` is the driver-side twin
+    over literal centroids."""
+    pairs = centroids.crossJoin(F.broadcast(queries)).withColumn(
+        "c_cos", cosine_r9(F.col("centroid"), F.col("q_emb"))
+    )
+    return top_k_per_query(pairs, nprobe, F.col("c_cos").desc(), F.col("cell")).drop(
+        "c_cos"
+    )
+
+
 def ivf_seeded_topk(
     df: DataFrame,
     query_df: DataFrame,
@@ -100,51 +145,20 @@ def ivf_seeded_topk(
     n_cells: int = 8,
     nprobe: int = 2,
 ) -> DataFrame:
-    """IVF-Flat top-k with a *deterministic* data-derived coarse quantizer:
-    the centroids are the embeddings of the first ``n_cells`` ids (a
-    degenerate but fully SQL-expressible KMeans init — both engines can name
-    the exact same centroid rows, so assignment, probe selection, and ranking
-    are cross-engine reproducible). :func:`ivf_build`'s Lloyd's-trained
-    quantizer is the production one (better-balanced cells); its recall is
-    covered in tests/test_ivf.py. Same plan shape either way: broadcast
-    centroids, argmin-assign (one map pass), probe = ``nprobe`` nearest cells
-    by centroid cosine, rank only vectors in probed cells.
+    """IVF-Flat top-k over the :func:`seeded_cells` quantizer, so
+    assignment, probe selection and ranking are cross-engine reproducible.
+    :func:`ivf_build`'s Lloyd's-trained quantizer is the production one
+    (better-balanced cells); its recall is covered in tests/test_ivf.py.
+    Same plan shape either way (:func:`ivf_topk`): broadcast centroids,
+    argmin-assign (one map pass), probe = each query's ``nprobe`` nearest
+    cells by centroid cosine, rank only vectors in probed cells.
 
     At 100 TB the assigned corpus is written partitioned by ``cell`` so the
     probe is a partition-pruned scan; here the cell filter is a broadcast
-    semi-join with the probed-cell frame (nprobe rows).
+    equi-join with the probed-cell frame (nprobe rows per query).
     """
-    cents = df.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).cast("int").alias("cell"), F.col(emb_col).alias("c_emb")
-    )
-    pairs = (
-        df.select(id_col, emb_col)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("d", euclid_r9(F.col(emb_col), F.col("c_emb")))
-    )
-    assigned = (
-        pairs.groupBy(id_col)
-        .agg(
-            F.min(F.struct("d", "cell")).alias("m"),
-            F.first(emb_col).alias(emb_col),
-        )
-        .select(id_col, emb_col, F.col("m.cell").alias("cell"))
-    )
-    q = query_df.select(F.col(id_col).alias("q_id"), F.col(emb_col).alias("q_emb"))
-    probe = (
-        cents.crossJoin(F.broadcast(q))
-        .withColumn("c_cos", cosine_r9(F.col("c_emb"), F.col("q_emb")))
-        .orderBy(F.col("c_cos").desc(), F.col("cell"))
-        .limit(nprobe)
-        .select("cell", "q_id", "q_emb")
-    )
-    scored = (
-        assigned.join(F.broadcast(probe), "cell")
-        .filter(F.col(id_col) != F.col("q_id"))
-        .withColumn("cos", cosine_r9(F.col(emb_col), F.col("q_emb")))
-        .select("q_id", F.col(id_col), "cos")
-    )
-    return scored.orderBy(F.col("cos").desc(), F.col(id_col)).limit(k)
+    assigned, cents = seeded_cells(df, id_col, emb_col, n_cells)
+    return ivf_topk(assigned, cents, query_df, id_col, emb_col, k, nprobe)
 
 
 def ivf_topk(
@@ -156,21 +170,9 @@ def ivf_topk(
     k: int = 10,
     nprobe: int = 4,
 ) -> DataFrame:
-    """Probe the ``nprobe`` cells whose centroids are nearest the query (by
+    """Probe the ``nprobe`` cells whose centroids are nearest each query (by
     cosine), then rank only vectors in those cells. Recall < 1 by design —
     the IVF trade; raise ``nprobe`` to trade scan cost for recall."""
-    q = query_df.select(F.col(id_col).alias("q_id"), F.col(emb_col).alias("q_emb"))
-    probe_cells = (
-        centroids.crossJoin(F.broadcast(q))
-        .withColumn("c_cos", cosine_r9(F.col("centroid"), F.col("q_emb")))
-        .orderBy(F.col("c_cos").desc(), F.col("cell"))
-        .limit(nprobe)
-        .select("cell", "q_id", "q_emb")
-    )
-    candidates = assigned.join(F.broadcast(probe_cells), "cell").filter(
-        F.col(id_col) != F.col("q_id")
-    )
-    scored = candidates.withColumn(
-        "cos", cosine_r9(F.col(emb_col), F.col("q_emb"))
-    ).select("q_id", F.col(id_col), "cos")
-    return scored.orderBy(F.col("cos").desc(), F.col(id_col)).limit(k)
+    q = cosine_queries(query_df, id_col, emb_col)
+    probed = probe_cells(centroids, q, nprobe).drop("centroid")
+    return cosine_topk(assigned, probed, k, id_col, emb_col, ["cell"])

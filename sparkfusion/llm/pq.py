@@ -33,10 +33,11 @@ engines and partitionings.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ivf import euclid_r9
+from .ivf import euclid_r9, probe_cells, seeded_cells
+from .similarity import score_candidates, top_k_per_query
 from ..errors import PlanError
 
 __all__ = [
@@ -117,7 +118,7 @@ def pq_adc_topk(
     n_codes: int = 8,
     k: int = 10,
 ) -> DataFrame:
-    """Top-k nearest (smallest approximate L2) to the single query vector via
+    """Top-k nearest (smallest approximate L2) to each query vector via
     PQ + ADC with the seeded codebook. Returns ``(q_id, id, adist)`` —
     ``adist`` is the DECIMAL-exact sum of per-subspace codeword distances
     cast to double."""
@@ -130,13 +131,9 @@ def pq_adc_topk(
         .withColumn("qd", euclid_r9(F.col("sub"), F.col("csub")).cast("decimal(18,9)"))
         .select("q_id", "j", "code", "qd")
     )
-    scored = (
-        codes.join(F.broadcast(dtab), ["j", "code"])
-        .filter(F.col(id_col) != F.col("q_id"))
-        .groupBy("q_id", id_col)
-        .agg(F.sum("qd").cast("double").alias("adist"))
-    )
-    return scored.orderBy(F.col("adist").asc(), F.col(id_col).asc()).limit(k)
+    adist = F.sum("qd").cast("double")
+    scored = score_candidates(codes, dtab, adist, "adist", id_col, ["j", "code"], aggregate=True)
+    return top_k_per_query(scored, k, F.col("adist").asc(), F.col(id_col).asc())
 
 
 def ivfpq_adc_topk(
@@ -180,27 +177,17 @@ def ivfpq_adc_topk(
     groupBy(id) DECIMAL sum. No cross join ever touches raw vectors beyond
     the broadcast-centroid assignment pass.
     """
-    from .similarity import cosine_r9
-
     if dim % m != 0:
         raise PlanError(f"dim {dim} not divisible by m {m}")
     dsub = dim // m
-    cents = df.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).cast("int").alias("cell"),
-        F.col(emb_col).cast("array<double>").alias("cvec"),
-    )
-    v = df.select(id_col, F.col(emb_col).cast("array<double>").alias("v"))
-    assigned = (
-        v.crossJoin(F.broadcast(cents))
-        .withColumn("d", euclid_r9(F.col("v"), F.col("cvec")))
-        .groupBy(id_col)
-        .agg(F.min(F.struct("d", "cell")).alias("best"), F.first("v").alias("v"))
-        .select(id_col, "v", F.col("best.cell").alias("cell"))
-    )
+    assigned, cents = seeded_cells(df, id_col, emb_col, n_cells)
+    cents = cents.select("cell", F.col("centroid").cast("array<double>").alias("centroid"))
     resid = assigned.join(F.broadcast(cents), "cell").select(
         id_col,
         "cell",
-        F.zip_with("v", "cvec", lambda a, b: a - b).alias("r"),
+        F.zip_with(
+            F.col(emb_col).cast("array<double>"), "centroid", lambda a, b: a - b
+        ).alias("r"),
     )
     cb = (
         resid.filter(
@@ -224,25 +211,10 @@ def ivfpq_adc_topk(
     )
     q = query_df.select(
         F.col(id_col).alias("q_id"),
-        F.col(emb_col).cast("array<double>").alias("qv"),
+        F.col(emb_col).cast("array<double>").alias("q_emb"),
     )
-    probe = (
-        cents.crossJoin(F.broadcast(q))
-        .withColumn("c_cos", cosine_r9(F.col("cvec"), F.col("qv")))
-        .withColumn(
-            "probe_rank",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(
-                    F.col("c_cos").desc(), F.col("cell")
-                )
-            ),
-        )
-        .filter(F.col("probe_rank") <= nprobe)
-        .select(
-            "cell",
-            "q_id",
-            F.zip_with("qv", "cvec", lambda a, b: a - b).alias("qr"),
-        )
+    probe = probe_cells(cents, q, nprobe).select(
+        "cell", "q_id", F.zip_with("q_emb", "centroid", lambda a, b: a - b).alias("qr")
     )
     dtab = (
         probe.select(
@@ -255,27 +227,11 @@ def ivfpq_adc_topk(
         )
         .select("cell", "q_id", "j", "code", "qd")
     )
-    scored = (
-        codes.join(F.broadcast(dtab), ["cell", "j", "code"])
-        .filter(F.col(id_col) != F.col("q_id"))
-        .groupBy("q_id", id_col)
-        .agg(F.sum("qd").cast("double").alias("adist"))
+    adist = F.sum("qd").cast("double")
+    scored = score_candidates(
+        codes, dtab, adist, "adist", id_col, ["cell", "j", "code"], aggregate=True
     )
-    # Per-q_id top-k (row_number, not a global limit) so a multi-row
-    # query_df gets k candidates per query; identical output for one query.
-    return (
-        scored.withColumn(
-            "topk_rank",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(
-                    F.col("adist").asc(), F.col(id_col).asc()
-                )
-            ),
-        )
-        .filter(F.col("topk_rank") <= k)
-        .drop("topk_rank")
-        .orderBy(F.col("adist").asc(), F.col(id_col).asc())
-    )
+    return top_k_per_query(scored, k, F.col("adist").asc(), F.col(id_col).asc())
 
 
 def _sub_structs(col: str, m: int, dsub: int):
@@ -623,12 +579,12 @@ def ivfpq_store_adc_topk(
     filter applied here becomes a PartitionFilters prune (only
     ``nprobe/n_cells`` of the data is listed or scanned). Per candidate row
     the kernel does m int64 table lookups and one add — no float math, no
-    join, no shuffle; the only rows that leave the scan are the per-task
-    top-k heap's (TakeOrderedAndProject). Output ``(q_id, id, adist)`` is
-    bit-identical to :func:`ivfpq_adc_topk` (pytest-pinned): the int64 ADC
-    sum over :func:`ivfpq_adc_table` keys equals the in-plan DECIMAL(18,9)
-    sum at scale 9, and the final ``total/1e9`` float64 division reproduces
-    the DECIMAL→double cast.
+    join; the only rows that leave a scan task are its top k (the partial
+    WindowGroupLimit of the shared :func:`.similarity.top_k_per_query`).
+    Output ``(q_id, id, adist)`` is bit-identical to :func:`ivfpq_adc_topk`
+    (pytest-pinned): the int64 ADC sum over :func:`ivfpq_adc_table` keys
+    equals the in-plan DECIMAL(18,9) sum at scale 9, and the final
+    ``total/1e9`` float64 division reproduces the DECIMAL→double cast.
 
     Mirrors the reference's query-over-registered-store pattern
     (``examples/dataframe/query.rs:118-123``) at index scale."""
@@ -674,7 +630,7 @@ def ivfpq_store_adc_topk(
     scored = pruned.select(id_col, "cell", *code_cols).mapInPandas(
         score, schema=schema
     )
-    return scored.orderBy(F.col("adist").asc(), F.col(id_col).asc()).limit(k)
+    return top_k_per_query(scored, k, F.col("adist").asc(), F.col(id_col).asc())
 
 
 def probe_cells_for_query(

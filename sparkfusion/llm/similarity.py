@@ -7,15 +7,18 @@ touches ~1/2^bits of the corpus). Dot products are computed JVM-side with
 bit-identical to the DuckDB oracle's ``list_cosine_similarity(::DOUBLE[])``
 (verified empirically), so results hash-match without rounding.
 
-At 100 TB: the corpus side is partitioned; each query broadcast; per-partition
-top-k heaps merge via ``TakeOrderedAndProject`` (orderBy+limit). For batched
-query sets, bucket both sides and equi-join on bucket — same plan shape as
-:func:`ann_topk`.
+Every top-k operator here and in :mod:`.ivf` and :mod:`.pq` runs the same
+two steps. :func:`score_candidates` joins the corpus to the broadcast query
+batch — keyed by bucket, by probed cell or by nothing — and scores each pair;
+:func:`top_k_per_query` keeps each query's top k. A query frame of n rows
+gets n top-k lists from one corpus pass. At 100 TB the corpus stays
+partitioned and never shuffles: each map task cuts its candidates to k rows
+per query before the one exchange.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from ..errors import PlanError
 
@@ -57,6 +60,80 @@ def cosine_r9_pre(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Colum
     fan-out ``f`` this removes ``2·f - 2`` array folds per row (~3× less fold
     work at f≈1). The norm columns survive the join as ordinary columns."""
     return F.round(dot(a, b) / norm_a / norm_b, 9)
+
+
+def score_candidates(
+    corpus: DataFrame,
+    queries: DataFrame,
+    score: Column,
+    name: str,
+    id_col: str = "vec_id",
+    on: list[str] | None = None,
+    aggregate: bool = False,
+) -> DataFrame:
+    """The candidate join of every top-k operator: join ``corpus`` to the
+    broadcast query batch ``queries`` (``q_id`` and the columns ``score``
+    reads), drop each query's pair with its own id, and score every pair as
+    ``(q_id, id, name)``.
+
+    The join keys on the ``on`` columns (a bucket, a probed cell, a PQ
+    ``(cell, j, code)`` lookup) or, without ``on``, pairs every corpus row
+    with every query in one broadcast nested-loop join. ``score`` is read per
+    pair; with ``aggregate`` it is an aggregate over each ``(q_id, id)``
+    group instead — the ADC sum of the per-subspace table lookups."""
+    q = F.broadcast(queries)
+    other = F.col(id_col) != F.col("q_id")
+    pairs = corpus.join(q, on).filter(other) if on else corpus.join(q, other)
+    if aggregate:
+        return pairs.groupBy("q_id", id_col).agg(score.alias(name))
+    return pairs.select("q_id", F.col(id_col), score.alias(name))
+
+
+def top_k_per_query(scored: DataFrame, k: int, *order: Column) -> DataFrame:
+    """The ranker of every top-k operator and IVF cell probe: keep the first
+    ``k`` rows of each ``q_id`` in ``scored`` by ``order`` (which ends in a
+    unique tiebreak), as ``row_number() <= k`` over ``partitionBy("q_id")``.
+
+    Spark plans a partial WindowGroupLimit in each map task, so at most k
+    rows per query per partition cross the one exchange; each query's rows
+    come out together and in rank order. Spark only plans that limit for
+    ``k`` up to ``spark.sql.optimizer.windowGroupLimitThreshold``; past it
+    every scored candidate of a query would shuffle to one task, so a larger
+    ``k`` raises :class:`PlanError`."""
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    threshold = int(scored.sparkSession.conf.get(key))
+    if k > threshold:
+        raise PlanError(
+            f"top-k of {k} per query exceeds {key}={threshold}: Spark would "
+            "not cut candidates before the shuffle"
+        )
+    rank = F.row_number().over(Window.partitionBy("q_id").orderBy(*order))
+    return scored.withColumn("_rank", rank).filter(F.col("_rank") <= k).drop("_rank")
+
+
+def cosine_queries(query_df: DataFrame, id_col: str, emb_col: str, *extra: Column) -> DataFrame:
+    """The query batch of a cosine top-k: ``(q_id, q_emb, q_norm, *extra)``."""
+    emb = F.col(emb_col)
+    return query_df.select(
+        F.col(id_col).alias("q_id"), emb.alias("q_emb"), norm(emb).alias("q_norm"), *extra
+    )
+
+
+def cosine_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    emb_col: str = "embedding",
+    on: list[str] | None = None,
+) -> DataFrame:
+    """Each query's ``k`` nearest corpus rows by round-9 cosine (id
+    tiebreak) among those sharing its ``on`` keys: ``(q_id, id, cos)``.
+    ``queries`` comes from :func:`cosine_queries`."""
+    corpus = corpus.withColumn("c_norm", norm(F.col(emb_col)))
+    cos = cosine_r9_pre(F.col(emb_col), F.col("q_emb"), F.col("c_norm"), F.col("q_norm"))
+    scored = score_candidates(corpus, queries, cos, "cos", id_col, on)
+    return top_k_per_query(scored, k, F.col("cos").desc(), F.col(id_col))
 
 
 def sign_bucket(emb: Column, bits: int = 4, offset: int = 0) -> Column:
@@ -111,27 +188,9 @@ def rp_ann_topk(
     """ANN top-k over random-hyperplane buckets (the production LSH; the
     sign-bucket variant remains as the dependency-free teaching form)."""
     planes = random_hyperplanes(dim, n_planes, seed)
-    q = query_df.select(
-        F.col(id_col).alias("q_id"),
-        F.col(emb_col).alias("q_emb"),
-        hyperplane_bucket(F.col(emb_col), planes).alias("bucket"),
-        norm(F.col(emb_col)).alias("q_norm"),
-    )
-    corpus = df.withColumn("bucket", hyperplane_bucket(F.col(emb_col), planes)).withColumn(
-        "c_norm", norm(F.col(emb_col))
-    )
-    scored = (
-        corpus.join(F.broadcast(q), "bucket")
-        .filter(F.col(id_col) != F.col("q_id"))
-        .withColumn(
-            "cos",
-            cosine_r9_pre(
-                F.col(emb_col), F.col("q_emb"), F.col("c_norm"), F.col("q_norm")
-            ),
-        )
-        .select("q_id", F.col(id_col), "cos")
-    )
-    return scored.orderBy(F.col("cos").desc(), F.col(id_col)).limit(k)
+    bucket = hyperplane_bucket(F.col(emb_col), planes).alias("bucket")
+    q = cosine_queries(query_df, id_col, emb_col, bucket)
+    return cosine_topk(df.select("*", bucket), q, k, id_col, emb_col, ["bucket"])
 
 
 def brute_force_topk(
@@ -141,26 +200,10 @@ def brute_force_topk(
     emb_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
-    """Exact cosine top-k of ``query_df`` (single row: q_id, q_emb) against
-    the corpus. Plans as broadcast-join + per-partition heap (orderBy+limit →
-    TakeOrderedAndProject): no shuffle of the corpus."""
-    q = query_df.select(
-        F.col(id_col).alias("q_id"),
-        F.col(emb_col).alias("q_emb"),
-        norm(F.col(emb_col)).alias("q_norm"),
-    )
-    scored = (
-        df.withColumn("c_norm", norm(F.col(emb_col)))
-        .join(F.broadcast(q), F.col(id_col) != F.col("q_id"))
-        .withColumn(
-            "cos",
-            cosine_r9_pre(
-                F.col(emb_col), F.col("q_emb"), F.col("c_norm"), F.col("q_norm")
-            ),
-        )
-        .select("q_id", F.col(id_col), "cos")
-    )
-    return scored.orderBy(F.col("cos").desc(), F.col(id_col)).limit(k)
+    """Exact cosine top-k of every row of ``query_df`` against the corpus,
+    in one corpus pass: the query batch broadcasts into a nested-loop join
+    and each map task keeps k rows per query — the corpus never shuffles."""
+    return cosine_topk(df, cosine_queries(query_df, id_col, emb_col), k, id_col, emb_col)
 
 
 def sq_quantize(emb: Column, clip: float = 1.0) -> Column:
@@ -193,76 +236,27 @@ def sq_topk(
     """Int8-quantized brute-force top-k: quantize corpus and query with
     :func:`sq_quantize`, rank by the INTEGER dot product of the codes.
 
-    Same plan as :func:`brute_force_topk` (broadcast query + per-partition
-    heap, zero corpus shuffle) but the hot loop is int multiply-adds over
-    4×-smaller data — the scan-speed path when the corpus doesn't fit in
-    page cache. Scoring is exact integer arithmetic, so results are
-    bit-reproducible across engines (unlike float dot products, which
-    depend on summation order). Production retrieval re-scores this top-k
-    with full-precision cosine; the quantized ranking is the candidate
-    generator.
+    Same plan as :func:`brute_force_topk` (broadcast query batch, k rows
+    per query per map task, zero corpus shuffle) but the hot loop is int
+    multiply-adds over 4×-smaller data — the scan-speed path when the
+    corpus doesn't fit in page cache. Scoring is exact integer arithmetic,
+    so results are bit-reproducible across engines (unlike float dot
+    products, which depend on summation order). Production retrieval
+    re-scores this top-k with full-precision cosine; the quantized ranking
+    is the candidate generator.
     """
     q = query_df.select(
         F.col(id_col).alias("q_id"),
         sq_quantize(F.col(emb_col), clip).alias("q_code"),
     )
-    scored = (
-        df.select(F.col(id_col), sq_quantize(F.col(emb_col), clip).alias("c_code"))
-        .join(F.broadcast(q), F.col(id_col) != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col(id_col),
-            F.aggregate(
-                F.zip_with(
-                    F.col("c_code"),
-                    F.col("q_code"),
-                    lambda a, b: (a * b).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("qscore"),
-        )
+    corpus = df.select(F.col(id_col), sq_quantize(F.col(emb_col), clip).alias("c_code"))
+    qscore = F.aggregate(
+        F.zip_with(F.col("c_code"), F.col("q_code"), lambda a, b: (a * b).cast("long")),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
     )
-    return scored.orderBy(F.col("qscore").desc(), F.col(id_col)).limit(k)
-
-
-def multi_query_topk(
-    df: DataFrame,
-    query_df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """Batched exact top-k: every row of ``query_df`` gets its own top-k in
-    ONE corpus pass. The query batch broadcasts; ranking is a window
-    partitioned by query id (per-partition sorts of corpus×queries slices,
-    never a global sort) — the grouped-ranking form real retrieval serving
-    uses; for very large query batches, bucket both sides instead (see
-    module doc)."""
-    from pyspark.sql import Window
-
-    q = query_df.select(
-        F.col(id_col).alias("q_id"),
-        F.col(emb_col).alias("q_emb"),
-        norm(F.col(emb_col)).alias("q_norm"),
-    )
-    scored = (
-        df.withColumn("c_norm", norm(F.col(emb_col)))
-        .join(F.broadcast(q), F.col(id_col) != F.col("q_id"))
-        .withColumn(
-            "cos",
-            cosine_r9_pre(
-                F.col(emb_col), F.col("q_emb"), F.col("c_norm"), F.col("q_norm")
-            ),
-        )
-        .select("q_id", F.col(id_col), "cos")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    scored = score_candidates(corpus, q, qscore, "qscore", id_col)
+    return top_k_per_query(scored, k, F.col("qscore").desc(), F.col(id_col))
 
 
 def ann_topk(
@@ -276,27 +270,9 @@ def ann_topk(
     """Bucketed ANN top-k: rank only corpus vectors in the query's sign
     bucket (~1/2^bits of the data scanned; recall < 1 by design — the classic
     LSH trade)."""
-    q = query_df.select(
-        F.col(id_col).alias("q_id"),
-        F.col(emb_col).alias("q_emb"),
-        sign_bucket(F.col(emb_col), bits).alias("bucket"),
-        norm(F.col(emb_col)).alias("q_norm"),
-    )
-    corpus = df.withColumn("bucket", sign_bucket(F.col(emb_col), bits)).withColumn(
-        "c_norm", norm(F.col(emb_col))
-    )
-    scored = (
-        corpus.join(F.broadcast(q), "bucket")
-        .filter(F.col(id_col) != F.col("q_id"))
-        .withColumn(
-            "cos",
-            cosine_r9_pre(
-                F.col(emb_col), F.col("q_emb"), F.col("c_norm"), F.col("q_norm")
-            ),
-        )
-        .select("q_id", F.col(id_col), "cos")
-    )
-    return scored.orderBy(F.col("cos").desc(), F.col(id_col)).limit(k)
+    bucket = sign_bucket(F.col(emb_col), bits).alias("bucket")
+    q = cosine_queries(query_df, id_col, emb_col, bucket)
+    return cosine_topk(df.select("*", bucket), q, k, id_col, emb_col, ["bucket"])
 
 
 def brute_force_topk_np(
@@ -311,9 +287,12 @@ def brute_force_topk_np(
     The expression-fold form (:func:`brute_force_topk`) evaluates one
     interpreted fold per pair — fine to ~10^4 vectors. This variant scores
     each partition's batch as a single ``matrix @ query`` product inside
-    ``mapInPandas`` (one Python worker pass, no shuffle), then merges
-    per-partition heaps via orderBy+limit. This is the 100 TB brute-force
-    shape: compute-bound BLAS, linear scan, broadcast query.
+    ``mapInPandas`` (one Python worker pass), then ranks with the shared
+    :func:`top_k_per_query`. This is the 100 TB brute-force shape:
+    compute-bound BLAS, linear scan, broadcast query.
+
+    It scores ONE query: a ``query_df`` with more than one row (or none)
+    raises :class:`PlanError`; :func:`brute_force_topk` is the batched form.
 
     Results are rounded to 9 decimals like every cosine here — BLAS pairwise
     summation agrees with the sequential fold well past that precision.
@@ -321,9 +300,15 @@ def brute_force_topk_np(
     import numpy as np
     import pandas as pd
 
-    q_row = query_df.select(F.col(id_col), F.col(emb_col)).head()
-    q_id = q_row[0]
-    q_vec = np.asarray(q_row[1], dtype=np.float64)
+    rows = query_df.select(F.col(id_col), F.col(emb_col)).head(2)
+    if len(rows) != 1:
+        raise PlanError(
+            "brute_force_topk_np scores exactly one query row, got "
+            f"{'none' if not rows else 'more than one'}; brute_force_topk "
+            "ranks a batch"
+        )
+    q_id = rows[0][0]
+    q_vec = np.asarray(rows[0][1], dtype=np.float64)
     q_unit = q_vec / np.linalg.norm(q_vec)
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast((q_id, q_unit))
@@ -343,7 +328,7 @@ def brute_force_topk_np(
             yield out[out[id_col] != qid]
 
     scored = df.select(id_col, emb_col).mapInPandas(score, out_schema)
-    return scored.orderBy(F.col("cos").desc(), F.col(id_col)).limit(k)
+    return top_k_per_query(scored, k, F.col("cos").desc(), F.col(id_col))
 
 
 def cosine_pairs(
@@ -918,8 +903,8 @@ def rrf_fuse(
     Determinism: ranks are exact integers; the score is two IEEE double
     terms added in pinned order and rounded to 9 dp; ties break on id — so
     the fused top-k SET is cross-engine reproducible. Scale: both inputs are
-    top-N candidate frames (TakeOrderedAndProject output, never the corpus),
-    so the fusion join is trivially broadcast-sized."""
+    top-N candidate frames, never the corpus, so the fusion join is trivially
+    broadcast-sized."""
     fused = a.join(b, id_col, "full_outer")
     one = F.lit(1).cast("double")
     score = F.round(

@@ -859,8 +859,8 @@ def p21_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k (query = vec 0): broadcast query +
-    per-partition heap (TakeOrderedAndProject) — corpus never shuffles."""
+    """Brute-force cosine top-k (query = vec 0): broadcast query batch +
+    per-query ranking, k rows per map task — corpus never shuffles."""
     emb = table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0)
     return similarity.brute_force_topk(emb, q, "vec_id", "embedding", k=10)
@@ -903,12 +903,13 @@ def sim_cosine_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sim_multi_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched exact top-k (5 queries, one corpus pass): the query batch
-    broadcasts, ranking is a per-query window — grouped top-k, never a
-    global sort; the serving-path shape for retrieval workloads."""
+    """Batched exact top-k (5 queries, one corpus pass): the same
+    ``brute_force_topk`` as ``sim_cosine_topk`` with a 5-row query frame —
+    the batch broadcasts and every query gets its own top-k, never a global
+    sort; the serving-path shape for retrieval workloads."""
     emb = table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    return similarity.multi_query_topk(emb, q, "vec_id", "embedding", k=10)
+    return similarity.brute_force_topk(emb, q, "vec_id", "embedding", k=10)
 
 
 @register(
@@ -1248,7 +1249,7 @@ def sim_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8 scalar-quantized brute-force top-k (query = vec 0): symmetric
     round(clamp(x,±1)*127) codes, ranking by exact INTEGER dot product —
     bit-reproducible across engines, 4× less scan bandwidth than float32.
-    Same broadcast-query + TakeOrderedAndProject plan as
+    Same broadcast-query + per-query ranking plan as
     ``sim_cosine_topk``; production re-scores the shortlist at full
     precision. See :func:`sparkfusion.llm.similarity.sq_topk`."""
     emb = table(spark, sf_dir, "embeddings")
@@ -3088,9 +3089,9 @@ def ret1_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     with embedding-cosine ranking (the sim_cosine_topk scan, docs keyed by
     vec_id) via reciprocal-rank fusion — the production RAG pattern where
     lexical and semantic retrievers vote by rank, not by incomparable
-    scores. Both sides are cut to their top-100 candidates with
-    TakeOrderedAndProject (distributed heap — the corpus is never globally
-    sorted); ranks come from a row_number over the tiny candidate frame;
+    scores. Both sides are cut to their top-100 candidates by distributed
+    heaps (TakeOrderedAndProject for BM25, the per-query ranker for the
+    cosine scan) — the corpus is never globally sorted; ranks come from a row_number over the tiny candidate frame;
     the fusion is a full outer join of two ≤100-row frames. See
     :func:`sparkfusion.llm.similarity.rrf_fuse` for the determinism
     contract (integer ranks, pinned-order double sum, round-9, id ties)."""

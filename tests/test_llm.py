@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from sparkfusion.llm import dedup, multimodal, similarity, text
+from sparkfusion.llm import dedup, ivf, multimodal, pq, similarity, text
 
 
 @pytest.fixture(scope="module")
@@ -146,6 +146,59 @@ def test_similarity_topk_ann_subset(spark, sf_dir):
     ann = similarity.ann_topk(emb, q, k=5, bits=4).collect()
     # ANN examines a bucket subset; its best hit can't beat exact best
     assert ann[0].cos <= exact[0].cos + 1e-12
+
+
+#: every top-k operator that takes a query frame, as (corpus, queries, k)
+FRAME_TOPK = {
+    "rp_ann_topk": lambda emb, q, k: similarity.rp_ann_topk(emb, q, k=k),
+    "brute_force_topk": lambda emb, q, k: similarity.brute_force_topk(emb, q, k=k),
+    "brute_force_topk_np": lambda emb, q, k: similarity.brute_force_topk_np(emb, q, k=k),
+    "sq_topk": lambda emb, q, k: similarity.sq_topk(emb, q, k=k),
+    "ann_topk": lambda emb, q, k: similarity.ann_topk(emb, q, k=k, bits=4),
+    "ivf_topk": lambda emb, q, k: ivf.ivf_topk(*ivf.ivf_build(emb, k=8), q, k=k, nprobe=2),
+    "ivf_seeded_topk": lambda emb, q, k: ivf.ivf_seeded_topk(emb, q, k=k, nprobe=2),
+    "pq_adc_topk": lambda emb, q, k: pq.pq_adc_topk(emb, q, k=k),
+    "ivfpq_adc_topk": lambda emb, q, k: pq.ivfpq_adc_topk(emb, q, k=k),
+}
+
+
+@pytest.mark.parametrize("op", list(FRAME_TOPK))
+def test_topk_ranks_each_query_of_a_batch(spark, sf_dir, op):
+    """A 3-row query frame gets one top-k per query: each query's rows in
+    the batch result equal its single-row result, in rank order. The
+    one-query numpy kernel refuses the batch instead of dropping rows."""
+    from sparkfusion.errors import PlanError
+    from sparkfusion.session import table
+
+    topk = FRAME_TOPK[op]
+    emb = table(spark, sf_dir, "embeddings")
+    batch = emb.filter(F.col("vec_id") < 3)
+    if op == "brute_force_topk_np":
+        with pytest.raises(PlanError, match="exactly one query row"):
+            topk(emb, batch, 5)
+        return
+    got = topk(emb, batch, 5).collect()
+    for qid in range(3):
+        single = topk(emb, emb.filter(F.col("vec_id") == qid), 5).collect()
+        assert single and {r.q_id for r in single} == {qid}
+        assert [r for r in got if r.q_id == qid] == single, qid
+
+
+def test_topk_rejects_k_past_window_group_limit(spark, sf_dir):
+    """Past the session's windowGroupLimitThreshold Spark plans no partial
+    limit, so every candidate of a query would shuffle to one task: the
+    shared ranker refuses such a k (and nprobe) when the plan is built."""
+    from sparkfusion.errors import PlanError
+    from sparkfusion.session import table
+
+    limit = int(spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold"))
+    emb = table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") == 0)
+    similarity.brute_force_topk(emb, q, k=limit)  # at the threshold: planned
+    with pytest.raises(PlanError, match="windowGroupLimitThreshold"):
+        similarity.brute_force_topk(emb, q, k=limit + 1)
+    with pytest.raises(PlanError, match="windowGroupLimitThreshold"):
+        ivf.ivf_seeded_topk(emb, q, nprobe=limit + 1)
 
 
 def test_cosine_pairs_banded_recall_vs_exact(spark, sf_dir):

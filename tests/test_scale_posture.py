@@ -30,14 +30,13 @@ CROSSJOIN_ALLOWED = {
     "operators/timeseries.py": "spine × broadcast key-dim (gap fill)",
     "suite/tpch_ext.py": "broadcast 1-row scalar aggregates",
     "suite/llm_suite.py": "broadcast 1-row total / rate frames",
-    "llm/pq.py": "broadcast PQ distance table",
     "suite/quality_suite.py": "broadcast profile scalars",
     "suite/timeseries_suite.py": "broadcast bounds scalars",
     "suite/analytics_suite.py": "broadcast scalar aggregates",
     "suite/curation_suite.py": "broadcast scalar totals / 5-row grid frames",
     "llm/chunking.py": "broadcast packing offsets",
     "operators/quality.py": "1-row count aggregates combined into a report row",
-    "llm/ivf.py": "broadcast centroid table (k ≤ 256) and query vectors",
+    "llm/ivf.py": "seeded assignment: corpus × broadcast n_cells centroids; cell probe: centroids × broadcast query batch",
     "llm/text.py": "broadcast 1-row corpus totals (PMI normalizers)",
     "operators/graph.py": "broadcast 1-row count aggregates (triangle report)",
     "operators/ranks.py": "global_ntile broadcasts the 1-row total-count frame",
