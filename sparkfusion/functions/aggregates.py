@@ -27,6 +27,15 @@ def register_udtf(spark) -> None:
 
     SQL: ``SELECT s.* FROM t, LATERAL split_to_rows(t.text, ' ') s``
     """
+    SplitToRows = _split_to_rows_udtf()
+    spark.udtf.register("split_to_rows", SplitToRows)
+    return SplitToRows
+
+
+def _split_to_rows_udtf():
+    """The ``split_to_rows`` table function, unregistered: one row
+    ``(pos, token)`` per non-empty token, at its raw 0-based split
+    position."""
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="pos int, token string")
@@ -38,7 +47,6 @@ def register_udtf(spark) -> None:
                 if token:
                     yield pos, token
 
-    spark.udtf.register("split_to_rows", SplitToRows)
     return SplitToRows
 
 
@@ -53,6 +61,14 @@ def register_analyze_udtf(spark) -> None:
     is set; the eval itself is the documented UDTF contract site (same
     exemption as split_to_rows above).
     """
+    first_words = _first_words_udtf()
+    spark.udtf.register("first_words", first_words)
+    return first_words.func
+
+
+def _first_words_udtf():
+    """The ``first_words`` table function of :func:`register_analyze_udtf`,
+    unregistered."""
     from pyspark.sql.functions import udtf
     from pyspark.sql.types import StringType, StructType
     from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
@@ -72,5 +88,4 @@ def register_analyze_udtf(spark) -> None:
             ws += [None] * (k - len(ws))
             yield tuple(ws)
 
-    spark.udtf.register("first_words", udtf(FirstWords))
-    return FirstWords
+    return udtf(FirstWords)

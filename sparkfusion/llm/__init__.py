@@ -10,9 +10,10 @@ Four families, all designed partition-parallel for 100 TB:
   near-dup (sign-bit LSH buckets).
 - :mod:`.similarity` — brute-force cosine top-k baseline + bucketed ANN
   scale path.
-- :mod:`.multimodal` — opaque binary columns with typed metadata; decode /
-  feature-extract plumbing over Arrow-batched ``mapInPandas`` (decode itself
-  stubbed deterministically — image/audio libs are not in this container).
+- :mod:`.multimodal` — opaque binary columns with typed metadata; real
+  PPM, PNG, JPEG, WAV and MJPEG decoders, each one per-item function over
+  one Arrow-batched ``mapInPandas`` (only the generic library-codec entry
+  points are stubbed deterministically).
 """
 
 from . import dedup, multimodal, similarity, text  # noqa: F401

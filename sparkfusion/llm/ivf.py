@@ -101,22 +101,30 @@ def seeded_cells(
     embeddings of the first ``n_cells`` ids (a degenerate but fully
     SQL-expressible KMeans init — both engines can name the exact same
     centroid rows), and every vector goes to its nearest centroid by
-    :func:`euclid_r9`, cell-id tiebreak, in one pass against the broadcast
-    centroids. Returns ``(assigned, centroids)`` in :func:`ivf_build`'s
-    shapes: ``(id, emb, cell)`` and ``(cell, centroid)``."""
+    :func:`euclid_r9`, cell-id tiebreak, in one map pass against the
+    broadcast centroids. Returns ``(assigned, centroids)`` in
+    :func:`ivf_build`'s shapes: ``(id, emb, cell)`` and ``(cell, centroid)``.
+
+    The centroids travel as one row holding the ``n_cells`` (cell, centroid)
+    pairs, so the argmin is in-row (``array_min`` over (distance, cell)
+    structs, as :func:`.pq.ivfpq_encode_literal` does) and the corpus is
+    never shuffled."""
     cents = df.filter(F.col(id_col) < n_cells).select(
         F.col(id_col).cast("int").alias("cell"), F.col(emb_col).alias("centroid")
     )
-    d = euclid_r9(F.col(emb_col), F.col("centroid")).alias("d")
+    book = cents.agg(F.collect_list(F.struct("cell", "centroid")).alias("book"))
+    nearest = F.array_min(
+        F.transform(
+            "book",
+            lambda c: F.struct(
+                euclid_r9(F.col(emb_col), c["centroid"]).alias("d"), c["cell"].alias("cell")
+            ),
+        )
+    )
     assigned = (
         df.select(id_col, emb_col)
-        .crossJoin(F.broadcast(cents))
-        .groupBy(id_col)
-        .agg(
-            F.min(F.struct(d, F.col("cell"))).alias("m"),
-            F.first(emb_col).alias(emb_col),
-        )
-        .select(id_col, emb_col, F.col("m.cell").alias("cell"))
+        .crossJoin(F.broadcast(book))
+        .select(id_col, emb_col, nearest["cell"].alias("cell"))
     )
     return assigned, cents
 

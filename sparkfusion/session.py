@@ -28,6 +28,7 @@ import os
 import shutil
 import string
 import sys
+import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -472,6 +473,24 @@ def star_sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     ``examples/dataframe/query.rs:118-173``)."""
     names = {field for _, field, _, _ in string.Formatter().parse(query) if field}
     return spark.sql(query, **{name: table(spark, sf_dir, name) for name in names})
+
+
+@contextlib.contextmanager
+def scoped_function(spark: SparkSession, fn) -> Iterator[str]:
+    """Register the UDF or UDTF ``fn`` under a fresh ``_sparkfusion_<uuid>``
+    name for the ``with`` body, then drop it. The body formats the name into
+    its SQL; a frame it returns from :func:`star_sql` bound the function at
+    analysis and still runs after the drop, and a caller's own function of
+    the usual name is neither replaced nor read in its place."""
+    from pyspark.sql.udtf import UserDefinedTableFunction
+
+    name = f"_sparkfusion_{uuid.uuid4().hex}"
+    registry = spark.udtf if isinstance(fn, UserDefinedTableFunction) else spark.udf
+    registry.register(name, fn)
+    try:
+        yield name
+    finally:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
 
 
 def ts_column(dtype: str) -> Column:

@@ -5,8 +5,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.aggregates import register_udtf, weighted_mean
-from ..session import star_sql, table
+from ..functions.aggregates import _split_to_rows_udtf, weighted_mean
+from ..session import scoped_function, star_sql, table
 from . import register
 
 
@@ -43,13 +43,14 @@ def udaf_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def udtf_split_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF via LATERAL join: one input row → N output rows (table
-    function — absent from the reference's surface, SURVEY.md §2.10)."""
-    register_udtf(spark)
-    return star_sql(
-        spark,
-        sf_dir,
-        """
-        SELECT d.doc_id, s.token
-        FROM {documents} d, LATERAL split_to_rows(d.source, 'c') s
-        """,
-    )
+    function — absent from the reference's surface, SURVEY.md §2.10),
+    registered under a fresh name for the one query."""
+    with scoped_function(spark, _split_to_rows_udtf()) as fn:
+        return star_sql(
+            spark,
+            sf_dir,
+            f"""
+            SELECT d.doc_id, s.token
+            FROM {{documents}} d, LATERAL {fn}(d.source, 'c') s
+            """,
+        )

@@ -9,12 +9,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import (
-    register_split_text,
+    make_split_text_pandas_udf,
     split_row_builtin,
     split_row_pandas_udf,
     split_text_builtin,
 )
-from ..session import star_sql, table
+from ..functions.aggregates import _first_words_udtf, _split_to_rows_udtf
+from ..session import scoped_function, star_sql, table
 from . import register
 
 
@@ -29,8 +30,6 @@ def x1_udf_split_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     at ``examples/udf/udf.rs:17-59``. Arrow-batched pandas UDF — the Spark
     analog of the reference's whole-array processing.
     """
-    from ..functions.udfs import make_split_text_pandas_udf
-
     split_text = make_split_text_pandas_udf(" ")
     return table(spark, sf_dir, "part").select(
         "p_partkey", split_text("p_type").alias("first_word")
@@ -44,9 +43,10 @@ def x1_udf_split_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x2_udf_sql_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UDF registered into the SQL catalog (X2; reference
     ``ctx.register_udf`` → ``select split_text(name) from t``,
-    ``examples/udf/udf.rs:96-106``)."""
-    register_split_text(spark, "split_text", " ")
-    return star_sql(spark, sf_dir, "SELECT p_partkey, split_text(p_type) AS first_word FROM {part}")
+    ``examples/udf/udf.rs:96-106``), under a fresh name for the one query
+    (:func:`~sparkfusion.session.scoped_function`)."""
+    with scoped_function(spark, make_split_text_pandas_udf(" ")) as fn:
+        return star_sql(spark, sf_dir, f"SELECT p_partkey, {fn}(p_type) AS first_word FROM {{part}}")
 
 
 @register(
@@ -278,19 +278,17 @@ def x5_udtf_lateral_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipped without renumbering — so DuckDB mirrors it with
     generate_subscripts - 1. The builtin split + posexplode stays the hot
     path; this proves the extension point end-to-end."""
-    from ..functions.aggregates import register_udtf
-
-    register_udtf(spark)
-    return star_sql(
-        spark,
-        sf_dir,
-        """
-        SELECT d.doc_id, count(*) AS n_words,
-               sum(s.pos * length(s.token)) AS checksum
-        FROM {documents} d, LATERAL split_to_rows(d.text, ' ') s
-        GROUP BY d.doc_id
-        """,
-    )
+    with scoped_function(spark, _split_to_rows_udtf()) as fn:
+        return star_sql(
+            spark,
+            sf_dir,
+            f"""
+            SELECT d.doc_id, count(*) AS n_words,
+                   sum(s.pos * length(s.token)) AS checksum
+            FROM {{documents}} d, LATERAL {fn}(d.text, ' ') s
+            GROUP BY d.doc_id
+            """,
+        )
 
 
 @register(
@@ -344,15 +342,13 @@ def x9_udtf_analyze_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared schema). The oracle recovers the same first-k words by list
     slicing; Python's whitespace split == the suite's canonical word split.
     See :func:`sparkfusion.functions.aggregates.register_analyze_udtf`."""
-    from ..functions.aggregates import register_analyze_udtf
-
-    register_analyze_udtf(spark)
-    return star_sql(
-        spark,
-        sf_dir,
-        "SELECT d.doc_id, s.w1, s.w2, s.w3 "
-        "FROM {documents} d, LATERAL first_words(lower(d.text), 3) s",
-    )
+    with scoped_function(spark, _first_words_udtf()) as fn:
+        return star_sql(
+            spark,
+            sf_dir,
+            "SELECT d.doc_id, s.w1, s.w2, s.w3 "
+            f"FROM {{documents}} d, LATERAL {fn}(lower(d.text), 3) s",
+        )
 
 
 @register(

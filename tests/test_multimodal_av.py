@@ -361,3 +361,45 @@ def test_mixed_media_table_round_trip(spark):
         expect = ("ppm", "png", "jpeg")[r["media_id"] % 3]
         assert r["codec"] == expect
         assert r["width"] > 0 and r["height"] > 0
+
+
+#: each decoder with the payload maker its input needs
+_DECODERS = {
+    "decode_media": "make_ppm",
+    "frame_sample": "make_ppm",
+    "decode_ppm": "make_ppm",
+    "resize_ppm": "make_ppm",
+    "decode_png": "make_png",
+    "decode_jpeg": "make_jpeg",
+    "decode_wav": "make_wav",
+    "audio_dominant_freq": "make_sine_wav",
+    "sample_mjpeg_frames": "make_mjpeg",
+    "probe_headers": "_make_mixed",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DECODERS))
+def test_decoders_ignore_arrow_batch_boundaries(spark, name):
+    """Every decoder gives the same rows whether a partition arrives as one
+    Arrow batch or as several of 3 rows, and an empty partition adds none.
+    The 13 payloads sit in 3 partitions of 4-5 rows plus one empty one."""
+    from sparkfusion.llm import multimodal
+    from sparkfusion.session import scoped_conf
+
+    decoder, make = getattr(multimodal, name), getattr(multimodal, _DECODERS[name])
+    sc = spark.sparkContext
+    rows = [(i, make(i)) for i in range(13)]
+    media = spark.createDataFrame(
+        sc.parallelize(rows, 3).union(sc.parallelize([], 1)),
+        "media_id long, content binary",
+    )
+    assert media.rdd.getNumPartitions() == 4
+
+    def run():
+        return sorted(tuple(r) for r in decoder(media).collect())
+
+    default = run()
+    with scoped_conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", "3"):
+        small = run()
+    assert small == default
+    assert {r[0] for r in default} == set(range(13))

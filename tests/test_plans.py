@@ -540,6 +540,19 @@ def test_ivfpq_broadcasts_index_structures(spark, sf_dir):
     assert plan.count("BroadcastExchange") >= 3
 
 
+def test_seeded_cells_never_shuffles_the_corpus(spark, sf_dir):
+    """The seeded IVF assignment is one map pass: each vector argmins in-row
+    against the broadcast one-row centroid book, so the only exchanges are
+    the book's gather and its broadcast, and no hash Exchange carries the
+    embeddings."""
+    from sparkfusion.llm.ivf import seeded_cells
+
+    assigned, _ = seeded_cells(table(spark, sf_dir, "embeddings"))
+    plan = plan_of(assigned, execute=True)
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "BroadcastNestedLoopJoin" in plan
+
+
 def test_stream_ivfpq_encoder_is_stateless_map(spark, sf_dir):
     """The streaming encoder's batch-equivalent plan: literal index params →
     no aggregate, no join, no exchange (what makes it append-mode legal)."""

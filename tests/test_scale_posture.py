@@ -36,7 +36,7 @@ CROSSJOIN_ALLOWED = {
     "suite/curation_suite.py": "broadcast scalar totals / 5-row grid frames",
     "llm/chunking.py": "broadcast packing offsets",
     "operators/quality.py": "1-row count aggregates combined into a report row",
-    "llm/ivf.py": "seeded assignment: corpus × broadcast n_cells centroids; cell probe: centroids × broadcast query batch",
+    "llm/ivf.py": "seeded assignment: corpus × the broadcast one-row centroid book; cell probe: centroids × broadcast query batch",
     "llm/text.py": "broadcast 1-row corpus totals (PMI normalizers)",
     "operators/graph.py": "broadcast 1-row count aggregates (triangle report)",
     "operators/ranks.py": "global_ntile broadcasts the 1-row total-count frame",
@@ -117,6 +117,14 @@ TEMP_VIEW_ALLOWED = {
 }
 
 _TEMP_VIEW_CALLS = ("createOrReplaceTempView", "createTempView", "createGlobalTempView", "registerTempTable")
+
+#: (call, function) pairs allowed to start Python execution in
+#: llm/multimodal.py — every payload column and every decoder goes through
+#: these two, so the Arrow batch loop and the output columns are written once
+MEDIA_PYTHON_EXEC_ALLOWED = {
+    ("pandas_udf", "_media_table"): "the one payload builder: make(id) as the binary content",
+    ("mapInPandas", "_map_media"): "the one decode pass: per-item rows over (media_id, content)",
+}
 
 
 def _walk_calls(path):
@@ -520,4 +528,37 @@ def test_temp_views_have_one_owner():
                 bad.append(f"{rel}:{line} .{attr}()")
     assert not bad, f"temp views created outside their owners: {bad}"
     stale = set(TEMP_VIEW_ALLOWED) - seen
+    assert not stale, f"stale allowlist rows: {sorted(stale)}"
+
+
+def _media_python_exec_sites(full):
+    """``(call, top-level function, line)`` for each call named in
+    :data:`MEDIA_PYTHON_EXEC_ALLOWED`, however imported; decorators count."""
+    calls = {call for call, _ in MEDIA_PYTHON_EXEC_ALLOWED}
+    with open(full) as f:
+        tree = ast.parse(f.read())
+    for top in tree.body:
+        owner = getattr(top, "name", None)
+        for node in ast.walk(top):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                if name in calls:
+                    yield name, owner, node.lineno
+
+
+def test_media_python_exec_has_one_owner():
+    """A ``mapInPandas`` or ``pandas_udf`` call in llm/multimodal.py outside
+    its owner fails here: a new decoder is a per-item ``rows`` function
+    handed to ``_map_media``, and a new payload table a ``make_*`` function
+    handed to ``_media_table``. Both owners must still make their call, so
+    a stale row cannot linger."""
+    bad, seen = [], set()
+    for name, owner, line in _media_python_exec_sites(os.path.join(PKG, "llm", "multimodal.py")):
+        if (name, owner) in MEDIA_PYTHON_EXEC_ALLOWED:
+            seen.add((name, owner))
+        else:
+            bad.append(f"llm/multimodal.py:{line} {name}() in {owner}")
+    assert not bad, f"Python exec outside its owner: {bad}"
+    stale = set(MEDIA_PYTHON_EXEC_ALLOWED) - seen
     assert not stale, f"stale allowlist rows: {sorted(stale)}"

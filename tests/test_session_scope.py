@@ -167,3 +167,55 @@ def test_sql_queries_leave_the_catalog_as_found(spark, sf_dir):
         assert sorted(spark.catalog.listTables(), key=lambda t: t.name) == before
     finally:
         spark.catalog.dropTempView("orders")
+
+
+#: the suite queries that run SQL over a session function of their own
+FUNCTION_QUERIES = [
+    "x2_udf_sql_registered",
+    "x5_udtf_lateral_words",
+    "udtf_split_rows",
+    "x9_udtf_analyze_schema",
+]
+
+
+def test_function_queries_leave_the_callers_functions_as_found(spark, sf_dir):
+    """A caller's own ``split_text``, ``split_to_rows`` and ``first_words``
+    keep the caller's results through the queries that use functions of
+    those names, and no query leaves a temporary function behind."""
+    from pyspark.sql.functions import udtf
+
+    from sparkfusion.suite import queries
+
+    @udtf(returnType="pos int, token string")
+    class CallersRows:
+        def eval(self, *args):
+            yield -1, "caller"
+
+    @udtf(returnType="w1 string")
+    class CallersWords:
+        def eval(self, *args):
+            yield ("caller",)
+
+    def functions():
+        return sorted(r[0] for r in spark.sql("SHOW USER FUNCTIONS").collect())
+
+    def callers_results():
+        return (
+            spark.sql("SELECT split_text('a b') AS s").first().s,
+            [tuple(r) for r in spark.sql("SELECT * FROM split_to_rows('a b', ' ')").collect()],
+            [tuple(r) for r in spark.sql("SELECT * FROM first_words('a b c', 3)").collect()],
+        )
+
+    spark.udf.register("split_text", lambda s: "caller", "string")
+    spark.udtf.register("split_to_rows", CallersRows)
+    spark.udtf.register("first_words", CallersWords)
+    try:
+        before = functions()
+        assert callers_results() == ("caller", [(-1, "caller")], [("caller",)])
+        for name in FUNCTION_QUERIES:
+            assert queries()[name](spark, sf_dir).count() > 0, name
+        assert functions() == before
+        assert callers_results() == ("caller", [(-1, "caller")], [("caller",)])
+    finally:
+        for name in ("split_text", "split_to_rows", "first_words"):
+            spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
