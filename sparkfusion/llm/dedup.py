@@ -33,26 +33,6 @@ from ..errors import ConvergenceError, PlanError
 # ---------------------------------------------------------------------------
 
 
-def shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word ``n``-gram shingles of the lowercased text.
-
-    Documents shorter than ``n`` words yield an empty array (guarded —
-    ``sequence`` would otherwise produce a descending range).
-
-    PERF CAVEAT: as a single Column expression the word split is inlined
-    into the transform lambda, where Catalyst performs no common-
-    subexpression elimination — it re-runs per array element. Use
-    :func:`exploded_shingles` (two-projection form) in any hot path.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    w = words(F.lower(c))
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(w) - n),
-        lambda i: F.concat_ws(" ", *[F.get(w, i + j) for j in range(n)]),
-    )
-    return F.array_distinct(F.when(F.size(w) >= n, grams).otherwise(F.array()))
-
-
 def exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, shingle) rows — the long form every hash family consumes.
 

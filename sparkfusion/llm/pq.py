@@ -370,7 +370,6 @@ def ivfpq_encode_batch(
     codebook: list[list[list[float]]],
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    exact: bool = True,
 ) -> DataFrame:
     """Production twin of :func:`ivfpq_encode_literal` — same literal index
     parameters, same ``(round-9 distance, lowest-id)`` argmin contract, same
@@ -405,19 +404,6 @@ def ivfpq_encode_batch(
     outgrow executor memory regardless of index size. Non-finite embedding
     components raise a named error up front — a NaN would otherwise flow
     through argmin silently (CLAUDE.md pandas→Arrow NaN rule).
-
-    ``exact=False`` (opt-in, r14 verdict #6) swaps the sequential per-dim
-    fold for the BLAS3 gram expansion ``‖x‖² − 2·x@Cᵀ + ‖c‖²`` — free
-    accumulation order, one dgemm per block instead of ``d`` Python-loop
-    passes. The parity argument WEAKENS from bit-exact to error-bounded:
-    the expansion's absolute error is ≤ ~3·d·ε·B² (ε=2⁻⁵², B=max abs
-    component bound), ≈ 5e-13 for unit-scale d=768 — four orders below the
-    5e-10 half-quantum of the round-9 key, so a code can differ from the
-    exact path only when two codewords' true distances straddle the same
-    rounding boundary within that margin. Measured empirically 0 mismatches
-    at 100k×d=768 (BASELINE.md r15) but NOT provable row-for-row, so the
-    parity fold stays the default and the oracle twin; use ``exact=False``
-    only for bulk ingest where the A/B'd speedup matters.
     """
     import numpy as np
     import pandas as pd
@@ -453,18 +439,6 @@ def ivfpq_encode_batch(
             acc += diff * diff
         return acc
 
-    def _gram_sqdist(x, y, y_sq):
-        # BLAS3 expansion (exact=False): ‖x‖² − 2·x@yᵀ + ‖y‖², clamped at 0
-        # (cancellation can dip epsilon-negative); see docstring envelope
-        x_sq = (x * x).sum(axis=1)
-        return np.maximum(x_sq[:, None] - 2.0 * (x @ y.T) + y_sq[None, :], 0.0)
-
-    cents_sq = (cents_np * cents_np).sum(axis=1)
-    cb_sq = (cb_np * cb_np).sum(axis=2)  # (m, n_codes)
-    sqdist_coarse = (
-        _seq_sqdist if exact else (lambda v, y: _gram_sqdist(v, y, cents_sq))
-    )
-
     def enc(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -484,15 +458,12 @@ def ivfpq_encode_batch(
             ids = pdf[id_col].to_numpy()
             for lo in range(0, len(pdf), row_block):
                 v = vecs[lo : lo + row_block]
-                cell = np.argmin(_r9_key(sqdist_coarse(v, cents_np)), axis=1)
+                cell = np.argmin(_r9_key(_seq_sqdist(v, cents_np)), axis=1)
                 resid = v - cents_np[cell]
                 out = {id_col: ids[lo : lo + row_block], "cell": cell.astype("int32")}
                 for j in range(m):
                     sub = resid[:, j * dsub : (j + 1) * dsub]
-                    if exact:
-                        d2 = _seq_sqdist(sub, cb_np[j])
-                    else:
-                        d2 = _gram_sqdist(sub, cb_np[j], cb_sq[j])
+                    d2 = _seq_sqdist(sub, cb_np[j])
                     out[f"code{j}"] = np.argmin(_r9_key(d2), axis=1).astype(
                         "int32"
                     )

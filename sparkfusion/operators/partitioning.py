@@ -16,14 +16,15 @@ a plan no-op otherwise. The repartition key is the caller's row key
 keyless calls use round-robin, which Spark makes retry-deterministic via its
 sort-before-repartition.
 
-Width is derived from INPUT FILE METADATA (bytes → the scan's split
-arithmetic, parquet footers → rows), NOT from ``df.rdd.getNumPartitions()``:
-accessing ``.rdd`` on an AdaptiveSparkPlan finalizes it, EXECUTING every
-upstream shuffle query stage, and that work is thrown away when the caller's
-rebuilt plan runs (r13 advisor finding). Both helpers therefore assume a
-SCAN-ROOTED input (every current call site selects straight off a parquet
-table); a frame with no resolvable input files is treated as narrow, which
-costs at most one extra exchange and never a double execution.
+Width is derived from SPARK'S OWN FILE INDEX (the file-scan relations'
+bytes → the scan's split arithmetic, under any scheme), NOT from
+``df.rdd.getNumPartitions()``: accessing ``.rdd`` on an AdaptiveSparkPlan
+finalizes it, EXECUTING every upstream shuffle query stage, and that work is
+thrown away when the caller's rebuilt plan runs (r13 advisor finding). Nor
+from the root's ``stats()``: without cost-based optimization Spark sizes a
+join as the product of its inputs. A frame with no file-scan leaf is
+treated as narrow, which costs at most one extra exchange and never a
+double execution.
 
 The rows estimate also bounds the fan-out (``min_rows_per_part``): widening
 a 5k-row input to 32 partitions is pure per-task overhead when each task
@@ -31,12 +32,12 @@ then spins a Python/Arrow worker for ~150 rows of work (r13 driver bench:
 the multimodal paths showed the suite's worst 32-core scaling ratios,
 0.28-0.38 — 32 workers spun up for ~1s of decode). The cap is derived from
 the data (rows ÷ per-row-cost floor), never a constant partition count, so
-at 10× the rows the same call fans out the full core width.
+at 10× the rows the same call fans out the full core width. Footers are
+read only for that cap, and only for local files: a remote input gets none.
 """
 
 from __future__ import annotations
 
-import os
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
@@ -49,6 +50,10 @@ from ..session import files_meta
 #: still one open() per new file; thousands of part files need no exactness)
 _FOOTER_SAMPLE = 16
 
+#: a file-scan leaf of the optimized plan, and its file-indexed relation
+_SCAN_LEAF = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_FILE_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+
 
 def _local_path(uri: str) -> str | None:
     """Filesystem path of a ``file:`` URI (``file:/p`` or ``file:///p``,
@@ -59,58 +64,54 @@ def _local_path(uri: str) -> str | None:
     return None if parsed.scheme else uri
 
 
-def _input_meta(df: DataFrame) -> tuple[int, int | None]:
-    """(estimated scan splits, estimated rows | None) from the frame's input
-    files — pure metadata, runs no Spark job. Splits follow the scan's own
+def _input_meta(df: DataFrame, count_rows: bool = True) -> tuple[int, int | None]:
+    """(estimated scan splits, estimated rows | None) from the distinct
+    relations of the optimized plan's file-scan leaves (a self-join's counts
+    once) — pure metadata, runs no Spark job. Splits follow the scan's own
     packing arithmetic (``maxPartitionBytes`` / ``openCostInBytes``); rows
-    come from parquet footers (sampled + extrapolated past
-    ``_FOOTER_SAMPLE`` files). Sizes and footer rows come from the table
-    metadata record's file part (:func:`sparkfusion.session.files_meta`),
-    so each footer is opened once per file vintage. A frame with no input
-    files (in-memory or checkpoint-rooted) reports (1, None): treated as
-    narrow-input."""
-    files = [f for f in map(_local_path, df.inputFiles()) if f and os.path.exists(f)]
-    if not files:
+    (with ``count_rows``) come from local parquet footers, sampled and
+    extrapolated past ``_FOOTER_SAMPLE`` files. A frame with no file-scan
+    leaf (in-memory or checkpoint-rooted) reports (1, None): narrow."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    rels: list = []
+    for leaf in map(leaves.apply, range(leaves.size())):
+        if leaf.getClass().getName() != _SCAN_LEAF:  # checked before relation()
+            continue
+        rel = leaf.relation()
+        if rel.getClass().getName() == _FILE_RELATION and not any(map(rel.equals, rels)):
+            rels.append(rel)
+    if not rels:
         return 1, None
-    conf = df.sparkSession.conf
-
-    def _bytes_conf(key: str, default: int) -> int:
-        # Spark renders byte confs as "<n>b" / "128m" / "1g" etc.
-        raw = str(conf.get(key, str(default))).strip().lower()
-        if raw.endswith("b"):
-            raw = raw[:-1]
-        mult = 1
-        for suffix, m in (("k", 1024), ("m", 1024**2), ("g", 1024**3)):
-            if raw.endswith(suffix):
-                raw, mult = raw[:-1], m
-                break
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    files = [rel.inputFiles() for rel in rels]  # JVM arrays: len() is one call
+    total_cost = sum(rel.sizeInBytes() for rel in rels)
+    total_cost += conf.filesOpenCostInBytes() * sum(map(len, files))
+    est_splits = max(1, -(-total_cost // conf.filesMaxPartitionBytes()))
+    rows = None
+    local = [_local_path(f) for fs in files for f in fs] if count_rows else []
+    if local and all(local):
         try:
-            return int(raw) * mult
-        except ValueError:
-            return default
-
-    max_split = _bytes_conf("spark.sql.files.maxPartitionBytes", 128 * 1024**2)
-    open_cost = _bytes_conf("spark.sql.files.openCostInBytes", 4 * 1024**2)
-    meta = files_meta(files)
-    total_cost = meta.total_bytes + open_cost * len(files)
-    est_splits = max(1, -(-total_cost // max_split))
-    rows: int | None = None
-    try:
-        sampled = meta.footer_rows(_FOOTER_SAMPLE)
-        rows = sum(sampled) * len(files) // len(sampled)
-    except Exception:  # non-parquet input: bytes estimate still stands
-        rows = None
-    return int(est_splits), rows
+            sampled = files_meta(local[:_FOOTER_SAMPLE]).footer_rows()
+            rows = sum(sampled) * len(local) // len(sampled)
+        except (OSError, ValueError):  # gone or not parquet: bytes still stand
+            pass
+    return est_splits, rows
 
 
 def _target_parts(df: DataFrame, min_rows_per_part: int) -> tuple[int, int]:
     """(input width estimate, capped target) — shared by the helpers below."""
     cores = df.sparkSession.sparkContext.defaultParallelism
-    est_splits, rows = _input_meta(df)
+    est_splits, rows = _input_meta(df, count_rows=min_rows_per_part > 1)
     target = max(cores, est_splits)
-    if rows is not None and min_rows_per_part > 1:
+    if rows is not None:
         target = min(target, max(1, -(-rows // min_rows_per_part)))
     return est_splits, target
+
+
+def compute_width(df: DataFrame) -> int:
+    """The partition count for a compute stage over ``df``: the session's
+    core count, or the input's estimated scan splits when wider."""
+    return _target_parts(df, 1)[1]
 
 
 def spread_for_compute(
@@ -129,11 +130,9 @@ def spread_for_compute(
     return df.repartition(target)
 
 
-def repartition_for_compute(
-    df: DataFrame, *key_cols: str, min_rows_per_part: int = 1
-) -> DataFrame:
-    """``df.repartition(key_cols)`` with an EXPLICIT partition count of
-    ``max(session cores, input width)`` — for pipelines that need the hash
+def repartition_for_compute(df: DataFrame, *key_cols: str) -> DataFrame:
+    """``df.repartition(key_cols)`` with an EXPLICIT partition count, the
+    :func:`compute_width` of ``df`` — for pipelines that need the hash
     co-partitioning downstream (their groupBys on the same key reuse the
     exchange) AND the pre-explode compute parallelism.
 
@@ -145,10 +144,8 @@ def repartition_for_compute(
     An explicit count is exempt from AQE coalescing; deriving it from the
     input width and core count keeps it scale-adaptive — at production the
     scan is already ≥ cores partitions and the count simply preserves that
-    width, never a local constant. ``min_rows_per_part`` caps the count by
-    estimated input rows (see module doc)."""
-    _, target = _target_parts(df, min_rows_per_part)
-    return df.repartition(target, *[F.col(c) for c in key_cols])
+    width, never a local constant."""
+    return df.repartition(compute_width(df), *[F.col(c) for c in key_cols])
 
 
 def copartition_for_compute(
@@ -156,10 +153,10 @@ def copartition_for_compute(
 ) -> tuple[DataFrame, DataFrame]:
     """Both sides of a CPU-dense equi-join, hash-repartitioned on ``key``
     to one EXPLICIT width: the wider of the two sides'
-    :func:`repartition_for_compute` widths. Equal counts keep the sides
+    :func:`compute_width`. Equal counts keep the sides
     co-partitioned (the join plans no further exchange), and an explicit
     count is exempt from AQE's byte-based coalescing, which would otherwise
     shrink a join whose shuffles are tiny but whose in-bucket work is
     quadratic down to a few tasks."""
-    n = max(_target_parts(left, 1)[1], _target_parts(right, 1)[1])
+    n = max(compute_width(left), compute_width(right))
     return left.repartition(n, F.col(key)), right.repartition(n, F.col(key))

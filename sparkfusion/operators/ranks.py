@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..errors import PlanError
+from .partitioning import compute_width
 
 # Internal working column names of these primitives. Every public entry
 # point guards ALL of them: an input frame already carrying e.g. __pid or
@@ -55,14 +56,15 @@ def partition_offsets(
     gives the global position of a partition's first row).
 
     With ``order``, ``df`` is first range-partitioned on it across
-    ``num_partitions`` (default: the session's parallelism), so partition p
-    holds a contiguous key range; without it the current layout is kept.
+    ``num_partitions`` (default: :func:`~.partitioning.compute_width`), so
+    partition p holds a contiguous key range; without it the current layout
+    is kept.
     Callers add their own ``Window.partitionBy("__pid")`` pass and stitch
     the offset on. Rejects an input already carrying a working column.
     """
     _guard_collisions(df, "partition_offsets", *(f"__off_{n}" for n in totals))
     if order is not None:
-        n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+        n_parts = num_partitions or compute_width(df)
         df = df.repartitionByRange(n_parts, *order)
     # localCheckpoint: the offsets subtree and the main subtree BOTH read
     # `tagged`; without materialization each re-executes the input's

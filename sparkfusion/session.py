@@ -331,14 +331,9 @@ class TableFiles:
         a table): it changes whenever the table's bytes could have."""
         return tuple((os.path.basename(p), size, mtime) for p, size, mtime in self.files)
 
-    @property
-    def total_bytes(self) -> int:
-        return sum(size for _, size, _ in self.files)
-
-    def footer_rows(self, limit: int | None = None) -> list[int]:
-        """Footer row count of each data file (of the first ``limit`` files),
-        read once per file vintage."""
-        return [_footer_rows(*f) for f in self.files[:limit]]
+    def footer_rows(self) -> list[int]:
+        """Footer row count of each data file, read once per file vintage."""
+        return [_footer_rows(*f) for f in self.files]
 
     @property
     def rows(self) -> int:

@@ -18,7 +18,7 @@ from ..operators.partitioning import repartition_for_compute
 # canonical word list of lowercased text (matches llm.text.words ∘ lower)
 _W = r"list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x != '')"
 
-# distinct 3-gram shingles (matches llm.dedup.shingles n=3)
+# distinct 3-gram shingles (matches llm.dedup.exploded_shingles n=3)
 _SHINGLES_CTE = f"""
 docs_w AS (SELECT doc_id, {_W} AS w FROM documents),
 sh AS (

@@ -27,6 +27,7 @@ from ..operators import (
     with_typed_null,
     zip_with_index_df,
 )
+from ..operators.partitioning import compute_width
 from ..session import table
 from . import register
 
@@ -213,10 +214,9 @@ def p13b_zip_with_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_custkey) - 1`` because range partitions are in key order.
     """
     cust = table(spark, sf_dir, "customer").select("c_custkey")
-    n_parts = spark.sparkContext.defaultParallelism
-    ranged = cust.repartitionByRange(n_parts, "c_custkey").sortWithinPartitions(
-        "c_custkey"
-    )
+    ranged = cust.repartitionByRange(
+        compute_width(cust), "c_custkey"
+    ).sortWithinPartitions("c_custkey")
     return zip_with_index_df(ranged, "pk")
 
 

@@ -9,13 +9,16 @@ Covered:
   materialize from a 1-split input with AQE on);
 - the rows-derived fan-out cap (min_rows_per_part) bounds small inputs and
   vanishes at larger row counts — derived, never a constant count;
+- widths come from Spark's file index under any scheme: a ``viewfs://``
+  input sizes as the local files it mounts, a range leaf adds nothing and a
+  self-joined relation counts once;
 - neither helper touches df.rdd (AdaptiveSparkPlan finalization executes
   upstream shuffle stages — the r13 advisor finding).
 """
 
 from __future__ import annotations
 
-import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -65,10 +68,8 @@ def test_explicit_count_beats_aqe_coalescing(spark, small_parquet):
 
 def test_min_rows_per_part_caps_small_inputs(spark, small_parquet):
     df = spark.read.parquet(small_parquet)
-    capped = repartition_for_compute(df, "doc_id", min_rows_per_part=100)
-    # 200 rows / 100 rows-per-part floor -> 2 partitions, not cores
-    assert capped.rdd.getNumPartitions() == 2
     spread = spread_for_compute(df, "doc_id", min_rows_per_part=100)
+    # 200 rows / 100 rows-per-part floor -> 2 partitions, not cores
     assert spread.rdd.getNumPartitions() == 2
 
 
@@ -80,7 +81,7 @@ def test_cap_is_derived_not_constant(spark, tmp_path):
         F.col("id").alias("doc_id")
     ).coalesce(1).write.mode("overwrite").parquet(path)
     df = spark.read.parquet(path)
-    wide = repartition_for_compute(df, "doc_id", min_rows_per_part=100)
+    wide = spread_for_compute(df, "doc_id", min_rows_per_part=100)
     assert wide.rdd.getNumPartitions() >= cores
 
 
@@ -110,6 +111,40 @@ def test_input_meta_decodes_file_uris(spark, tmp_path):
     spark.range(0, 1000).coalesce(1).write.parquet(path)
     for ref in (path, "file:" + path, "file://" + path):
         assert _input_meta(spark.read.parquet(ref))[1] == 1000, ref
+
+
+@pytest.fixture
+def viewfs_parquet(spark, small_parquet):
+    """``small_parquet`` read through a ``viewfs://`` mount of its local
+    directory: a path whose scheme is not ``file:``, built without any
+    remote service. The mount is unset afterwards."""
+    name = f"m{uuid.uuid4().hex[:8]}"
+    key = f"fs.viewfs.mounttable.{name}.link./data"
+    local_dir, leaf = small_parquet.rsplit("/", 1)
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    hconf.set(key, f"file://{local_dir}")
+    try:
+        yield spark.read.parquet(f"viewfs://{name}/data/{leaf}")
+    finally:
+        hconf.unset(key)
+
+
+@pytest.mark.parametrize("shape", ["scan", "joined_to_range", "self_join"])
+def test_remote_input_sized_from_file_index(spark, small_parquet, viewfs_parquet, shape):
+    # a viewfs:// scan sizes like the local files it mounts: under a 64-byte
+    # split size it is wide, so the spread is a no-op; a range leaf adds no
+    # bytes, and the relation a self-join reads twice counts once
+    df = viewfs_parquet
+    if shape == "joined_to_range":
+        df = df.join(spark.range(50).withColumnRenamed("id", "doc_id"), "doc_id")
+    elif shape == "self_join":
+        df = df.alias("a").join(df.alias("b"), "doc_id")
+    with scoped_conf(spark, "spark.sql.files.maxPartitionBytes", "64"):
+        assert spread_for_compute(df, "doc_id") is df
+        splits, rows = _input_meta(df)
+        local_splits = _input_meta(spark.read.parquet(small_parquet))[0]
+    assert splits == local_splits > spark.sparkContext.defaultParallelism
+    assert rows is None  # footers are read only for local files
 
 
 def test_checkpoint_rooted_frame_treated_as_narrow(spark, small_parquet):

@@ -355,20 +355,3 @@ def test_adc_table_keys_match_decimal_path(spark, sf_dir):
             assert int(r["qd"].scaleb(9)) == int(tab[r["j"], r["code"]]), (
                 cell, r["j"], r["code"]
             )
-
-
-def test_gram_encode_matches_exact_fold(spark, sf_dir):
-    """exact=False (BLAS3 gram expansion) must produce the same codes as
-    the bit-parity fold on the canonical frames — the error envelope
-    (~3·d·eps·B², four orders below the round-9 half-quantum at unit
-    scale) predicts zero mismatches outside measure-zero boundary
-    straddles; this pins the prediction empirically."""
-    from sparkfusion.llm.pq import derive_ivfpq_params, ivfpq_encode_batch
-
-    emb = table(spark, sf_dir, "embeddings")
-    cents, cb = derive_ivfpq_params(emb)
-    exact = {r["vec_id"]: tuple(r) for r in ivfpq_encode_batch(emb, cents, cb).collect()}
-    gram = ivfpq_encode_batch(emb, cents, cb, exact=False).collect()
-    assert len(gram) == len(exact)
-    for r in gram:
-        assert tuple(r) == exact[r["vec_id"]], r["vec_id"]

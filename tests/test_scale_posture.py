@@ -64,6 +64,15 @@ PARTITION_ID_ALLOWED = {
     "operators/joins.py": "salted_join: the left row's partition id picks its salt",
 }
 
+#: files allowed to read ``defaultParallelism`` — a compute stage's
+#: partition count comes from ``partitioning.compute_width`` (or the spread
+#: helpers built on it), which sizes it from the session's cores AND the
+#: input's file index, so no caller pins a width from cores alone
+COMPUTE_WIDTH_ALLOWED = {
+    "operators/partitioning.py": "_target_parts: the one owner of compute widths",
+    "streaming/windows.py": "run_stream_to_table: a stream's state partition count, fixed at its first checkpoint (a separate decision)",
+}
+
 #: files allowed to call ``localCheckpoint(`` inside a ``for``/``while``
 #: body — a driver loop goes through ``iterate.iterate``, which owns the
 #: per-round checkpoint and the release of what the loop persisted
@@ -421,6 +430,33 @@ def test_partition_offsets_have_one_owner():
                 bad.append(f"{rel}:{line}")
     assert not bad, f"spark_partition_id outside its owner: {bad}"
     stale = set(PARTITION_ID_ALLOWED) - seen
+    assert not stale, f"stale allowlist rows: {sorted(stale)}"
+
+
+def _default_parallelism_sites(full):
+    """Reads of ``<x>.defaultParallelism``."""
+    with open(full) as f:
+        tree = ast.parse(f.read())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == "defaultParallelism":
+            yield node.lineno
+
+
+def test_compute_widths_have_one_owner():
+    """A ``defaultParallelism`` read outside its owner fails here: size a
+    compute stage through ``partitioning.compute_width``, which also counts
+    the input's scan splits, so a wide input is never cut down to the core
+    count. Allowlisted files must still make the read, so a stale row cannot
+    linger."""
+    bad, seen = [], set()
+    for full, rel in _pkg_files():
+        for line in _default_parallelism_sites(full):
+            if rel in COMPUTE_WIDTH_ALLOWED:
+                seen.add(rel)
+            else:
+                bad.append(f"{rel}:{line}")
+    assert not bad, f"defaultParallelism read outside its owner: {bad}"
+    stale = set(COMPUTE_WIDTH_ALLOWED) - seen
     assert not stale, f"stale allowlist rows: {sorted(stale)}"
 
 
